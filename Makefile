@@ -1,24 +1,11 @@
-.PHONY: test oracle bench bench-local scaling pyfiles audit smoke
+.PHONY: test oracle scaling pyfiles audit smoke
 
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 oracle:
 	python scripts/check_oracle.py /root/testdata/sf0.01
-
-bench:
-	python bench.py
-
-# round-end hygiene (VERDICT r4 #7): leave a builder-clean, loadavg-stamped
-# bench JSON in the repo so the judge can diff the driver's (possibly
-# contended) window against a known-quiet one without rerunning
-bench-local:
-	# pipefail-equivalent: write to a temp file first so a crashing bench
-	# run fails the target instead of committing a truncated artifact
-	python bench.py 2>/dev/null | tail -1 > BENCH_LOCAL.json.tmp
-	python -c "import json; json.load(open('BENCH_LOCAL.json.tmp'))"
-	mv BENCH_LOCAL.json.tmp BENCH_LOCAL.json
-	cat BENCH_LOCAL.json
 
 scaling:
 	python scripts/scaling_bench.py 600000

@@ -1867,7 +1867,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kg_flagship_stats"] = _flagship_stats
 
     q.update(_soft_queries())
-    q.update(_relational_queries())
     q.update(_doc_queries())
     q.update(_emb_queries())
     q.update(_linkmedia_queries())
@@ -2337,354 +2336,6 @@ def _soft_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # ---------------------------------------------------------------------------
-# relational operator queries (SURVEY.md §2.10 checklist over TPC-H-ish data)
-# ---------------------------------------------------------------------------
-
-
-def _relational_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from pyspark.sql.window import Window
-
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    def _q1(s, d):
-        li = _read(s, d, "lineitem").filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        dec = lambda c: c.cast("decimal(20,4)")
-        # computed money values are floor-quantized to 1e-4 BEFORE the sum:
-        # double→decimal cast rounding modes differ across engines (HALF_UP
-        # vs HALF_EVEN) but floor(x*10000) is pure IEEE double → identical
-        quant = lambda c: (F.floor(c * 10000).cast("decimal(30,0)") / 10000).cast("decimal(20,4)")
-        # money sums are emitted as DOUBLE computed via integer-scaled
-        # division (exact decimal sum * 1e4 → BIGINT → / 10000.0): both
-        # engines then perform the same correctly-rounded IEEE division, so
-        # the result bits are identical regardless of each engine's
-        # decimal→double conversion path (driver hash gate is bit-exact).
-        dbl = lambda c: (c * 10000).cast("long") / F.lit(10000.0)
-        g = li.groupBy("l_returnflag", "l_linestatus").agg(
-            F.sum(dec(F.col("l_quantity"))).alias("_sum_qty"),
-            F.sum(dec(F.col("l_extendedprice"))).alias("_sum_base_price"),
-            F.sum(quant(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("_sum_disc_price"),
-            F.sum(
-                quant(F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax")))
-            ).alias("_sum_charge"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        return g.select(
-            "l_returnflag",
-            "l_linestatus",
-            dbl(F.col("_sum_qty")).alias("sum_qty"),
-            dbl(F.col("_sum_base_price")).alias("sum_base_price"),
-            dbl(F.col("_sum_disc_price")).alias("sum_disc_price"),
-            dbl(F.col("_sum_charge")).alias("sum_charge"),
-            F.round(dbl(F.col("_sum_qty")) / F.col("count_order"), 6).alias("avg_qty"),
-            F.round(dbl(F.col("_sum_base_price")) / F.col("count_order"), 6).alias("avg_price"),
-            "count_order",
-        )
-
-    q["rel_q1_pricing_summary"] = _q1
-
-    # star join over the two remaining dims: fact lineitem joins part /
-    # supplier / nation as BROADCAST dims (all three are cluster-small even
-    # at 100 TB fact scale), then a partial-aggregated rollup
-    def _supplier_part(s, d):
-        li = _read(s, d, "lineitem")
-        part = _read(s, d, "part")
-        sup = _read(s, d, "supplier")
-        nat = _read(s, d, "nation")
-        dec = lambda c: c.cast("decimal(20,4)")
-        quant = lambda c: (F.floor(c * 10000).cast("decimal(30,0)") / 10000).cast("decimal(20,4)")
-        dbl = lambda c: (c * 10000).cast("long") / F.lit(10000.0)
-        rev = quant(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")))
-        j = (
-            li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-            .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-            .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        )
-        return j.groupBy("n_name", "p_brand").agg(
-            dbl(F.sum(rev)).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-            F.countDistinct("s_suppkey").alias("n_suppliers"),
-        )
-
-    q["rel_supplier_part_rollup"] = _supplier_part
-
-    def _q3(s, d):
-        cust = _read(s, d, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-        orders = _read(s, d, "orders").filter(F.col("o_orderdate") < F.lit("1995-03-15"))
-        li = _read(s, d, "lineitem").filter(F.col("l_shipdate") > F.lit("1995-03-15"))
-        dec = lambda c: c.cast("decimal(20,4)")
-        quant = lambda c: (F.floor(c * 10000).cast("decimal(30,0)") / 10000).cast("decimal(20,4)")
-        j = (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-            .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-            .agg(F.sum(quant(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("_revenue"))
-            .withColumn("revenue", (F.col("_revenue") * 10000).cast("long") / F.lit(10000.0))
-            .drop("_revenue")
-        )
-        return j.orderBy(F.desc("revenue"), F.asc("l_orderkey")).limit(10)
-
-    q["rel_q3_top10"] = _q3
-
-    # TPC-H Q5 shape: 6-table local-supplier volume (customer and supplier
-    # in the same nation, nation in one region, date-ranged orders);
-    # revenue quantized to DECIMAL(20,4) terms so the sum is exact and
-    # order-independent cross-engine
-    def _q5(s, d):
-        region = _read(s, d, "region").filter(F.col("r_name") == "ASIA")
-        nation = _read(s, d, "nation")
-        cust = _read(s, d, "customer")
-        orders = _read(s, d, "orders").filter(
-            (F.col("o_orderdate") >= F.lit("1994-01-01"))
-            & (F.col("o_orderdate") < F.lit("1996-01-01"))
-        )
-        li = _read(s, d, "lineitem")
-        supp = _read(s, d, "supplier")
-        quant = lambda c: (F.floor(c * 10000).cast("decimal(30,0)") / 10000).cast("decimal(20,4)")
-        return (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(cust, orders.o_custkey == cust.c_custkey)
-            .join(supp, (li.l_suppkey == supp.s_suppkey) & (cust.c_nationkey == supp.s_nationkey))
-            .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-            .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-            .groupBy("n_name")
-            .agg(F.sum(quant(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("_revenue"))
-            .withColumn("revenue", (F.col("_revenue") * 10000).cast("long") / F.lit(10000.0))
-            .drop("_revenue")
-        )
-
-    q["rel_q5_local_volume"] = _q5
-
-    def _enrich(s, d):
-        cust = _read(s, d, "customer")
-        nation = _read(s, d, "nation")
-        region = _read(s, d, "region")
-        dec = lambda c: c.cast("decimal(20,4)")
-        return (
-            cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-            .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-            .groupBy(F.col("r_name").alias("region_name"))
-            .agg(
-                F.count(F.lit(1)).alias("n_customers"),
-                F.sum(dec(F.col("c_acctbal"))).alias("_total_acctbal"),
-            )
-            .withColumn("total_acctbal", (F.col("_total_acctbal") * 10000).cast("long") / F.lit(10000.0))
-            .drop("_total_acctbal")
-        )
-
-    q["rel_join_enrich"] = _enrich
-
-    def _anti(s, d):
-        cust = _read(s, d, "customer")
-        orders = _read(s, d, "orders")
-        no_orders = cust.join(
-            orders.select(F.col("o_custkey").alias("c_custkey")), "c_custkey", "left_anti"
-        )
-        return no_orders.groupBy(F.col("c_mktsegment").alias("mktsegment")).agg(
-            F.count(F.lit(1)).alias("n_customers")
-        )
-
-    q["rel_customers_without_orders"] = _anti
-
-    def _topk(s, d):
-        orders = _read(s, d, "orders")
-        w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        return (
-            orders.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 3)
-            .select("o_custkey", "o_orderkey", "o_totalprice", "rank")
-        )
-
-    q["rel_window_top_orders"] = _topk
-
-    def _sessionize(s, d):
-        ev = _read(s, d, "events").withColumn(
-            "tsec", F.col("ts").cast("timestamp").cast("long")
-        )
-        w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-        gap = F.col("tsec") - F.lag(F.col("tsec")).over(w)
-        new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-        return (
-            ev.withColumn("new_sess", new_sess)
-            .groupBy("user_id")
-            .agg(
-                F.sum("new_sess").cast("bigint").alias("n_sessions"),
-                F.count(F.lit(1)).alias("n_events"),
-            )
-        )
-
-    q["rel_events_sessionize"] = _sessionize
-
-    # the same sessionization as a CUSTOM STATEFUL STREAMING operator
-    # (applyInPandasWithState): events arrive as two time-ordered file
-    # chunks, per-user GroupState carries (last ts, counts) across
-    # micro-batches, and the final update per user must equal the batch
-    # lag-window result — which the oracle states directly
-    def _sessionize_stateful(s, d):
-        import hashlib
-        import shutil
-        import tempfile
-        import time as _time
-
-        from pyspark.sql.window import Window as W
-
-        from kgpipe_spark.streaming.stateful import sessionize_stream
-
-        # applicationId in the scratch path (as kg_csv_roundtrip does) so two
-        # concurrent sessions on the same dataset can't rmtree each other
-        tag = hashlib.md5(d.encode()).hexdigest()[:10] + "_" + s.sparkContext.applicationId
-        base = os.path.join(tempfile.gettempdir(), f"kg_sess_state_{tag}")
-        shutil.rmtree(base, ignore_errors=True)
-        in_dir, out_dir, ck = f"{base}/in", f"{base}/out", f"{base}/ck"
-
-        ev = _read(s, d, "events").select(
-            "event_id",
-            F.col("ts").cast("timestamp").cast("long").alias("tsec"),
-            "user_id",
-        )
-        cut = ev.agg(F.expr("percentile_approx(tsec, 0.5, 10000)")).collect()[0][0]
-        # a GLOBAL time split keeps per-user event order across chunks; the
-        # file source replays files in mtime order, so chunk 1 must sort
-        # first — set EXPLICIT distinct mtimes (os.utime) instead of relying
-        # on write-time ordering, which is fragile on coarse-mtime filesystems
-        ev.filter(F.col("tsec") <= cut).coalesce(1).write.parquet(f"{in_dir}/c1")
-        ev.filter(F.col("tsec") > cut).coalesce(1).write.parquet(f"{in_dir}/c2")
-        t0 = _time.time() - 120
-        for sub, off in (("c1", 0), ("c2", 60)):
-            for root, _, files in os.walk(f"{in_dir}/{sub}"):
-                for fn in files:
-                    os.utime(os.path.join(root, fn), (t0 + off, t0 + off))
-
-        stream = (
-            s.readStream.schema("event_id long, tsec long, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{in_dir}/*")
-        )
-        updates = sessionize_stream(stream, gap_seconds=1800)
-
-        def sink(bdf, bid):
-            bdf.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(out_dir)
-
-        query = (
-            updates.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        allu = s.read.parquet(out_dir)
-        w = W.partitionBy("user_id").orderBy(F.desc("batch_id"))
-        return (
-            allu.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("user_id", "n_sessions", "n_events")
-        )
-
-    q["rel_sessionize_stateful"] = _sessionize_stateful
-
-    # watermarked tumbling-window aggregation AS A STREAM (windowed.py):
-    # events arrive as two globally-time-split file chunks plus a far-future
-    # sentinel chunk whose only job is to push the watermark past every real
-    # window's end, so append mode emits ALL real windows exactly once; the
-    # global time split means no real event is ever behind the watermark, so
-    # the emitted set must equal the batch tumbling-window aggregation —
-    # which the oracle states in closed form (the sentinel's own window never
-    # closes, hence never emits)
-    def _windowed_counts(s, d):
-        import hashlib
-        import shutil
-        import tempfile
-        import time as _time
-
-        from kgpipe_spark.streaming.windowed import windowed_event_counts
-
-        tag = hashlib.md5(d.encode()).hexdigest()[:10] + "_" + s.sparkContext.applicationId
-        base = os.path.join(tempfile.gettempdir(), f"kg_wind_q_{tag}")
-        shutil.rmtree(base, ignore_errors=True)
-        in_dir, out_dir, ck = f"{base}/in", f"{base}/out", f"{base}/ck"
-
-        ev = _read(s, d, "events").select(
-            "event_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_type",
-            "value",
-        )
-        bounds = ev.agg(
-            F.expr("percentile_approx(cast(ts as long), 0.5, 10000)").alias("cut"),
-            F.max(F.col("ts").cast("long")).alias("maxts"),
-        ).collect()[0]
-        cut, maxts = bounds["cut"], bounds["maxts"]
-        ev.filter(F.col("ts").cast("long") <= cut).coalesce(1).write.parquet(f"{in_dir}/c1")
-        ev.filter(F.col("ts").cast("long") > cut).coalesce(1).write.parquet(f"{in_dir}/c2")
-        sentinel = s.createDataFrame(
-            [(-1, "__sentinel__", 0.0)], "event_id long, event_type string, value double"
-        ).withColumn("ts", F.to_timestamp(F.lit(maxts + 7200).cast("long")))
-        sentinel.select("event_id", "ts", "event_type", "value").coalesce(1).write.parquet(
-            f"{in_dir}/c3"
-        )
-        # file source replays in mtime order: explicit ascending mtimes
-        t0 = _time.time() - 300
-        for sub, off in (("c1", 0), ("c2", 60), ("c3", 120)):
-            for root, _, files in os.walk(f"{in_dir}/{sub}"):
-                for fn in files:
-                    os.utime(os.path.join(root, fn), (t0 + off, t0 + off))
-
-        stream = (
-            s.readStream.schema("event_id long, ts timestamp, event_type string, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{in_dir}/*")
-        )
-        query = (
-            windowed_event_counts(stream, "10 minutes", "30 minutes")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        return (
-            s.read.parquet(out_dir)
-            # null-safe: a plain != would also drop NULL event_type groups
-            # that the oracle's GROUP BY keeps (the sentinel's own window
-            # never closes, so this filter is belt-and-braces anyway)
-            .filter(~F.col("event_type").eqNullSafe("__sentinel__"))
-            .select(
-                F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-                F.date_format("window_end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
-                "event_type",
-                "n",
-                "total",
-            )
-        )
-
-    q["rel_windowed_counts"] = _windowed_counts
-
-    def _events_json(s, d):
-        ev = _read(s, d, "events")
-        k = F.get_json_object("props", "$.k").cast("int")
-        return ev.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(k).cast("double") / F.count(k), 6).alias("avg_k"),
-        )
-
-    q["rel_events_json_extract"] = _events_json
-
-    def _except(s, d):
-        ev = _read(s, d, "events")
-        a = ev.filter(F.col("user_id") % 10 == 3).select("event_type").distinct()
-        b = ev.filter((F.col("user_id") % 10 == 3) & (F.col("value") > 50)).select(
-            "event_type"
-        ).distinct()
-        return a.exceptAll(b).select(F.col("event_type").alias("missing_type"))
-
-    q["rel_set_except"] = _except
-
-    return q
-
-
-# ---------------------------------------------------------------------------
 # document / training-data queries
 # ---------------------------------------------------------------------------
 
@@ -2910,10 +2561,6 @@ _RECORD_FIRST = [
     "doc_ngram_jaccard_pairs",
     "doc_dedup_exact",
     "doc_simhash",
-    "rel_q1_pricing_summary",
-    "rel_q3_top10",
-    "rel_window_top_orders",
-    "rel_events_sessionize",
     "emb_cosine_topk",
     "emb_ivf_recall",
 ]
@@ -4782,7 +4429,6 @@ def oracle_sql() -> dict[str, str]:
     """
 
     sql.update(_soft_sql())
-    sql.update(_relational_sql())
     sql.update(_doc_sql())
     sql.update(_emb_sql())
     sql.update(_linkmedia_sql())
@@ -5442,172 +5088,6 @@ def _soft_sql() -> dict[str, str]:
                CAST(coalesce(strict, 0) AS BIGINT) AS strict_overlapping,
                CAST(coalesce(matched_occ, 0) - coalesce(strict, 0) AS BIGINT) AS possible_duplicates
         FROM agg
-    """
-
-    return sql
-
-
-def _relational_sql() -> dict[str, str]:
-    sql: dict[str, str] = {}
-
-    sql["rel_q1_pricing_summary"] = """
-        WITH g AS (
-          SELECT l_returnflag, l_linestatus,
-                 sum(CAST(l_quantity AS DECIMAL(20,4))) AS _sum_qty,
-                 sum(CAST(l_extendedprice AS DECIMAL(20,4))) AS _sum_base_price,
-                 sum(CAST(CAST(floor(l_extendedprice * (1 - l_discount) * 10000) AS DECIMAL(30,0)) / 10000 AS DECIMAL(20,4))) AS _sum_disc_price,
-                 sum(CAST(CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 10000) AS DECIMAL(30,0)) / 10000 AS DECIMAL(20,4))) AS _sum_charge,
-                 count(*) AS count_order
-          FROM lineitem
-          WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-          GROUP BY l_returnflag, l_linestatus
-        )
-        SELECT l_returnflag, l_linestatus,
-               CAST(_sum_qty * 10000 AS BIGINT) / 10000.0 AS sum_qty,
-               CAST(_sum_base_price * 10000 AS BIGINT) / 10000.0 AS sum_base_price,
-               CAST(_sum_disc_price * 10000 AS BIGINT) / 10000.0 AS sum_disc_price,
-               CAST(_sum_charge * 10000 AS BIGINT) / 10000.0 AS sum_charge,
-               round((CAST(_sum_qty * 10000 AS BIGINT) / 10000.0) / count_order, 6) AS avg_qty,
-               round((CAST(_sum_base_price * 10000 AS BIGINT) / 10000.0) / count_order, 6) AS avg_price,
-               count_order
-        FROM g
-    """
-
-    sql["rel_supplier_part_rollup"] = """
-        SELECT n_name, p_brand,
-               CAST(sum(CAST(CAST(floor(l_extendedprice * (1 - l_discount) * 10000) AS DECIMAL(30,0)) / 10000 AS DECIMAL(20,4))) * 10000 AS BIGINT) / 10000.0 AS revenue,
-               count(*) AS n_lines,
-               count(DISTINCT s_suppkey) AS n_suppliers
-        FROM lineitem
-        JOIN part ON l_partkey = p_partkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation ON s_nationkey = n_nationkey
-        GROUP BY n_name, p_brand
-    """
-
-    sql["rel_q3_top10"] = """
-        WITH g AS (
-          SELECT l_orderkey, o_orderdate, o_orderpriority,
-                 sum(CAST(CAST(floor(l_extendedprice * (1 - l_discount) * 10000) AS DECIMAL(30,0)) / 10000 AS DECIMAL(20,4))) AS _revenue
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          WHERE c_mktsegment = 'BUILDING'
-            AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-            AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-          GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        )
-        SELECT l_orderkey, o_orderdate, o_orderpriority,
-               CAST(_revenue * 10000 AS BIGINT) / 10000.0 AS revenue
-        FROM g
-        ORDER BY revenue DESC, l_orderkey ASC
-        LIMIT 10
-    """
-
-    sql["rel_q5_local_volume"] = """
-        WITH g AS (
-          SELECT n_name,
-                 sum(CAST(CAST(floor(l_extendedprice * (1 - l_discount) * 10000) AS DECIMAL(30,0)) / 10000 AS DECIMAL(20,4))) AS _revenue
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-          JOIN nation ON s_nationkey = n_nationkey
-          JOIN region ON n_regionkey = r_regionkey
-          WHERE r_name = 'ASIA'
-            AND o_orderdate >= TIMESTAMP '1994-01-01 00:00:00'
-            AND o_orderdate < TIMESTAMP '1996-01-01 00:00:00'
-          GROUP BY n_name
-        )
-        SELECT n_name, CAST(_revenue * 10000 AS BIGINT) / 10000.0 AS revenue
-        FROM g
-    """
-
-    sql["rel_sessionize_stateful"] = """
-        WITH e AS (
-          SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
-        ),
-        w AS (
-          SELECT user_id,
-                 tsec - lag(tsec) OVER (PARTITION BY user_id ORDER BY tsec, event_id) AS gap
-          FROM e
-        )
-        SELECT user_id,
-               CAST(sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-               count(*) AS n_events
-        FROM w GROUP BY user_id
-    """
-
-    # the streaming run emits exactly the batch tumbling windows (sentinel
-    # chunk closes every real window; the global time split means nothing is
-    # late) — so the oracle IS the batch aggregation. Window start = epoch
-    # floor to 600 s, Spark's window() alignment.
-    sql["rel_windowed_counts"] = """
-        WITH b AS (
-          SELECT make_timestamp(CAST(floor(epoch(ts) / 600) * 600 AS BIGINT) * 1000000) AS ws,
-                 event_type, value
-          FROM events
-        )
-        SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
-               strftime(ws + INTERVAL 10 MINUTE, '%Y-%m-%d %H:%M:%S') AS window_end,
-               event_type,
-               count(*) AS n,
-               CAST(sum(CAST(value AS DECIMAL(20,4))) * 10000 AS BIGINT) / 10000.0 AS total
-        FROM b GROUP BY ws, event_type
-    """
-
-    sql["rel_join_enrich"] = """
-        SELECT r_name AS region_name, count(*) AS n_customers,
-               CAST(sum(CAST(c_acctbal AS DECIMAL(20,4))) * 10000 AS BIGINT) / 10000.0 AS total_acctbal
-        FROM customer
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY r_name
-    """
-
-    sql["rel_customers_without_orders"] = """
-        SELECT c_mktsegment AS mktsegment, count(*) AS n_customers
-        FROM customer
-        ANTI JOIN orders ON c_custkey = o_custkey
-        GROUP BY c_mktsegment
-    """
-
-    sql["rel_window_top_orders"] = """
-        SELECT o_custkey, o_orderkey, o_totalprice, rank FROM (
-          SELECT o_custkey, o_orderkey, o_totalprice,
-                 row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
-          FROM orders
-        ) WHERE rank <= 3
-    """
-
-    sql["rel_events_sessionize"] = """
-        WITH e AS (
-          SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events
-        ),
-        w AS (
-          SELECT user_id,
-                 tsec - lag(tsec) OVER (PARTITION BY user_id ORDER BY tsec, event_id) AS gap
-          FROM e
-        )
-        SELECT user_id,
-               CAST(sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-               count(*) AS n_events
-        FROM w GROUP BY user_id
-    """
-
-    sql["rel_events_json_extract"] = """
-        SELECT event_type, count(*) AS n,
-               round(CAST(sum(CAST(props->>'k' AS INTEGER)) AS DOUBLE)
-                     / count(CAST(props->>'k' AS INTEGER)), 6) AS avg_k
-        FROM events GROUP BY event_type
-    """
-
-    sql["rel_set_except"] = """
-        SELECT event_type AS missing_type FROM (
-          SELECT DISTINCT event_type FROM events WHERE user_id % 10 = 3
-          EXCEPT
-          SELECT DISTINCT event_type FROM events WHERE user_id % 10 = 3 AND value > 50
-        )
     """
 
     return sql

@@ -154,8 +154,6 @@ def ivf_topk(
             F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
         )
     )
-    dim = len(e.select("v").first()[0])
-
     init = [r["v"] for r in e.orderBy("vec_id").limit(n_centroids).collect()]
     if lloyd_steps > 0:
         assign = _assign_nearest(e, init)

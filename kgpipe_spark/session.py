@@ -77,15 +77,9 @@ def get_spark(
         # side fits (guide §3.1): join results are identical, but SHJ skips
         # both sort passes. AQE's SMJ→SHJ rewrite threshold is sized to the
         # advisory partition size so a post-coalesce partition always fits;
-        # both knobs are env-overridable for cluster tuning.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_SHJ_LOCAL_MAP_THRESHOLD", "64m"),
-        )
+        # get_spark(extra_conf=...) overrides both for cluster tuning.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")

@@ -4,7 +4,7 @@
 The driver's real sf1.0 is generated by the driver (seed=42) and is not on
 disk this session; this produces a 10x replica-scaled approximation under
 /tmp so optimizations can be validated at sf1.0-like row counts (guide §1:
-measure at the scale you claim). NOT used by bench.py defaults, never
+measure at the scale you claim). NOT used by any default, never
 committed, and never read by any query path unless SPARK_GRAFT_SF_DIR
 points at it explicitly.
 

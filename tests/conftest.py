@@ -5,7 +5,14 @@ from kgpipe_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="kgpipe-spark-tests", master="local[4]", shuffle_partitions=8)
+    # The suite's data is small; a heap cap above the host's RAM lets the
+    # session-long JVM grow until the kernel's OOM killer ends it mid-suite.
+    s = get_spark(
+        app_name="kgpipe-spark-tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "4g"},
+    )
     yield s
     s.stop()
 

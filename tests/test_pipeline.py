@@ -390,3 +390,17 @@ def test_complete_with_types_equals_dedupe_form(spark):
     # and the inferred-only types made it in
     assert ("e:s2", RDF_TYPE, "o:A", "uri", None) in got_rows
     assert ("e:y", RDF_TYPE, "o:B", "uri", None) in got_rows
+
+
+def test_stage_cut_replaces_plan_with_rdd_leaf(spark):
+    """The flagship stage cut must leave a LogicalRDD leaf as the analyzed
+    plan, so downstream stages do not re-analyze the upstream lineage (the
+    driver stall _stage_cut exists to prevent), and keep the rows."""
+    from kgpipe_spark.pipelines import _stage_cut
+
+    df = spark.range(100).groupBy((F.col("id") % 7).alias("k")).agg(F.count("*").alias("n"))
+    cut = _stage_cut(df)
+    plan = cut._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    assert plan.children().isEmpty()
+    assert sorted(cut.collect()) == sorted(df.collect())

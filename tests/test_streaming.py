@@ -1,7 +1,3 @@
-import json
-import os
-import time
-
 from pyspark.sql import functions as F
 
 from kgpipe_spark.streaming.ingest import stream_corpus_to_triples
@@ -39,138 +35,3 @@ def test_streaming_incremental_ingest(spark, tmp_path):
     assert n2 > n1
     # no duplicate (s,p,o) rows despite the overlap
     assert triples.dropDuplicates(["subject", "predicate", "object_lex", "object_kind"]).count() == n2
-
-
-def test_stateful_sessionize_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionization across micro-batch boundaries
-    equals the batch lag-window result — including a session that SPANS the
-    chunk boundary (state carries last event time, so it is not double
-    counted)."""
-    from pyspark.sql.window import Window
-
-    from kgpipe_spark.streaming.stateful import sessionize_stream
-
-    rows = [
-        # user 1: one session spanning the chunk boundary (gaps < 1800)
-        (1, 1000, 10), (2, 2000, 10), (3, 2500, 10),
-        # user 2: session 1 in chunk 1, session 2 in chunk 2 (gap > 1800)
-        (4, 1000, 20), (5, 9000, 20),
-        # user 3: only in chunk 2
-        (6, 5000, 30), (7, 5100, 30),
-    ]
-    ev = spark.createDataFrame(rows, "event_id long, tsec long, user_id long")
-    in_dir = str(tmp_path / "in")
-    ev.filter("tsec <= 2100").coalesce(1).write.parquet(in_dir + "/c1")
-    import time as _t
-
-    _t.sleep(0.1)
-    ev.filter("tsec > 2100").coalesce(1).write.parquet(in_dir + "/c2")
-
-    stream = (
-        spark.readStream.schema("event_id long, tsec long, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir + "/*")
-    )
-    out_dir = str(tmp_path / "out")
-
-    def sink(bdf, bid):
-        bdf.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(out_dir)
-
-    q = (
-        sessionize_stream(stream, gap_seconds=1800)
-        .writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
-    final = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in spark.read.parquet(out_dir)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .collect()
-    }
-    # batch truth
-    wb = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-    gap = F.col("tsec") - F.lag("tsec").over(wb)
-    batch = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in ev.withColumn(
-            "new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-        )
-        .groupBy("user_id")
-        .agg(
-            F.sum("new_sess").cast("bigint").alias("n_sessions"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .collect()
-    }
-    assert final == batch == {10: (1, 3), 20: (2, 2), 30: (1, 2)}
-
-
-def test_windowed_counts_with_watermark_drops_late_data(spark, tmp_path):
-    """Watermarked tumbling windows: on-time chunks aggregate exactly like
-    batch; an event arriving later than the watermark horizon is DROPPED
-    and its closed window is not resurrected."""
-    from kgpipe_spark.streaming.windowed import windowed_event_counts
-
-    rows = [
-        # chunk 1: two windows' worth of on-time events
-        (1, "2024-01-01 00:01:00", "click", 1.0),
-        (2, "2024-01-01 00:02:00", "click", 2.0),
-        (3, "2024-01-01 00:11:00", "view", 3.0),
-        # chunk 2: advances event time far past the watermark horizon...
-        (4, "2024-01-01 02:00:00", "click", 4.0),
-        # chunk 3: ...so this very late event (00:03) must be dropped
-        (5, "2024-01-01 00:03:00", "click", 100.0),
-        (6, "2024-01-01 02:01:00", "view", 5.0),
-    ]
-    ev = spark.createDataFrame(
-        rows, "event_id long, ts_s string, event_type string, value double"
-    ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-
-    def run_available():
-        # each call is one availableNow run over the files present; the
-        # checkpoint carries the WATERMARK across runs, so chunks written
-        # between runs are guaranteed to see the advanced watermark
-        stream = spark.readStream.schema(
-            "event_id long, event_type string, value double, ts timestamp"
-        ).parquet(in_dir + "/*")
-        q = (
-            windowed_event_counts(stream, "10 minutes", "30 minutes")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # run 1: on-time events only -> watermark still before the windows end
-    ev.filter("event_id <= 3").coalesce(1).write.parquet(f"{in_dir}/c0")
-    run_available()
-    # run 2: event time jumps to 02:00 -> watermark advances to 01:30,
-    # closing (and emitting) the 00:00 and 00:10 windows
-    ev.filter("event_id = 4").coalesce(1).write.parquet(f"{in_dir}/c1")
-    run_available()
-    # run 3: an event at 00:03 is far behind the checkpointed watermark
-    ev.filter("event_id >= 5").coalesce(1).write.parquet(f"{in_dir}/c2")
-    run_available()
-
-    got = {
-        (str(r["window_start"]), r["event_type"]): (r["n"], r["total"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    # the 00:00 click window closed with ONLY the on-time events (late
-    # event 5 dropped — no 100.0 in the total), 00:10 view window closed
-    assert got[("2024-01-01 00:00:00", "click")] == (2, 3.0)
-    assert got[("2024-01-01 00:10:00", "view")] == (1, 3.0)
-    assert ("2024-01-01 00:00:00", "click") in got
-    assert all(total < 100 for (_n, total) in got.values())

@@ -478,6 +478,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pivot_triples_to_wide,
         type_inference_simple,
     )
+    from kgpipe_spark.pipelines import (
+        _complete_with_types,
+        align_kg_increment,
+        run_incremental_msp,
+    )
 
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
@@ -1068,38 +1073,43 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["kg_paris_blocked_matching"] = _paris_match
 
+    # The §3.4 compositions are short calls into the engine's own stage
+    # functions: align_kg_increment (paris blocked matching → exchange →
+    # canonicalize → fusion_first_value → type completion) for the
+    # paris-style ones, _complete_with_types for the type tail of the rest.
+    # Their sources come from the four builders below.
+
+    def _preds(s, *uris):
+        """A fusable-predicate table."""
+        return s.createDataFrame([(u,) for u in uris], ["predicate"])
+
+    def _json_source(s, d):
+        """construct_rdf_from_json3 over the flagship corpus."""
+        from kgpipe_spark.operators.extract import extract_json_triples
+
+        return (
+            extract_json_triples(_flagship_corpus(s, d))
+            .select("subject", "predicate", "object_lex", "object_kind", "object_datatype")
+            .distinct()
+        )
+
+    def _onto_movie(s):
+        """The text_a relation-linking ontology: director/stars/writer."""
+        return s.createDataFrame(
+            [
+                (P + "director", "directed by", ["director"], O + "Movie", O + "Person", "true", None),
+                (P + "stars", "stars", ["cast member"], O + "Movie", O + "Person", "true", None),
+                (P + "writer", "written by", ["writer"], O + "Movie", O + "Person", "true", None),
+            ],
+            "uri string, label string, aliases array<string>, domain string, range string, is_object_prop string, max_cardinality int",
+        )
+
     # the rdf_a pipeline composition (SURVEY §3.4, pipeline.conf:7):
     # paris_entity_matching → exchange (one target per source entity) →
     # canonicalize source KG → fusion_first_value → type_inference
     def _rdf_a(s, d):
-        from pyspark.sql.window import Window
-
-        from kgpipe_spark.operators.fusion import (
-            canonicalize_triples as _canon,
-            fuse_first_value as _ffv,
-        )
-        from kgpipe_spark.operators.matching import blocked_entity_matching
-
-        kg1 = _base_triples(s, d)
-        kg2 = _soft_actual(s, d)
-        matches = blocked_entity_matching(kg1, kg2, threshold=0.5, neighbor_boost=0.1)
-        w = Window.partitionBy("id_2").orderBy(F.desc("score"), F.asc("id_1"))
-        mmap = (
-            matches.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(F.col("id_2").alias("entity"), F.col("id_1").alias("canonical"))
-        )
-        canon2 = _canon(kg2, mmap)
-        fusable = s.createDataFrame([(RDFS_LABEL,), (P + "mktsegment",)], ["predicate"])
-        fused = _ffv(kg1, canon2, fusable)
-        inferred = type_inference_simple(fused, _ontology(s))
-        dedup_cols = ["subject", "predicate", "object_lex", "object_kind"]
-        types = (
-            fused.filter(F.col("predicate") == RDF_TYPE)
-            .unionByName(inferred)
-            .dropDuplicates(dedup_cols)
-        )
-        return fused.filter(F.col("predicate") != RDF_TYPE).unionByName(types)
+        fusable = _preds(s, RDFS_LABEL, P + "mktsegment")
+        return align_kg_increment(s, _base_triples(s, d), _soft_actual(s, d), fusable, _ontology(s))
 
     q["kg_pipeline_rdf_a"] = _rdf_a
 
@@ -1108,12 +1118,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # relation matches → aggregate_2matches → relation rewrite +
     # canonicalize → fusion_first_value → type_inference
     def _rdf_b(s, d):
-        from kgpipe_spark.operators.cluster import best_match_1to1
-        from kgpipe_spark.operators.fusion import (
-            aggregate_matches,
-            canonicalize_triples as _canon,
-            fuse_first_value as _ffv,
-        )
         from kgpipe_spark.operators.matching import (
             map_matched_relations,
             token_blocking_matches,
@@ -1136,72 +1140,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .groupBy(F.col("id_2").alias("entity"))
             .agg(F.min("id_1").alias("canonical"))
         )
-        canon2 = map_matched_relations(_canon(kg2, mmap), allm)
-        fusable = s.createDataFrame([(RDFS_LABEL,), (P + "mktsegment",)], ["predicate"])
-        fused = _ffv(kg1, canon2, fusable)
-        inferred = type_inference_simple(fused, _ontology(s))
-        dedup_cols = ["subject", "predicate", "object_lex", "object_kind"]
-        types = (
-            fused.filter(F.col("predicate") == RDF_TYPE)
-            .unionByName(inferred)
-            .dropDuplicates(dedup_cols)
-        )
-        return fused.filter(F.col("predicate") != RDF_TYPE).unionByName(types)
+        canon2 = map_matched_relations(canonicalize_triples(kg2, mmap), allm)
+        fused = fuse_first_value(kg1, canon2, _preds(s, RDFS_LABEL, P + "mktsegment"))
+        return _complete_with_types(fused.localCheckpoint(), _ontology(s))
 
     q["kg_pipeline_rdf_b"] = _rdf_b
-
-    def _pipeline_tail(s, fused):
-        """Shared §3.4 pipeline tail: type inference + type-row merge."""
-        # fused feeds three consumers (type filter, inference join, non-type
-        # filter) — localCheckpoint so the fusion isn't recomputed per branch
-        # (and, unlike persist, the blocks are ContextCleaner-freed after the
-        # query: the gate session runs 110 queries in one JVM)
-        fused = fused.localCheckpoint()
-        inferred = type_inference_simple(fused, _ontology(s))
-        dedup_cols = ["subject", "predicate", "object_lex", "object_kind"]
-        types = (
-            fused.filter(F.col("predicate") == RDF_TYPE)
-            .unionByName(inferred)
-            .dropDuplicates(dedup_cols)
-        )
-        return fused.filter(F.col("predicate") != RDF_TYPE).unionByName(types)
-
-    def _paris_exchange_map(matches):
-        """paris_exchange: one target (id_1) per source entity (id_2)."""
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("id_2").orderBy(F.desc("score"), F.asc("id_1"))
-        return (
-            matches.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(F.col("id_2").alias("entity"), F.col("id_1").alias("canonical"))
-        )
 
     # the json_a pipeline composition (SURVEY §3.4, pipeline.conf:62-71):
     # construct_rdf_from_json3 → paris_entity_matching → paris_exchange →
     # fusion_first_value → type_inference
     def _json_a(s, d):
-        from kgpipe_spark.operators.extract import extract_json_triples
-        from kgpipe_spark.operators.fusion import (
-            canonicalize_triples as _canon,
-            fuse_first_value as _ffv,
-        )
-        from kgpipe_spark.operators.matching import blocked_entity_matching
-
-        kg1 = _base_triples(s, d)
-        # lineage cut: matching (tokens, sizes, neighbors) + canonicalize +
-        # fusion consume kg2 ~6×; without it the pandas-UDF extraction
-        # reruns per consumer (measured 47s → ~25s at sf0.1)
-        kg2 = (
-            extract_json_triples(_flagship_corpus(s, d))
-            .select("subject", "predicate", "object_lex", "object_kind", "object_datatype")
-            .distinct()
-            .localCheckpoint()
-        )
-        matches = blocked_entity_matching(kg1, kg2, threshold=0.5, neighbor_boost=0.1)
-        canon2 = _canon(kg2, _paris_exchange_map(matches))
-        fusable = s.createDataFrame([(RDFS_LABEL,), (P + "segment",)], ["predicate"])
-        return _pipeline_tail(s, _ffv(kg1, canon2, fusable))
+        fusable = _preds(s, RDFS_LABEL, P + "segment")
+        return align_kg_increment(s, _base_triples(s, d), _json_source(s, d), fusable, _ontology(s))
 
     q["kg_pipeline_json_a"] = _json_a
 
@@ -1230,14 +1180,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("content"),
         )
 
-    def _text_a(s, d):
+    def _text_a_source(s, d, kg):
+        """text_a staging up to the mappings-only construct; the spotlight
+        dictionary holds ``kg``'s geography entities."""
         from kgpipe_spark.operators.extract import extract_text_surface_triples
-        from kgpipe_spark.operators.fusion import (
-            canonicalize_triples as _canon,
-            fuse_first_value as _ffv,
-        )
         from kgpipe_spark.operators.linking import label_dictionary
-        from kgpipe_spark.operators.matching import blocked_entity_matching
         from kgpipe_spark.operators.te_construct import (
             aggregate_te_documents,
             label_alias_embedding_rl,
@@ -1246,15 +1193,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             te_documents_to_triples,
         )
 
-        kg1 = _base_triples(s, d)
-        onto = s.createDataFrame(
-            [
-                (P + "director", "directed by", ["director"], O + "Movie", O + "Person", "true", None),
-                (P + "stars", "stars", ["cast member"], O + "Movie", O + "Person", "true", None),
-                (P + "writer", "written by", ["writer"], O + "Movie", O + "Person", "true", None),
-            ],
-            "uri string, label string, aliases array<string>, domain string, range string, is_object_prop string, max_cardinality int",
-        )
+        onto = _onto_movie(s)
         te = surface_triples_to_te_documents(
             extract_text_surface_triples(_text_corpus(s, d))
         )
@@ -1265,141 +1204,43 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         te = label_alias_embedding_rl(te, onto).localCheckpoint()
         # spotlight-native annotator: knows the geography entities of the KG
         spot_dict = label_dictionary(
-            kg1.filter(F.col("subject").startswith(NAT) | F.col("subject").startswith(REG)),
+            kg.filter(F.col("subject").startswith(NAT) | F.col("subject").startswith(REG)),
             include_alt=False,
         )
         te = link_te_entities_dictionary(aggregate_te_documents(te), spot_dict)
-        staging = te_documents_to_triples(te, onto, mappings_only=True).localCheckpoint()
-        matches = blocked_entity_matching(kg1, staging, threshold=0.5, neighbor_boost=0.1)
-        canon2 = _canon(staging, _paris_exchange_map(matches))
-        fusable = s.createDataFrame([(RDFS_LABEL,)], ["predicate"])
-        return _pipeline_tail(s, _ffv(kg1, canon2, fusable))
+        return te_documents_to_triples(te, onto, mappings_only=True)
+
+    def _text_a(s, d):
+        kg1 = _base_triples(s, d)
+        return align_kg_increment(
+            s, kg1, _text_a_source(s, d, kg1), _preds(s, RDFS_LABEL), _ontology(s)
+        )
 
     q["kg_pipeline_text_a"] = _text_a
 
-    # the 3-stage incremental MSP loop (test_inc_msp.py:17-33): rdf → json →
-    # text sources folded into the accumulated KG through the checkpointable
-    # Pipeline driver; each stage is align_kg_increment (paris → exchange →
-    # fuse → infer) against the PREVIOUS stage's result
-    def _incremental_3stage(s, d):
-        from kgpipe_spark.operators.extract import (
-            extract_json_triples,
-            extract_text_surface_triples,
-        )
-        from kgpipe_spark.operators.linking import label_dictionary
-        from kgpipe_spark.operators.te_construct import (
-            aggregate_te_documents,
-            label_alias_embedding_rl,
-            link_te_entities_dictionary,
-            surface_triples_to_te_documents,
-            te_documents_to_triples,
-        )
-        from kgpipe_spark.pipelines import run_incremental_msp
+    # the 3-split incremental MSP loop (test_inc_msp.py:17-33, which
+    # parametrizes PERMUTATIONS of one SSP per source format,
+    # config.py:60-64): the rdf, json and text sources folded into the
+    # accumulated KG in the given order through the checkpointable Pipeline
+    # driver. Each stage is align_kg_increment against the PREVIOUS stage's
+    # result, so the fold-in is order-dependent: later sources link against
+    # entities earlier stages introduced.
+    def _incremental(order):
+        def run(s, d):
+            rdf_src, json_src = _soft_actual(s, d), _json_source(s, d)
+            sources = {
+                "rdf": (lambda kg: rdf_src, _preds(s, RDFS_LABEL, P + "mktsegment")),
+                "json": (lambda kg: json_src, _preds(s, RDFS_LABEL, P + "segment")),
+                "text": (lambda kg: _text_a_source(s, d, kg), _preds(s, RDFS_LABEL)),
+            }
+            stages = [(name, *sources[name]) for name in order]
+            out, _report = run_incremental_msp(s, _base_triples(s, d), stages, _ontology(s))
+            return out
 
-        seed = _base_triples(s, d)
-        onto_text = s.createDataFrame(
-            [
-                (P + "director", "directed by", ["director"], O + "Movie", O + "Person", "true", None),
-                (P + "stars", "stars", ["cast member"], O + "Movie", O + "Person", "true", None),
-                (P + "writer", "written by", ["writer"], O + "Movie", O + "Person", "true", None),
-            ],
-            "uri string, label string, aliases array<string>, domain string, range string, is_object_prop string, max_cardinality int",
-        )
-        rdf_src = _soft_actual(s, d)
-        json_src = (
-            extract_json_triples(_flagship_corpus(s, d))
-            .select("subject", "predicate", "object_lex", "object_kind", "object_datatype")
-            .distinct()
-        )
+        return run
 
-        def text_src(kg):
-            te = surface_triples_to_te_documents(
-                extract_text_surface_triples(_text_corpus(s, d))
-            )
-            te = label_alias_embedding_rl(te, onto_text).localCheckpoint()
-            spot_dict = label_dictionary(
-                kg.filter(
-                    F.col("subject").startswith(NAT) | F.col("subject").startswith(REG)
-                ),
-                include_alt=False,
-            )
-            te = link_te_entities_dictionary(aggregate_te_documents(te), spot_dict)
-            return te_documents_to_triples(te, onto_text, mappings_only=True).localCheckpoint()
-
-        def fus(preds):
-            return s.createDataFrame([(x,) for x in preds], ["predicate"])
-
-        stages = [
-            ("rdf", lambda kg: rdf_src, fus([RDFS_LABEL, P + "mktsegment"])),
-            ("json", lambda kg: json_src, fus([RDFS_LABEL, P + "segment"])),
-            ("text", text_src, fus([RDFS_LABEL])),
-        ]
-        out, _report = run_incremental_msp(s, seed, stages, _ontology(s))
-        return out
-
-    q["kg_incremental_3stage"] = _incremental_3stage
-
-    # MSP order permutation (test_inc_msp.py:17-33 parametrizes PERMUTATIONS
-    # of one SSP per source format, config.py:60-64): the same three sources
-    # folded in text → rdf → json order — proves order-dependent fold-in
-    # (later sources link against entities earlier stages introduced)
-    def _incremental_msp_perm2(s, d):
-        from kgpipe_spark.operators.extract import (
-            extract_json_triples,
-            extract_text_surface_triples,
-        )
-        from kgpipe_spark.operators.linking import label_dictionary
-        from kgpipe_spark.operators.te_construct import (
-            aggregate_te_documents,
-            label_alias_embedding_rl,
-            link_te_entities_dictionary,
-            surface_triples_to_te_documents,
-            te_documents_to_triples,
-        )
-        from kgpipe_spark.pipelines import run_incremental_msp
-
-        seed = _base_triples(s, d)
-        onto_text = s.createDataFrame(
-            [
-                (P + "director", "directed by", ["director"], O + "Movie", O + "Person", "true", None),
-                (P + "stars", "stars", ["cast member"], O + "Movie", O + "Person", "true", None),
-                (P + "writer", "written by", ["writer"], O + "Movie", O + "Person", "true", None),
-            ],
-            "uri string, label string, aliases array<string>, domain string, range string, is_object_prop string, max_cardinality int",
-        )
-        rdf_src = _soft_actual(s, d)
-        json_src = (
-            extract_json_triples(_flagship_corpus(s, d))
-            .select("subject", "predicate", "object_lex", "object_kind", "object_datatype")
-            .distinct()
-        )
-
-        def text_src(kg):
-            te = surface_triples_to_te_documents(
-                extract_text_surface_triples(_text_corpus(s, d))
-            )
-            te = label_alias_embedding_rl(te, onto_text).localCheckpoint()
-            spot_dict = label_dictionary(
-                kg.filter(
-                    F.col("subject").startswith(NAT) | F.col("subject").startswith(REG)
-                ),
-                include_alt=False,
-            )
-            te = link_te_entities_dictionary(aggregate_te_documents(te), spot_dict)
-            return te_documents_to_triples(te, onto_text, mappings_only=True).localCheckpoint()
-
-        def fus(preds):
-            return s.createDataFrame([(x,) for x in preds], ["predicate"])
-
-        stages = [
-            ("text", text_src, fus([RDFS_LABEL])),
-            ("rdf", lambda kg: rdf_src, fus([RDFS_LABEL, P + "mktsegment"])),
-            ("json", lambda kg: json_src, fus([RDFS_LABEL, P + "segment"])),
-        ]
-        out, _report = run_incremental_msp(s, seed, stages, _ontology(s))
-        return out
-
-    q["kg_incremental_msp_perm2"] = _incremental_msp_perm2
+    q["kg_incremental_3stage"] = _incremental(("rdf", "json", "text"))
+    q["kg_incremental_msp_perm2"] = _incremental(("text", "rdf", "json"))
 
     # the json_b pipeline composition (SURVEY §3.4, pipeline.conf:73-81):
     # construct_linkedrdf_from_json_v3 (extraction + exact-label linking
@@ -1407,28 +1248,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # allowed/namespace-filtered seed-priority merge) →
     # type_inference_ontology_simple
     def _json_b(s, d):
-        from kgpipe_spark.operators.extract import extract_json_triples
         from kgpipe_spark.operators.fusion import select_first_value
         from kgpipe_spark.operators.linking import label_dictionary
         from kgpipe_spark.pipelines import link_entities
 
         kg1 = _base_triples(s, d)
-        kg2 = (
-            extract_json_triples(_flagship_corpus(s, d))
-            .select("subject", "predicate", "object_lex", "object_kind", "object_datatype")
-            .distinct()
-            .localCheckpoint()
-        )
-        linked = link_entities(kg2, label_dictionary(kg1))
-        fused = select_first_value(kg1, linked, _ontology(s)).localCheckpoint()
-        inferred = type_inference_simple(fused, _ontology(s))
-        dedup_cols = ["subject", "predicate", "object_lex", "object_kind"]
-        types = (
-            fused.filter(F.col("predicate") == RDF_TYPE)
-            .unionByName(inferred)
-            .dropDuplicates(dedup_cols)
-        )
-        return fused.filter(F.col("predicate") != RDF_TYPE).unionByName(types)
+        linked = link_entities(_json_source(s, d).localCheckpoint(), label_dictionary(kg1))
+        fused = select_first_value(kg1, linked, _ontology(s))
+        return _complete_with_types(fused.localCheckpoint(), _ontology(s))
 
     q["kg_pipeline_json_b"] = _json_b
 
@@ -1496,15 +1323,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from kgpipe_spark.operators.fusion import select_first_value
 
         kg1, onto_b, staging = _text_b_staging(s, d)
-        fused = select_first_value(kg1, staging, onto_b).localCheckpoint()
-        inferred = type_inference_simple(fused, onto_b)
-        dedup_cols = ["subject", "predicate", "object_lex", "object_kind"]
-        types = (
-            fused.filter(F.col("predicate") == RDF_TYPE)
-            .unionByName(inferred)
-            .dropDuplicates(dedup_cols)
-        )
-        return fused.filter(F.col("predicate") != RDF_TYPE).unionByName(types)
+        fused = select_first_value(kg1, staging, onto_b)
+        return _complete_with_types(fused.localCheckpoint(), onto_b)
 
     q["kg_pipeline_text_b"] = _text_b
 

@@ -44,16 +44,6 @@ def main() -> None:
         "identically at every parallelism level in scaling comparisons)",
     )
     ap.add_argument(
-        "--warm-rows",
-        type=int,
-        default=None,
-        help="corpus rows for the warm runs (default: same as --rows). "
-        "JIT/Catalyst/codegen warmth is row-count independent — a small "
-        "same-shape corpus exercises the identical plan — so scaling "
-        "harnesses use a reduced warm corpus to keep the measurement "
-        "window short; applied identically at every parallelism level",
-    )
-    ap.add_argument(
         "--stage-times",
         action="store_true",
         help="time each pipeline stage separately (persist+count barriers; "
@@ -95,16 +85,8 @@ def main() -> None:
 
     # warmup (JVM/codegen), excluded from the timed run
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm_corpus = corpus
-    if args.warm_runs and args.warm_rows and args.warm_rows != args.rows and not args.corpus:
-        warm_path = os.path.join(
-            os.environ.get("TMPDIR", "/tmp"), f"kgpipe_corpus_{args.warm_rows}"
-        )
-        if not os.path.exists(os.path.join(warm_path, "_SUCCESS")):
-            synth_corpus(spark, args.warm_rows).write.mode("overwrite").parquet(warm_path)
-        warm_corpus = spark.read.parquet(warm_path)
     for _ in range(args.warm_runs):
-        run_flagship(spark, warm_corpus, seed).count()
+        run_flagship(spark, corpus, seed).count()
         spark.catalog.clearCache()
 
     t0 = time.time()

@@ -240,12 +240,31 @@ def _stage_link_canonicalize(
     # canonicalization: same-label entities (post-linking) → connected
     # components, computed on the label rows only (a small projection of the
     # KG), never on the full triple set
+    components = connected_components(same_label_edges(extracted, lmap))
+    canon = canonical_map(components, prefer_namespace=KG_NS + "person/")
+
+    # ONE rewrite pass over the full KG with the composed link∘CC map
+    composed = compose_maps(lmap, canon).persist()
+    return canonicalize_triples(extracted, composed)
+
+
+def same_label_edges(extracted: DataFrame, lmap: DataFrame) -> DataFrame:
+    """(src, dst) star edges joining entities that share a normalized label
+    after linking: every member of a same-label group connects to the
+    group's min subject.
+
+    Connectivity (hence the components) equals that of the pairwise
+    self-join, but the edge count is LINEAR in group size — a hot label
+    ("readme", "main") with 100k members yields 100k-1 edges instead of
+    ~5e9 pairs. No frequency cap needed.
+    """
+    from pyspark.sql.window import Window
+
     # repartition by norm BEFORE the distinct: HashPartitioning(norm)
     # satisfies the clustering of both the (subject, norm) distinct and the
-    # per-norm window below, so the whole edge build costs one exchange
-    # norm.isNotNull(): the old hubs inner join was null-unsafe, so
-    # null-normalized labels never formed edges — keep that explicit now
-    # that the window groups nulls together
+    # per-norm window below, so the whole edge build costs ONE exchange
+    # (guide §2.4). norm.isNotNull(): null-normalized labels form no edges,
+    # and the window would group the nulls together
     label_pairs = (
         canonicalize_triples(
             extracted.filter(F.col("predicate") == RDFS_LABEL), lmap
@@ -255,30 +274,13 @@ def _stage_link_canonicalize(
         .repartition("norm")
         .distinct()
     )
-    # star edges, not a pairwise self-join: every member of a same-label
-    # group connects to the group's min subject. Connectivity (hence the
-    # components) is identical, but edge count is LINEAR in group size —
-    # a hot label ("readme", "main") with 100k members yields 100k-1 edges
-    # instead of ~5e9 pairs. No frequency cap needed.
-    # ONE exchange: repartition by norm up front, then the distinct above
-    # (keys ⊇ norm) and a whole-partition window-min both stay partition-
-    # local — replaces the old groupBy(norm) + join-back-to-hubs shape
-    # (3 exchanges + a join) with identical (src, dst) rows (guide §2.4).
-    from pyspark.sql.window import Window
-
-    dup_edges = (
+    return (
         label_pairs.withColumn(
             "src", F.min("subject").over(Window.partitionBy("norm"))
         )
         .filter(F.col("subject") != F.col("src"))
         .select("src", F.col("subject").alias("dst"))
     )
-    components = connected_components(dup_edges)
-    canon = canonical_map(components, prefer_namespace=KG_NS + "person/")
-
-    # ONE rewrite pass over the full KG with the composed link∘CC map
-    composed = compose_maps(lmap, canon).persist()
-    return canonicalize_triples(extracted, composed)
 
 
 def default_flagship_ontology(spark: SparkSession, seed: DataFrame) -> DataFrame:
@@ -431,7 +433,7 @@ def run_flagship_checkpointed(
         Stage(
             "link_canonicalize",
             lambda df: _stage_link_canonicalize(spark, df, seed),
-            config={"code": code_token(_stage_link_canonicalize)},
+            config={"code": code_token(_stage_link_canonicalize, same_label_edges)},
         ),
         Stage(
             "fuse_complete",

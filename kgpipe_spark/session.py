@@ -83,14 +83,19 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        # 24g default on this 128 GiB sandbox: local-mode executor memory IS
-        # the driver JVM; 32 concurrent tasks over cached KG views spill
-        # under 8g, and event-log forensics show GC storms (167 task-seconds
-        # GC in one 17 s extraction stage) when hypervisor steal starves GC
-        # threads — headroom blunts them (interleaved A/B: flagship min 13.1
-        # vs 11.9 s under load 18-21). On a cluster the driver does no data
-        # work and deployments override this (SPARK_DRIVER_MEMORY).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # local-mode executor memory IS the driver JVM. Default min(24g,
+        # RAM/4): 24g on a 128 GiB host, where 32 concurrent tasks over
+        # cached KG views spill under 8g, and event-log forensics show GC
+        # storms (167 task-seconds GC in one 17 s extraction stage) when
+        # hypervisor steal starves GC threads — headroom blunts them
+        # (interleaved A/B: flagship min 13.1 vs 11.9 s under load 18-21).
+        # On a 16 GB host a 24g heap let the JVM grow until the kernel's OOM
+        # killer ended it. On a cluster the driver does no data work and
+        # deployments override this (SPARK_DRIVER_MEMORY).
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", f"{_default_driver_memory_mb()}m"),
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -100,3 +105,9 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _default_driver_memory_mb() -> int:
+    """min(24g, a quarter of physical memory), in MiB."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    return min(24 * 1024, ram_mb // 4)

@@ -16,12 +16,12 @@ upsert pattern. Checkpointing gives exactly-once per input file.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kgpipe_spark.schemas import CORPUS_SCHEMA, TRIPLE_COLS
+
+# the sink's set-semantics key
+KEY = ["subject", "predicate", "object_lex", "object_kind"]
 
 
 def stream_corpus_to_triples(
@@ -37,40 +37,15 @@ def stream_corpus_to_triples(
     Run with ``.trigger(availableNow=True)`` semantics via ``process_available``
     for tests; on a cluster leave it running continuously.
     """
-    from kgpipe_spark.operators.extract import extract_code_triples, extract_json_triples
-    from kgpipe_spark.pipelines import link_entities
-
     stream = (
         spark.readStream.schema(CORPUS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        triples = (
-            extract_json_triples(batch_df)
-            .unionByName(extract_code_triples(batch_df))
-            .select(*TRIPLE_COLS)
-        )
-        if dictionary is not None:
-            triples = link_entities(
-                triples.withColumn("prov_repo", F.lit(None).cast("string")), dictionary
-            ).select(*TRIPLE_COLS)
-        triples = triples.dropDuplicates(
-            ["subject", "predicate", "object_lex", "object_kind"]
-        )
-        # set semantics vs the already-materialized KG (incremental union)
-        if _has_parquet(output_dir):
-            existing = batch_df.sparkSession.read.parquet(output_dir).select(
-                "subject", "predicate", "object_lex", "object_kind"
-            )
-            triples = triples.join(
-                existing, ["subject", "predicate", "object_lex", "object_kind"], "left_anti"
-            )
-        triples.write.mode("append").parquet(output_dir)
-
     query = (
-        stream.writeStream.foreachBatch(process_batch)
+        stream.writeStream.foreachBatch(
+            lambda batch_df, _batch_id: process_batch(batch_df, output_dir, dictionary)
+        )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -78,5 +53,34 @@ def stream_corpus_to_triples(
     return query
 
 
-def _has_parquet(path: str) -> bool:
-    return os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
+def process_batch(
+    batch_df: DataFrame, sink: str, dictionary: DataFrame | None = None
+) -> None:
+    """One micro-batch: extract (JSON + code), link against ``dictionary``
+    when given, and append to ``sink`` only the triples it does not hold."""
+    from kgpipe_spark.operators.extract import extract_code_triples, extract_json_triples
+    from kgpipe_spark.pipelines import link_entities
+
+    triples = (
+        extract_json_triples(batch_df)
+        .unionByName(extract_code_triples(batch_df))
+        .select(*TRIPLE_COLS)
+    )
+    if dictionary is not None:
+        triples = link_entities(triples, dictionary).select(*TRIPLE_COLS)
+    triples = triples.dropDuplicates(KEY)
+    # set semantics vs the already-materialized KG (incremental union)
+    spark = batch_df.sparkSession
+    if _has_parquet(spark, sink):
+        existing = spark.read.parquet(sink).select(*KEY)
+        triples = triples.join(existing, KEY, "left_anti")
+    triples.write.mode("append").parquet(sink)
+
+
+def _has_parquet(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` holds parquet files, asked through the Hadoop
+    FileSystem of ``path``'s scheme so URIs and non-local sinks answer too."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    return bool(fs.globStatus(jvm.org.apache.hadoop.fs.Path(hpath, "*.parquet")))

@@ -62,10 +62,8 @@ def run_pipeline_level(cores: int, rows: int, stage_times: bool = False) -> dict
         # the timed run, identically at both levels (JIT/Catalyst warmth is a
         # long-lived executor's normal state; cold-JVM compilation time is
         # near-constant across levels, so it acts as serial time that
-        # understates N→4N scaling). SCALING_WARM_RUNS=0 restores cold runs.
-        cmd += ["--warm-runs", os.environ.get("SCALING_WARM_RUNS", "1")]
-        if os.environ.get("SCALING_WARM_ROWS"):
-            cmd += ["--warm-rows", os.environ["SCALING_WARM_ROWS"]]
+        # understates N→4N scaling)
+        cmd += ["--warm-runs", "1"]
     out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO, timeout=3600)
     line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
     res = json.loads(line)
@@ -101,49 +99,13 @@ def main() -> None:
     loadavg_start = os.getloadavg()[0]
 
     # interleaved trials: N, 4N, N, 4N (cancels slow host drift)
-    #
-    # SCALING_PRE_CALIB='{"c2": ..., "c8": ...}': a window-hunter measured the
-    # hardware ceiling seconds before firing this pair — reuse it instead of
-    # re-running ~3 min of calibration (shorter exposure = the legs are more
-    # likely to land inside the same host window the gate probe qualified),
-    # and bracket the window with ONE post-pair calibration instead.
-    pre = os.environ.get("SCALING_PRE_CALIB")
-    # SCALING_ORDER=4n_first runs the wide leg before the narrow one inside
-    # each trial. With trials=1 there is no interleave to preserve, and the
-    # ordering is load-bearing on this host: CPU delivery is burst-credit
-    # shaped (BENCH/BASELINE.md round-5 hunt — an 8-wide minutes-scale leg
-    # only hits its fast mode when the pool is full, while the 2-wide leg is
-    # baseline-bound and read 358.9-552.7 s regardless of position). Running
-    # the wide leg first gives both legs comparable pool states instead of
-    # systematically handing the narrow leg the refilled pool; the pre/post
-    # calibration bracket and the super-linear guard (raw must be ≤ 1.02)
-    # still police a drifting window either way.
-    level_order = (
-        [N4_CORES, N_CORES]
-        if os.environ.get("SCALING_ORDER") == "4n_first"
-        else [N_CORES, N4_CORES]
-    )
     pipe: dict[int, list[dict]] = {N_CORES: [], N4_CORES: []}
     calib: dict[int, list[float]] = {N_CORES: [], N4_CORES: []}
-    calib_post: dict[int, float] = {}
-    if pre:
-        pc = json.loads(pre)
-        # keys are derived from the actual core pair ("c2"/"c8" for the
-        # default 2→8) so a pre-calib produced for one pair can never be
-        # silently attributed to a different argv pair (e.g. 8→32)
-        calib[N_CORES].append(float(pc[f"c{N_CORES}"]))
-        calib[N4_CORES].append(float(pc[f"c{N4_CORES}"]))
-        for _ in range(TRIALS):
-            for lvl in level_order:
-                pipe[lvl].append(run_pipeline_level(lvl, rows))
-        calib_post[N_CORES] = run_calibration(N_CORES)
-        calib_post[N4_CORES] = run_calibration(N4_CORES)
-    else:
-        for _ in range(TRIALS):
-            calib[N_CORES].append(run_calibration(N_CORES))
-            calib[N4_CORES].append(run_calibration(N4_CORES))
-            for lvl in level_order:
-                pipe[lvl].append(run_pipeline_level(lvl, rows))
+    for _ in range(TRIALS):
+        calib[N_CORES].append(run_calibration(N_CORES))
+        calib[N4_CORES].append(run_calibration(N4_CORES))
+        for lvl in (N_CORES, N4_CORES):
+            pipe[lvl].append(run_pipeline_level(lvl, rows))
 
     n = min(pipe[N_CORES], key=lambda r: r["duration_sec"])
     n4 = min(pipe[N4_CORES], key=lambda r: r["duration_sec"])
@@ -155,14 +117,9 @@ def main() -> None:
 
     # diagnostic pass: per-stage wall clock at both levels (separate runs —
     # the persist+count barriers change the fused plan, so these attribute
-    # the residual, they don't replace the headline timings).
-    # SCALING_SKIP_STAGES=1 skips it (window-hunting mode: headline only)
-    if os.environ.get("SCALING_SKIP_STAGES"):
-        stages_n: dict = {}
-        stages_n4: dict = {}
-    else:
-        stages_n = run_pipeline_level(N_CORES, rows, stage_times=True).get("stage_times", {})
-        stages_n4 = run_pipeline_level(N4_CORES, rows, stage_times=True).get("stage_times", {})
+    # the residual, they don't replace the headline timings)
+    stages_n = run_pipeline_level(N_CORES, rows, stage_times=True).get("stage_times", {})
+    stages_n4 = run_pipeline_level(N4_CORES, rows, stage_times=True).get("stage_times", {})
 
     report = {
         "rows": rows,
@@ -195,55 +152,21 @@ def main() -> None:
             round(a["duration_sec"] / b["duration_sec"] / 4.0, 3)
             for a, b in zip(pipe[N_CORES], pipe[N4_CORES])
         ],
-        "leg_order": "4N,N" if level_order[0] == N4_CORES else "N,4N",
         "calib_N_sec": calib[N_CORES],
         "calib_4N_sec": calib[N4_CORES],
         "loadavg": [round(loadavg_start, 2), round(os.getloadavg()[0], 2)],
     }
-    if os.environ.get("SCALING_WARM_ROWS"):
-        report["warm_rows"] = int(os.environ["SCALING_WARM_ROWS"])
-    if calib_post:
-        # post-pair window bracket: ceiling measured immediately AFTER the
-        # legs (pre-pair ceiling is the binding same-window number)
-        report["hw_ceiling_speedup_post"] = round(
-            calib_post[N_CORES] / calib_post[N4_CORES], 3
-        )
-        report["calib_post_N_sec"] = calib_post[N_CORES]
-        report["calib_post_4N_sec"] = calib_post[N4_CORES]
     print(json.dumps(report))
-
-    # window-hunting mode: report JSON only, leave the recorded markdown
-    # evidence untouched
-    if os.environ.get("SCALING_NO_MD"):
-        return
-
     write_md(report)
 
 
 def write_md(report: dict) -> None:
-    """Render BENCH/BASELINE.md from a measured report dict (also reachable
-    via `--render report.json` so a window-hunter can record the exact
-    winning trial without re-running it)."""
+    """Render BENCH/BASELINE.md from a measured report dict."""
     rows = report["rows"]
     N_CORES, N4_CORES = report["N_cores"], report["4N_cores"]
     TRIALS = len(report.get("trials_N_sec", [0, 0]))
     stages_n = report.get("stage_times_N") or {}
     stages_n4 = report.get("stage_times_4N") or {}
-
-    warm_note = ""
-    if report.get("warm_rows") and report["warm_rows"] != rows:
-        warm_note = (
-            f"\nWarm runs use a {report['warm_rows']:,}-row same-shape corpus "
-            "(identical plan, identical at both levels): codegen/JIT warmth "
-            "is row-count independent, and the shorter warm leg keeps the "
-            "whole measurement inside one host-quality window."
-        )
-    post_row = ""
-    if report.get("hw_ceiling_speedup_post") is not None:
-        post_row = (
-            f"\n| hardware-ceiling speedup re-measured after the pair "
-            f"(window bracket) | {report['hw_ceiling_speedup_post']}× |"
-        )
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
@@ -258,7 +181,7 @@ local parallelism levels in separate JVMs, trials interleaved. Each JVM
 does one untimed warm run before its timed run (steady-state
 throughput: a cluster executor JVM is long-lived, so JIT/Catalyst/codegen
 warmth is its normal operating point; cold-JVM compilation time is
-near-constant across levels and would otherwise read as serial time).{warm_note}
+near-constant across levels and would otherwise read as serial time).
 GC threads are capped to the local[N] core count — a real N-core executor
 does not get ~23 host cores during GC pauses.
 
@@ -276,14 +199,14 @@ relevant number.
 |---|---|
 | corpus rows | {rows:,} |
 | emitted triples | {report['triples']:,} |
-| N = local[{N_CORES}] wall-clock (best of {TRIALS}, leg order {report.get('leg_order', 'N,4N')}) | {report['T_N_sec']} s |
-| 4N = local[{N4_CORES}] wall-clock (best of {TRIALS}, leg order {report.get('leg_order', 'N,4N')}) | {report['T_4N_sec']} s |
+| N = local[{N_CORES}] wall-clock (best of {TRIALS}) | {report['T_N_sec']} s |
+| 4N = local[{N4_CORES}] wall-clock (best of {TRIALS}) | {report['T_4N_sec']} s |
 | throughput @ N | {report['throughput_N']:,} triples/s |
 | throughput @ 4N | {report['throughput_4N']:,} triples/s |
 | pipeline speedup N→4N | {report['speedup']}× |
 | scaling efficiency (raw, speedup/4) | {report['scaling_efficiency_raw']} |
 | hardware-ceiling speedup (pure-CPU calibration) | {report['hw_ceiling_speedup']}× |
-| **scaling efficiency vs measured hardware ceiling** | **{report['scaling_efficiency_vs_ceiling']}** |{post_row}
+| **scaling efficiency vs measured hardware ceiling** | **{report['scaling_efficiency_vs_ceiling']}** |
 
 **Per-stage split** (diagnostic runs with persist+count barriers; shows
 where any serial residue lives — values don't sum to the headline because
@@ -304,8 +227,4 @@ ships to a real cluster via `spark-submit --py-files kgpipe_spark.zip`).
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 2 and sys.argv[1] == "--render":
-        with open(sys.argv[2]) as fh:
-            write_md(json.load(fh))
-    else:
-        main()
+    main()

@@ -35,3 +35,25 @@ def test_streaming_incremental_ingest(spark, tmp_path):
     assert n2 > n1
     # no duplicate (s,p,o) rows despite the overlap
     assert triples.dropDuplicates(["subject", "predicate", "object_lex", "object_kind"]).count() == n2
+
+
+def test_streaming_uri_sink_keeps_set_semantics(spark, tmp_path):
+    """A sink given as a ``file://`` URI dedupes against what it holds exactly
+    like the same sink given as a plain path."""
+    inp = str(tmp_path / "in")
+    sinks = {"path": str(tmp_path / "out_path"), "uri": (tmp_path / "out_uri").as_uri()}
+
+    def drain():
+        for kind, sink in sinks.items():
+            q = stream_corpus_to_triples(spark, inp, sink, str(tmp_path / f"ckpt_{kind}"))
+            q.awaitTermination(120)
+
+    _write_corpus_batch(spark, inp, 0, 10)
+    drain()
+    _write_corpus_batch(spark, inp, 5, 10)  # re-delivers the triples of 5..9
+    drain()
+
+    key = ["subject", "predicate", "object_lex", "object_kind"]
+    by_uri = spark.read.parquet(sinks["uri"])
+    assert by_uri.dropDuplicates(key).count() == by_uri.count()
+    assert sorted(by_uri.collect()) == sorted(spark.read.parquet(sinks["path"]).collect())

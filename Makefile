@@ -1,4 +1,4 @@
-.PHONY: test oracle scaling pyfiles audit smoke
+.PHONY: test oracle bench scaling pyfiles audit smoke
 
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
@@ -6,6 +6,10 @@ test:
 
 oracle:
 	python scripts/check_oracle.py /root/testdata/sf0.01
+
+bench:
+	python3 perfbench/run.py --workload repo_batch --seed 1 --seconds 1 --trace 0
+	python3 perfbench/run.py --workload commit_stream --seed 1 --seconds 1 --trace 0
 
 scaling:
 	python scripts/scaling_bench.py 600000

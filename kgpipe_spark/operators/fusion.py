@@ -52,18 +52,16 @@ def canonicalize_triples(
     """Rewrite subject and URI objects (and optionally predicates) to cluster
     representatives. ``canon`` = (entity, canonical).
 
-    The map is usually tiny relative to the triples (one row per *aliased*
-    entity), and the triples side is huge — so a shuffle join would move the
-    whole KG three times. We probe the map's size with one cheap count and
-    broadcast it when it fits, keeping all three rewrites map-side; beyond
-    the threshold AQE decides.
+    The map is alias-sized by construction (one row per *aliased* entity)
+    while the triples side is the whole KG, so the map is always broadcast
+    by hint and all rewrites stay map-side. The bound is Spark's broadcast
+    limit (``spark.sql.maxBroadcastTableSize``, 8 GB by default). The hint
+    is needed even under AQE: without it a map built by an aggregate has no
+    size estimate, and the static plan is a sort-merge join that
+    hash-partitions the whole triple side before AQE can switch strategy.
+    Building the plan runs no Spark job.
     """
-    c = canon
-    try:
-        if canon.count() <= 2_000_000:
-            c = F.broadcast(canon)
-    except Exception:
-        pass
+    c = F.broadcast(canon)
 
     out = (
         triples.join(c.withColumnRenamed("entity", "subject"), "subject", "left")

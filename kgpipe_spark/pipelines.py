@@ -231,10 +231,9 @@ def _stage_link_canonicalize(
     # entity linking: map extracted entities onto seed URIs by label — the
     # map only (the expensive full-KG rewrite is deferred and fused with the
     # CC rewrite below into a single pass)
-    # alias-sized map, three consumers (label rewrite, composition,
-    # broadcast probes): lazy persist — measured equal to an eager
-    # localCheckpoint warm, and it removes a sequential materialization
-    # job barrier on the cold path
+    # alias-sized map, two consumers (label rewrite, composition): lazy
+    # persist — measured equal to an eager localCheckpoint warm, and it
+    # removes a sequential materialization job barrier on the cold path
     lmap = link_map(extracted, dictionary).persist()
 
     # canonicalization: same-label entities (post-linking) → connected

@@ -39,32 +39,6 @@ def get_spark(
         local_dir = "/dev/shm/spark-local"
         os.makedirs(local_dir, exist_ok=True)
 
-    # Cap JVM GC threads to the executor core count on small local[N]
-    # masters: G1 defaults ParallelGCThreads to ~23 on this 32-vCPU host, so
-    # a local[2] "executor" would borrow ~23 host cores during every GC pause
-    # — a real 2-core executor has 2. Without the cap, N-vs-4N scaling runs
-    # understate speedup (GC wall time is near-constant across levels, acting
-    # as serial time that a real cluster would parallelize per-executor).
-    # Only applied below the host core count; JVM-start-only, so a reused
-    # session (getOrCreate) is unaffected.
-    gc_opts = ""
-    m = re.fullmatch(r"local\[(\d+)\]", master)
-    if m and int(m.group(1)) < (os.cpu_count() or 1):
-        n = int(m.group(1))
-        gc_opts = f"-XX:ParallelGCThreads={n} -XX:ConcGCThreads={max(1, n // 4)}"
-    # Throughput-oriented GC by default: this workload is pure batch — each
-    # query allocates and drops whole checkpoint/cache block sets, and with
-    # G1 (the JDK default) that garbage is collected lazily DURING the next
-    # queries' timed windows (the "GC debt" pattern documented in
-    # OPTIMIZATION_r06.md). ParallelGC's compacting throughput collections
-    # clear it at allocation time: alternating whole-bench A/B at
-    # sf1.0-shaped data reads 23.6/26.7 s (parallel) vs 32.9/33.6 s (G1),
-    # and no worse at sf0.1. Env-overridable (SPARK_GC_OPTS="" restores the
-    # JVM default) — deployments with >32 GB executor heaps or latency
-    # SLOs should prefer G1/ZGC there.
-    extra_jvm = os.environ.get("SPARK_GC_OPTS", "-XX:+UseParallelGC")
-    gc_opts = f"{gc_opts} {extra_jvm}".strip()
-
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -100,11 +74,52 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    if gc_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", gc_opts)
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_gc_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _gc_conf(master: str) -> dict[str, str]:
+    """The ``extraJavaOptions`` that pick the JVM collector for ``master``:
+    the driver's, and outside local mode, where tasks run in executor JVMs
+    of their own, the executors' too. ``SPARK_GC_OPTS`` overrides the
+    collector choice.
+
+    Throughput-oriented GC by default: this workload is pure batch — each
+    query allocates and drops whole checkpoint/cache block sets, and with
+    G1 (the JDK default) that garbage is collected lazily DURING the next
+    queries' timed windows (the "GC debt" pattern documented in
+    OPTIMIZATION_r06.md). ParallelGC's compacting throughput collections
+    clear it at allocation time: alternating whole-bench A/B at
+    sf1.0-shaped data reads 23.6/26.7 s (parallel) vs 32.9/33.6 s (G1),
+    and no worse at sf0.1. ``SPARK_GC_OPTS=""`` restores the JVM default;
+    deployments with >32 GB executor heaps or latency SLOs should prefer
+    G1/ZGC there.
+
+    GC threads are capped to the core count of a small ``local[N]`` master:
+    G1 defaults ParallelGCThreads to ~23 on a 32-vCPU host, so a local[2]
+    "executor" would borrow ~23 host cores during every GC pause — a real
+    2-core executor has 2. Without the cap, N-vs-4N scaling runs understate
+    speedup (GC wall time is near-constant across levels, acting as serial
+    time that a real cluster would parallelize per-executor). The cap
+    applies only below the host core count. ``ConcGCThreads`` is set only
+    for a concurrent collector: ParallelGC ignores it. JVM-start-only, so a
+    reused session (getOrCreate) is unaffected.
+    """
+    collector = os.environ.get("SPARK_GC_OPTS", "-XX:+UseParallelGC")
+    threads = ""
+    m = re.fullmatch(r"local\[(\d+)\]", master)
+    if m and int(m.group(1)) < (os.cpu_count() or 1):
+        n = int(m.group(1))
+        threads = f"-XX:ParallelGCThreads={n}"
+        if "UseParallelGC" not in collector:
+            threads += f" -XX:ConcGCThreads={max(1, n // 4)}"
+    opts = f"{threads} {collector}".strip()
+    if not opts:
+        return {}
+    if re.fullmatch(r"local(\[[^\]]*\])?", master):
+        return {"spark.driver.extraJavaOptions": opts}
+    return {"spark.driver.extraJavaOptions": opts, "spark.executor.extraJavaOptions": opts}
 
 
 def _default_driver_memory_mb() -> int:

@@ -34,9 +34,14 @@ def stream_corpus_to_triples(
 ):
     """Start (and return) a streaming query: corpus dir → triples parquet.
 
-    Run with ``.trigger(availableNow=True)`` semantics via ``process_available``
-    for tests; on a cluster leave it running continuously.
+    ``dictionary`` (the seed's ``label_dictionary``) is materialised once,
+    here, with ``localCheckpoint()``, so no micro-batch re-reads and
+    regroups it from its source. The query runs with
+    ``trigger(availableNow=True)``: it drains what the input holds, then
+    stops; await it with ``awaitTermination``.
     """
+    if dictionary is not None:
+        dictionary = dictionary.localCheckpoint()
     stream = (
         spark.readStream.schema(CORPUS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -57,7 +62,12 @@ def process_batch(
     batch_df: DataFrame, sink: str, dictionary: DataFrame | None = None
 ) -> None:
     """One micro-batch: extract (JSON + code), link against ``dictionary``
-    when given, and append to ``sink`` only the triples it does not hold."""
+    when given, and append to ``sink`` only the triples it does not hold.
+
+    Linking reads the extracted triples three times (mentions, subject and
+    object rewrite), so they are ``localCheckpoint``ed first and the
+    extraction UDF runs once per batch. The sink is read with the triples' own
+    schema, which skips the parquet footer inference job."""
     from kgpipe_spark.operators.extract import extract_code_triples, extract_json_triples
     from kgpipe_spark.pipelines import link_entities
 
@@ -67,12 +77,12 @@ def process_batch(
         .select(*TRIPLE_COLS)
     )
     if dictionary is not None:
-        triples = link_entities(triples, dictionary).select(*TRIPLE_COLS)
+        triples = link_entities(triples.localCheckpoint(), dictionary).select(*TRIPLE_COLS)
     triples = triples.dropDuplicates(KEY)
     # set semantics vs the already-materialized KG (incremental union)
     spark = batch_df.sparkSession
     if _has_parquet(spark, sink):
-        existing = spark.read.parquet(sink).select(*KEY)
+        existing = spark.read.schema(triples.schema).parquet(sink).select(*KEY)
         triples = triples.join(existing, KEY, "left_anti")
     triples.write.mode("append").parquet(sink)
 

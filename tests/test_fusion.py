@@ -132,3 +132,27 @@ def test_preference_fusion_prefers_source_then_score(spark):
     )
     out = {r["subject"]: r["object_lex"] for r in preference_fusion(df).collect()}
     assert out == {"e1": "from-target-high", "e2": "b"}
+
+
+def test_canonicalize_plans_a_broadcast_without_running_a_job(spark):
+    """Canonicalizing lazy inputs starts no Spark job, and a map built by an
+    aggregate (no size estimate) is still broadcast, never sort-merged."""
+    triples = t(spark, [("e/1", "p", "e/1", "uri", None), ("x", "p", "e/1", "literal", None)])
+    pairs = spark.createDataFrame(
+        spark.sparkContext.parallelize([("e/1", "e/3"), ("e/1", "e/2")]),
+        "entity string, canonical string",
+    )
+    cmap = pairs.groupBy("entity").agg(F.min("canonical").alias("canonical"))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("canonicalize-plan", "plan only")
+    try:
+        out = canonicalize_triples(triples, cmap)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        jobs = sc.statusTracker().getJobIdsForGroup("canonicalize-plan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+    rows = {tuple(r) for r in out.select("subject", "object_lex", "object_kind").collect()}
+    assert rows == {("e/2", "e/2", "uri"), ("x", "e/1", "literal")}

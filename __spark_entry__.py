@@ -2010,11 +2010,11 @@ def _linkmedia_queries() -> dict:
 
     q["kg_streaming_ingest"] = _streaming
 
-    # fully oracle-backed since round 4: pass 2 now rides on the repo's own
-    # md5-derived Carter-Wegman MinHash (linking.minted_near_edges — the same
-    # engine-portable family as dedup.minhash_signatures), so DuckDB replays
-    # the whole two-pass linker bit-exactly; the round-3 MLlib MinHashLSH
-    # variant had no replayable oracle and wiped the driver's correctness file
+    # fully oracle-backed: pass 2 (linking.minted_near_edges) runs the
+    # engine's one md5-derived Carter-Wegman MinHash-LSH kernel, the
+    # dedup.minhash_token_signatures / minhash_verified_pairs steps that
+    # doc_minhash_lsh_pairs also uses, so DuckDB replays the whole two-pass
+    # linker bit-exactly (MLlib MinHashLSH's hash family is not replayable)
     def _link_two_pass(s, d):
         from kgpipe_spark.operators.linking import label_dictionary, link_two_pass
 

@@ -115,7 +115,7 @@ def main() -> None:
 
         stage_times = {}
         ts = time.time()
-        extracted = _stage_extract(spark, corpus, seed, args.shuffle_partitions).persist()
+        extracted = _stage_extract(spark, corpus, seed).persist()
         extracted.count()
         stage_times["extract"] = round(time.time() - ts, 2)
         ts = time.time()

@@ -68,14 +68,3 @@ def fact_alignment(actual: DataFrame, expected: DataFrame) -> DataFrame:
         [(tp, fp, fn, round(precision, 6), round(recall, 6), round(f1, 6))],
         "tp bigint, fp bigint, fn bigint, precision double, recall double, f1 double",
     )
-
-
-def alignment_sets(actual: DataFrame, expected: DataFrame) -> dict[str, DataFrame]:
-    """The TP/FP/FN triple sets themselves (for inspection / soft variants)."""
-    a = actual.select(*_KEY).distinct()
-    e = expected.select(*_KEY).distinct()
-    return {
-        "tp": a.join(e, _KEY, "left_semi"),
-        "fp": a.join(e, _KEY, "left_anti"),
-        "fn": e.join(a, _KEY, "left_anti"),
-    }

@@ -6,8 +6,6 @@ Mirrors the reference's label cleanups:
    `relation_match.py:32-33`)
  - camelCase splitting for JSON keys
    (`/root/reference/src/kgpipe_tasks/construction/json_to_rdf.py:16-20`)
- - label cleanup for soft eval: strip trailing parentheticals, underscores
-   (`/root/reference/src/kgpipe/evaluation/aspects/func/soft_metrics.py:38-43`)
 """
 
 from __future__ import annotations
@@ -25,12 +23,6 @@ def normalize_label(col: Column) -> Column:
 def split_camel_case(col: Column) -> Column:
     """``releaseDate`` → ``release date`` (json_to_rdf.py:16-20 semantics)."""
     return F.lower(F.regexp_replace(col, r"(?<=[a-z0-9])(?=[A-Z])", " "))
-
-
-def clean_eval_label(col: Column) -> Column:
-    """soft_metrics.py:38-43: drop ``(...)`` suffix, underscores → spaces."""
-    c = F.regexp_replace(col, r"\s*\([^)]*\)\s*$", "")
-    return F.trim(F.lower(F.translate(c, "_", " ")))
 
 
 def labelish_key(col: Column) -> Column:

@@ -46,56 +46,64 @@ def match_edges(
     return e
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, strategy: str = "auto", driver_threshold: int = 200_000
-) -> DataFrame:
+# edge lists up to this size are clustered by the exact driver union-find
+_DRIVER_CC_MAX_EDGES = 200_000
+# pointer-jumping rounds of the distributed path (O(log diameter) in practice)
+_CC_MAX_ROUNDS = 25
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """Dispatch: exact driver union-find for small edge lists (the match set
     of one incremental stage is usually tiny — the reference does exactly
     this in memory, cluster.py:41-93), distributed pointer-jumping beyond
-    ``driver_threshold`` edges. Both produce min-id representatives; tests
-    assert they agree."""
-    if strategy == "auto":
-        # materialize once, fully parallel — a limit().count() probe would
-        # run CollectLimit's incremental (partially serial) scan through the
-        # whole unmaterialized upstream
-        edges = edges.localCheckpoint(eager=True)
-    if strategy == "driver" or (strategy == "auto" and edges.count() <= driver_threshold):
-        import pandas as pd
-
-        # Arrow both ways: toPandas() batches the edge list across (vs the
-        # pickle row path of collect()), and createDataFrame(pandas) ships
-        # the mapping back as Arrow batches — at the 200k-edge ceiling this
-        # cuts several seconds of SERIAL driver time, which an N-vs-4N
-        # scaling pair pays at both levels
-        pdf = edges.select("src", "dst").toPandas()
-        parent: dict = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for a, b in zip(pdf["src"].values, pdf["dst"].values):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        out = [(n, find(n)) for n in parent]
-        spark = edges.sparkSession
-        if not out:
-            return spark.createDataFrame([], "node string, component string")
-        return spark.createDataFrame(
-            pd.DataFrame(out, columns=["node", "component"]).astype("string")
-        )
-    return _connected_components_distributed(edges, max_iter)
+    ``_DRIVER_CC_MAX_EDGES`` edges. Both produce min-id representatives;
+    tests assert they agree."""
+    # materialize once, fully parallel — a limit().count() probe would run
+    # CollectLimit's incremental (partially serial) scan through the whole
+    # unmaterialized upstream
+    edges = edges.localCheckpoint(eager=True)
+    if edges.count() > _DRIVER_CC_MAX_EDGES:
+        return _connected_components_distributed(edges)
+    return _connected_components_driver(edges)
 
 
-def _connected_components_distributed(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+def _connected_components_driver(edges: DataFrame) -> DataFrame:
+    """(node, component) by union-find over the collected edge list."""
+    import pandas as pd
+
+    # Arrow both ways: toPandas() batches the edge list across (vs the
+    # pickle row path of collect()), and createDataFrame(pandas) ships the
+    # mapping back as Arrow batches — at the 200k-edge ceiling this cuts
+    # several seconds of SERIAL driver time, which an N-vs-4N scaling pair
+    # pays at both levels
+    pdf = edges.select("src", "dst").toPandas()
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(pdf["src"].values, pdf["dst"].values):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    out = [(n, find(n)) for n in parent]
+    spark = edges.sparkSession
+    if not out:
+        return spark.createDataFrame([], "node string, component string")
+    return spark.createDataFrame(
+        pd.DataFrame(out, columns=["node", "component"]).astype("string")
+    )
+
+
+def _connected_components_distributed(edges: DataFrame) -> DataFrame:
     """(node, component) — component = min node id reachable (lexicographic).
 
     Min-label propagation with **pointer jumping**: each round every node
@@ -119,7 +127,7 @@ def _connected_components_distributed(edges: DataFrame, max_iter: int = 25) -> D
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         # 1) neighbor-min
         nbr_min = (
             sym.join(

@@ -7,10 +7,17 @@ path); MinHash signatures use md5-based hashes so results are portable and
 deterministic across engines.
 
  - ``exact_duplicates``      — hash-groupBy on normalized text.
- - ``minhash_signatures``    — k permutation-free min-hashes over word
-                                shingles: h_i(doc) = min(md5(i || shingle)).
- - ``minhash_lsh_pairs``     — band the signature, bucket-join, verify with
-                                exact shingle Jaccard ≥ threshold.
+ - ``minhash_token_signatures`` — the MinHash signature step over (id, token)
+                                rows: one md5 per token, Carter-Wegman
+                                h_i = min((a + i·b) mod 2^32).
+ - ``minhash_verified_pairs``   — the MinHash-LSH pair step: band the
+                                signature, pair ids within each bucket,
+                                verify token-set Jaccard ≥ threshold. These
+                                two steps are the engine's one banded
+                                MinHash; ``linking.minted_near_edges`` runs
+                                them over char-3-grams.
+ - ``minhash_signatures``    — the signature step over word shingles.
+ - ``minhash_lsh_pairs``     — both steps over word shingles.
  - ``ngram_jaccard_pairs``   — exact n-gram Jaccard join (token blocking).
  - ``simhash_fingerprints``  — 32-bit SimHash over word tokens (bit-majority
                                 of md5-derived token hashes).
@@ -70,25 +77,8 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(doc_id, grams64 ARRAY<BIGINT>, sig ARRAY<BIGINT>) — sig[i] = min over
-    shingles of (a + i·b) mod 2^32, where (a, b) are the first two 32-bit
-    words of md5(shingle). Carter-Wegman hash family: ONE md5 per shingle
-    instead of ``num_hashes`` (16× fewer digests — the digest was the
-    dominant cost), deterministic and engine-portable (DuckDB:
-    CAST('0x'||hex AS UBIGINT)).
-
-    ``grams64`` is the doc's distinct shingle set as 64-bit xxhash64 values —
-    the lightweight proxy the verification join intersects instead of the
-    shingle strings themselves (8 bytes/shingle through the pair shuffle
-    instead of ~25; set sizes and intersections are identical barring a
-    2^-64 hash collision).
+def _shingle_tokens(docs: DataFrame, id_col: str, text_col: str, shingle_n: int) -> DataFrame:
+    """(id, token) — each doc's distinct n-word shingles, one row each.
 
     The input is repartitioned first: higher-order lambda expressions are
     interpreted (not codegen'd), so this projection is CPU-bound — a narrow
@@ -100,34 +90,50 @@ def minhash_signatures(
     # ONE exchange (repartition by doc) and everything downstream is
     # partition-local: the window-lead shingle build (the higher-order
     # transform/slice lambda formulation is interpreted, ~5× slower), the
-    # per-doc distinct and ONE combined signature + gram-set aggregation
-    # (min longs + collect_list → ObjectHashAggregate, no sort, no
-    # sig-vs-shingles self-join) all cluster on doc_id.
+    # per-doc distinct and the signature aggregation all cluster on id.
     words = (
         docs.repartition(n_part, F.col(id_col))
         .select(
-            F.col(id_col).alias("doc_id"),
+            F.col(id_col).alias("id"),
             F.posexplode(_words(F.col(text_col))).alias("pos", "w"),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy("pos")
+    w = Window.partitionBy("id").orderBy("pos")
     leads = [F.lead("w", j).over(w) for j in range(1, shingle_n)]
-    sh_rows = (
-        words.withColumn("s", F.concat_ws(" ", F.col("w"), *leads))
+    return (
+        words.withColumn("token", F.concat_ws(" ", F.col("w"), *leads))
         .withColumn("_last", leads[-1] if leads else F.col("w"))
         .filter(F.col("_last").isNotNull())
-        .select("doc_id", "s")
+        .select("id", "token")
         .distinct()  # set semantics (word_shingles is distinct) — local
     )
-    # Carter-Wegman family from ONE md5 per shingle; 16 parallel MIN
-    # aggregates (no 16× row explode), map-side partials
-    ab = sh_rows.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long").alias("a"),
-        F.conv(F.substring(F.md5("s"), 9, 8), 16, 10).cast("long").alias("b"),
-        F.xxhash64("s").alias("h64"),
+
+
+def minhash_token_signatures(tokens: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """MinHash signature step: (id, token) rows, distinct per id →
+    (id, grams64 ARRAY<BIGINT>, sig ARRAY<BIGINT>).
+
+    sig[i] = min over tokens of (a + i·b) mod 2^32, where (a, b) are the
+    first two 32-bit words of md5(token). Carter-Wegman hash family: ONE md5
+    per token instead of ``num_hashes`` (16× fewer digests — the digest was
+    the dominant cost), deterministic and engine-portable (DuckDB:
+    CAST('0x'||hex AS UBIGINT)).
+
+    ``grams64`` is the id's token set as 64-bit xxhash64 values — the
+    lightweight proxy the verification join intersects instead of the token
+    strings themselves (8 bytes/token through the pair shuffle instead of
+    ~25; set sizes and intersections are identical barring a 2^-64 hash
+    collision). Ids without tokens get no row.
+    """
+    ab = tokens.select(
+        "id",
+        F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long").alias("a"),
+        F.conv(F.substring(F.md5("token"), 9, 8), 16, 10).cast("long").alias("b"),
+        F.xxhash64("token").alias("h64"),
     )
-    agg = ab.groupBy("doc_id").agg(
+    # 16 parallel MIN aggregates (no 16× row explode) plus the gram set in
+    # ONE ObjectHashAggregate with map-side partials
+    agg = ab.groupBy("id").agg(
         *[
             F.min((F.col("a") + F.lit(i) * F.col("b")) % F.lit(4294967296)).alias(f"_h{i}")
             for i in range(num_hashes)
@@ -135,37 +141,28 @@ def minhash_signatures(
         F.collect_list("h64").alias("grams64"),
     )
     return agg.select(
-        "doc_id",
+        "id",
         "grams64",
         F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"),
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.5,
+def minhash_verified_pairs(
+    sigs: DataFrame, num_hashes: int = 16, bands: int = 8, jaccard_threshold: float = 0.5
 ) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard) via banded MinHash-LSH.
-
-    Candidates share at least one full band; verification computes exact
-    shingle-set Jaccard (array_intersect/union over the 64-bit gram-hash
-    proxy sets — identical to string-set Jaccard barring a 2^-64 collision)
-    and filters ≥ threshold.
+    """MinHash-LSH pair step: ``minhash_token_signatures`` output →
+    (id_a < id_b, jaccard) for every pair that shares at least one full band
+    and whose token-set Jaccard (over the ``grams64`` proxies) is
+    ≥ ``jaccard_threshold``. Jaccard is unrounded.
     """
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n).localCheckpoint(
-        eager=False
-    )
+    # the band explode and both verify joins read sigs: compute them once
+    sigs = sigs.localCheckpoint(eager=False)
     # band on (band, bucket) WITHOUT the gram arrays — shuffling the arrays
     # through the 8-way band explode is the scale killer; gram sets are
     # joined back only for the (few) surviving candidate pairs.
     banded = sigs.select(
-        "doc_id",
+        "id",
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -183,20 +180,20 @@ def minhash_lsh_pairs(
                 ),
             )
         ).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
     # candidates per bucket via ONE groupBy + in-bucket pair explode instead
     # of the banded self-join (which exchanged the banded table twice and
     # joined): same (id_a < id_b) pair set, measured ~40% faster. Both forms
-    # emit O(k²) pairs for a k-doc bucket — a mega-bucket (1M exact copies
+    # emit O(k²) pairs for a k-id bucket — a mega-bucket (1M exact copies
     # of one doc share every band) kills either shape via its own k² output,
     # which is why exact dedup runs upstream; the k-element id array this
-    # form additionally buffers is the smaller of the two costs (8 B/doc vs
+    # form additionally buffers is the smaller of the two costs (8 B/id vs
     # k² joined rows). Contrast ngram_jaccard_pairs / simhash, where blocks
     # grow with the corpus and the streamed join is kept.
     cand = (
         banded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
         .filter(F.size("ids") > 1)
         .select(
             F.explode(
@@ -214,16 +211,53 @@ def minhash_lsh_pairs(
         .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .dropDuplicates()
     )
-    sh = sigs.select("doc_id", "grams64")
+    sh = sigs.select("id", "grams64")
     cand = cand.join(
-        sh.select(F.col("doc_id").alias("id_a"), F.col("grams64").alias("sh_a")), "id_a"
-    ).join(sh.select(F.col("doc_id").alias("id_b"), F.col("grams64").alias("sh_b")), "id_b")
+        sh.select(F.col("id").alias("id_a"), F.col("grams64").alias("sh_a")), "id_a"
+    ).join(sh.select(F.col("id").alias("id_b"), F.col("grams64").alias("sh_b")), "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (
         cand.withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def minhash_signatures(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 16,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """(doc_id, grams64, sig) over each doc's distinct n-word shingles —
+    ``minhash_token_signatures`` of the shingle set."""
+    tokens = _shingle_tokens(docs, id_col, text_col, shingle_n)
+    return minhash_token_signatures(tokens, num_hashes).withColumnRenamed("id", "doc_id")
+
+
+def minhash_lsh_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 16,
+    bands: int = 8,
+    shingle_n: int = 3,
+    jaccard_threshold: float = 0.5,
+) -> DataFrame:
+    """Near-duplicate pairs (id_a < id_b, jaccard) via banded MinHash-LSH
+    over word shingles.
+
+    Candidates share at least one full band; verification computes exact
+    shingle-set Jaccard (array_intersect/union over the 64-bit gram-hash
+    proxy sets — identical to string-set Jaccard barring a 2^-64 collision)
+    and filters ≥ threshold.
+    """
+    tokens = _shingle_tokens(docs, id_col, text_col, shingle_n)
+    sigs = minhash_token_signatures(tokens, num_hashes)
+    return minhash_verified_pairs(sigs, num_hashes, bands, jaccard_threshold).select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
 
 

@@ -28,6 +28,10 @@ The reference's *dynamic* index (newly minted entities appended mid-run,
 extract_json.py:84-89,498-510) is order-dependent mutable state; we ship the
 two-pass variant (SURVEY.md §4.2.5): ``link_two_pass`` links against the
 seed dictionary, then re-links residuals against pass-1 minted entities.
+Pass 2 (``minted_near_edges``) is a char-3-gram front end on the engine's
+one banded MinHash-LSH kernel, ``dedup.minhash_token_signatures`` →
+``dedup.minhash_verified_pairs``, which document dedup shares; the MLlib
+``link_minhash_lsh`` above is a separate hash family.
 The reference itself ships ``dynamic_index=False`` variants
 (extract_json.py:583,624) — those are the semantics we match.
 """
@@ -44,6 +48,7 @@ from pyspark.sql.types import ArrayType, FloatType
 
 from kgpipe_spark.functions.hashing import mint_uri_sha256
 from kgpipe_spark.functions.strings import normalize_label
+from kgpipe_spark.operators.dedup import minhash_token_signatures, minhash_verified_pairs
 from kgpipe_spark.schemas import RDFS_LABEL, SKOS_ALT_LABEL
 
 DEFAULT_ACCEPT = 0.70  # extract_json.py:23 ENTITY_ACCEPT
@@ -300,96 +305,25 @@ def minted_near_edges(
     bands: int = 8,
 ) -> DataFrame:
     """(src, dst) edges between minted URIs whose normalized surfaces are
-    near-identical: banded MinHash-LSH candidates over char-3-gram sets,
-    verified by exact set Jaccard ≥ threshold.
+    near-identical: the engine's one banded MinHash-LSH
+    (``dedup.minhash_token_signatures`` → ``dedup.minhash_verified_pairs``)
+    over char-3-gram sets, verified by set Jaccard ≥ threshold.
 
-    Same md5-derived Carter-Wegman hash family as ``dedup.minhash_signatures``
-    (sig[i] = min over grams of (a + i·b) mod 2^32 with (a, b) the first two
-    32-bit words of md5(gram)) — deterministic and engine-portable, so the
-    whole two-pass linker replays bit-exactly in DuckDB (unlike MLlib
-    MinHashLSH, whose hash family an external oracle cannot reproduce).
-    Pure JVM: candidates are banded/bucketed (no all-pairs), the Jaccard
-    verify join touches only bucket-collision survivors — the 100 TB path.
+    The md5-derived hash family is deterministic and engine-portable, so the
+    whole two-pass linker replays in DuckDB (unlike MLlib MinHashLSH, whose
+    hash family an external oracle cannot reproduce). Pure JVM and blocked:
+    no all-pairs, the verify join touches only bucket-collision survivors.
 
     Input: (uri, norm) — one row per minted uri (uri ↔ norm is 1:1, the uri
     IS sha256(norm)).
     """
-    rows_per_band = num_hashes // bands
-    grams = minted_dict.select(
-        "uri", char_gram_set(F.col("norm")).alias("grams")
-    ).filter(F.size("grams") > 0)
-    # localCheckpoint: both sides of the band self-join and the verify join
-    # descend from `grams` — break the twin lineage once (same rationale as
-    # dedup.minhash_lsh_pairs).
-    grams = grams.localCheckpoint(eager=False)
-    ab = grams.select(
-        "uri",
-        F.explode("grams").alias("s"),
-    ).select(
-        "uri",
-        F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long").alias("a"),
-        F.conv(F.substring(F.md5("s"), 9, 8), 16, 10).cast("long").alias("b"),
+    tokens = minted_dict.select(
+        F.col("uri").alias("id"), F.explode(char_gram_set(F.col("norm"))).alias("token")
     )
-    mins = ab.groupBy("uri").agg(
-        *[
-            F.min((F.col("a") + F.lit(i) * F.col("b")) % F.lit(4294967296)).alias(f"_h{i}")
-            for i in range(num_hashes)
-        ]
+    sigs = minhash_token_signatures(tokens, num_hashes)
+    return minhash_verified_pairs(sigs, num_hashes, bands, jaccard_threshold).select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    sig = mins.select(
-        "uri", F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig")
-    )
-    banded = sig.select(
-        "uri",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.transform(
-                                F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                                lambda x: x.cast("string"),
-                            ),
-                        )
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("uri", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    # in-bucket pair explode instead of a banded self-join (one exchange,
-    # no join; identical uri_a < uri_b pair set — see dedup.minhash_lsh_pairs)
-    cand = (
-        banded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("uri")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda x, i: F.transform(
-                            F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                            lambda y: F.struct(x.alias("uri_a"), y.alias("uri_b")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.uri_a", "p.uri_b")
-        .dropDuplicates()
-    )
-    g = grams.select("uri", "grams")
-    verified = (
-        cand.join(g.select(F.col("uri").alias("uri_a"), F.col("grams").alias("g_a")), "uri_a")
-        .join(g.select(F.col("uri").alias("uri_b"), F.col("grams").alias("g_b")), "uri_b")
-        .withColumn("_inter", F.size(F.array_intersect("g_a", "g_b")))
-        .withColumn("_union", F.size("g_a") + F.size("g_b") - F.col("_inter"))
-        .filter(F.col("_inter") / F.col("_union") >= jaccard_threshold)
-    )
-    return verified.select(F.col("uri_a").alias("src"), F.col("uri_b").alias("dst"))
 
 
 def link_two_pass(

@@ -48,6 +48,12 @@ def _stage_cut(df: DataFrame) -> DataFrame:
     the data to the first downstream action. It is not barrier-free: under
     AQE an input that ends in a shuffle runs one job at the cut (its
     shuffle-map stage); a narrow input, or AQE off, runs none.
+
+    The stages also cut their multi-consumer intermediates (the text-link
+    table, the link map, the composed rewrite map) this way instead of
+    ``persist()``: a cut registers nothing with the session's cache
+    manager, so a long-lived session does not pile up cached plans, and
+    its blocks are released with the RDD once nothing references it.
     """
     return df.localCheckpoint(eager=False)
 
@@ -61,9 +67,9 @@ def text_surface_to_triples(surfaces: DataFrame, dictionary: DataFrame) -> DataF
     mentions = subj_m.union(obj_m).distinct().withColumn("kind", F.lit("entity")).withColumn(
         "doc_uri", F.lit(None).cast("string")
     )
-    # checkpoint: lk is consumed three times (subject join, object join,
+    # cut: lk is consumed three times (subject join, object join,
     # minted-label emission) — without this the distinct+link recomputes 3×
-    linked = link_or_mint(link_exact(mentions, dictionary)).persist()
+    linked = _stage_cut(link_or_mint(link_exact(mentions, dictionary)))
     lk = linked.select("query_text", "resolved_uri")
 
     with_subj = surfaces.join(
@@ -155,14 +161,9 @@ def compose_maps(first: DataFrame, second: DataFrame) -> DataFrame:
 _ROWS_PER_MAP_PARTITION = 4000
 
 
-def _stage_extract(
-    spark: SparkSession,
-    corpus: DataFrame,
-    seed: DataFrame,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
+def _stage_extract(spark: SparkSession, corpus: DataFrame, seed: DataFrame) -> DataFrame:
     """Stage 1: corpus → deduplicated extracted triples (unpersisted)."""
-    npart = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # map-partition count is sized by DATA (corpus rows), not by cores: the
     # extraction stage ends in the dedupe's partial hash-aggregation, whose
     # per-task hash map must fit in (execution memory / concurrent tasks).
@@ -231,10 +232,10 @@ def _stage_link_canonicalize(
     # entity linking: map extracted entities onto seed URIs by label — the
     # map only (the expensive full-KG rewrite is deferred and fused with the
     # CC rewrite below into a single pass)
-    # alias-sized map, two consumers (label rewrite, composition): lazy
-    # persist — measured equal to an eager localCheckpoint warm, and it
-    # removes a sequential materialization job barrier on the cold path
-    lmap = link_map(extracted, dictionary).persist()
+    # alias-sized map, two consumers (label rewrite, composition): a lazy
+    # cut, so no materialization job barrier on the cold path and nothing
+    # left in the session's cache afterwards
+    lmap = _stage_cut(link_map(extracted, dictionary))
 
     # canonicalization: same-label entities (post-linking) → connected
     # components, computed on the label rows only (a small projection of the
@@ -243,7 +244,7 @@ def _stage_link_canonicalize(
     canon = canonical_map(components, prefer_namespace=KG_NS + "person/")
 
     # ONE rewrite pass over the full KG with the composed link∘CC map
-    composed = compose_maps(lmap, canon).persist()
+    composed = _stage_cut(compose_maps(lmap, canon))
     return canonicalize_triples(extracted, composed)
 
 
@@ -380,7 +381,6 @@ def run_flagship(
     spark: SparkSession,
     corpus: DataFrame,
     seed: DataFrame,
-    shuffle_partitions: int | None = None,
     ontology: DataFrame | None = None,
 ) -> DataFrame:
     """Full extract→link→canonicalize→fuse→complete over a corpus DataFrame.
@@ -394,7 +394,7 @@ def run_flagship(
     # CC edge building, canonicalize rewrite joins). The plan cut is
     # mandatory (see _stage_cut). (On a cluster this boundary is the
     # per-stage Iceberg snapshot; see run_flagship_checkpointed.)
-    extracted = _stage_cut(_stage_extract(spark, corpus, seed, shuffle_partitions))
+    extracted = _stage_cut(_stage_extract(spark, corpus, seed))
     canonical = _stage_link_canonicalize(spark, extracted, seed)
     return _stage_fuse_complete(spark, canonical, seed, ontology)
 
@@ -405,7 +405,6 @@ def run_flagship_checkpointed(
     seed: DataFrame,
     checkpoint_dir: str,
     input_fingerprint: str = "corpus",
-    shuffle_partitions: int | None = None,
     ontology: DataFrame | None = None,
 ):
     """Flagship run through the content-addressed checkpoint driver.
@@ -426,7 +425,7 @@ def run_flagship_checkpointed(
     stages = [
         Stage(
             "extract",
-            lambda df: _stage_extract(spark, df, seed, shuffle_partitions),
+            lambda df: _stage_extract(spark, df, seed),
             config={"code": code_token(_stage_extract)},
         ),
         Stage(

@@ -68,16 +68,6 @@ TRIPLE_FIELDS = [
 
 TRIPLE_SCHEMA = StructType(TRIPLE_FIELDS)
 
-TRIPLE_PROV_SCHEMA = StructType(
-    TRIPLE_FIELDS
-    + [
-        StructField("prov_repo", StringType(), True),
-        StructField("prov_path", StringType(), True),
-        StructField("prov_commit", StringType(), True),
-        StructField("score", DoubleType(), True),
-    ]
-)
-
 TRIPLE_COLS = [f.name for f in TRIPLE_FIELDS]
 
 # ---------------------------------------------------------------------------

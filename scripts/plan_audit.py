@@ -13,7 +13,9 @@ Checked invariants:
      appear anywhere; Python appears only as ArrowEvalPython / mapInPandas
      (vectorized) in the extraction/embedding operators.
   4. The MinHash signature/banding path is 100% JVM (zero Python eval
-     nodes) and whole-stage codegen covers the signature aggregation.
+     nodes) in both of its consumers, document dedup and the two-pass
+     linker's minted-surface edges, and whole-stage codegen covers the
+     signature aggregation.
   5. canonicalize_triples broadcasts the rewrite map (BroadcastHashJoin,
      not a shuffle join) when the map is alias-sized.
 
@@ -56,6 +58,7 @@ def run_audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
 def _run_audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
     from kgpipe_spark.operators.dedup import minhash_lsh_pairs
     from kgpipe_spark.operators.fusion import canonicalize_triples, fuse_first_value
+    from kgpipe_spark.operators.linking import minted_near_edges
     from kgpipe_spark.schemas import RDFS_LABEL
 
     results: list[tuple[str, bool, str]] = []
@@ -153,6 +156,15 @@ def _run_audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
         "minhash_pure_jvm",
         "EvalPython" not in mp and "PythonUDF" not in mp,
         "signature/banding/verify must stay JVM-side",
+    )
+    minted = docs.select(
+        F.col("doc_id").cast("string").alias("uri"), F.substring("text", 1, 40).alias("norm")
+    )
+    ep = plan_of(minted_near_edges(minted), "extended")
+    check(
+        "minted_edges_pure_jvm",
+        "EvalPython" not in ep and "PythonUDF" not in ep,
+        "the linker's pass-2 signature/banding/verify must stay JVM-side",
     )
     cg = plan_of(minhash_lsh_pairs(docs), "codegen")
     n_subtrees = int(cg.split("WholeStageCodegen subtrees")[0].rsplit("Found", 1)[-1])

@@ -4,6 +4,8 @@ mirroring the reference's MatchCluster semantics (cluster.py:41-93)."""
 import random
 
 from kgpipe_spark.operators.cluster import (
+    _connected_components_distributed,
+    _connected_components_driver,
     best_match_1to1,
     canonical_map,
     connected_components,
@@ -43,9 +45,9 @@ def test_cc_matches_union_find(spark):
         expected[b] = uf.find(b)
 
     df = spark.createDataFrame(edges, ["src", "dst"])
-    # force the distributed pointer-jumping path; driver path is the oracle
-    got = {r["node"]: r["component"] for r in connected_components(df, strategy="distributed").collect()}
-    got_driver = {r["node"]: r["component"] for r in connected_components(df, strategy="driver").collect()}
+    # the distributed pointer-jumping path; the driver union-find is the oracle
+    got = {r["node"]: r["component"] for r in _connected_components_distributed(df).collect()}
+    got_driver = {r["node"]: r["component"] for r in _connected_components_driver(df).collect()}
     assert got == got_driver
 
     # same partition: two nodes share a component iff union-find agrees

@@ -404,3 +404,16 @@ def test_stage_cut_replaces_plan_with_rdd_leaf(spark):
     assert plan.getClass().getSimpleName() == "LogicalRDD"
     assert plan.children().isEmpty()
     assert sorted(cut.collect()) == sorted(df.collect())
+
+
+def test_flagship_leaves_no_cached_plans(spark, small_corpus, seed):
+    """A flagship run registers nothing with the session's cache manager, so
+    a long-lived session does not pile up cached plans run after run."""
+    spark.catalog.clearCache()
+    try:
+        run_flagship(spark, small_corpus, seed).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    finally:
+        # the session fixtures were cached; put them back for later tests
+        small_corpus.cache()
+        seed.cache()

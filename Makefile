@@ -1,4 +1,4 @@
-.PHONY: test oracle bench scaling pyfiles audit smoke
+.PHONY: test oracle bench pyfiles audit smoke
 
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
@@ -10,9 +10,6 @@ oracle:
 bench:
 	python3 perfbench/run.py --workload repo_batch --seed 1 --seconds 1 --trace 0
 	python3 perfbench/run.py --workload commit_stream --seed 1 --seconds 1 --trace 0
-
-scaling:
-	python scripts/scaling_bench.py 600000
 
 pyfiles:
 	rm -f kgpipe_spark.zip

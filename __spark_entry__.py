@@ -419,6 +419,18 @@ def _flagship_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _te_triple_rows(te: DataFrame) -> DataFrame:
+    """One row per TE-document triple: doc id, surface forms and mappings."""
+    return te.select("doc_id", F.explode("triples").alias("t")).select(
+        "doc_id",
+        F.col("t.subject.surface_form").alias("s_surface"),
+        F.col("t.subject.mapping").alias("s_mapping"),
+        F.col("t.predicate.surface_form").alias("p_surface"),
+        F.col("t.object.surface_form").alias("o_surface"),
+        F.col("t.object.mapping").alias("o_mapping"),
+    )
+
+
 def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kgpipe_spark.pipelines import run_flagship
 
@@ -815,25 +827,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             label_alias_embedding_rl,
         )
 
-        cust = _read(s, d, "customer")
-        nation = _read(s, d, "nation")
-        corpus = cust.join(nation, cust.c_nationkey == nation.n_nationkey).select(
-            F.lit("org/tpch").alias("repo"),
-            F.concat(F.lit("cust/"), F.col("c_custkey").cast("string"), F.lit(".json")).alias(
-                "path"
-            ),
-            F.lit("c0").alias("commit"),
-            F.lit("json").alias("lang"),
-            F.to_json(
-                F.struct(
-                    F.col("c_name").alias("name"),
-                    F.struct(F.col("n_name").alias("name")).alias("nation"),
-                    F.col("c_mktsegment").alias("segment"),
-                    F.col("c_acctbal").alias("balance"),
-                )
-            ).alias("content"),
+        linked = label_alias_embedding_rl(
+            construct_te_document_from_json(_flagship_corpus(s, d)), _ontology(s)
         )
-        linked = label_alias_embedding_rl(construct_te_document_from_json(corpus), _ontology(s))
         return (
             linked.select(F.explode("links").alias("l"))
             .filter(F.col("l.link_type") == "predicate")
@@ -949,24 +945,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         oracle-checked against the closed-form md5-mint derivation."""
         from kgpipe_spark.operators.extract import extract_json_triples
 
-        cust = _read(s, d, "customer")
-        nation = _read(s, d, "nation")
-        corpus = cust.join(nation, cust.c_nationkey == nation.n_nationkey).select(
-            F.lit("org/tpch").alias("repo"),
-            F.concat(F.lit("cust/"), F.col("c_custkey").cast("string"), F.lit(".json")).alias("path"),
-            F.lit("c0").alias("commit"),
-            F.lit("json").alias("lang"),
-            F.to_json(
-                F.struct(
-                    F.col("c_name").alias("name"),
-                    F.struct(F.col("n_name").alias("name")).alias("nation"),
-                    F.col("c_mktsegment").alias("segment"),
-                    F.col("c_acctbal").alias("balance"),
-                )
-            ).alias("content"),
-        )
         return (
-            extract_json_triples(corpus)
+            extract_json_triples(_flagship_corpus(s, d))
             .select("subject", "predicate", "object_lex", "object_kind", "object_datatype")
             .distinct()
         )
@@ -1602,31 +1582,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _te_from_json(s, d):
         from kgpipe_spark.operators.te_construct import construct_te_document_from_json
 
-        cust = _read(s, d, "customer")
-        nation = _read(s, d, "nation")
-        corpus = cust.join(nation, cust.c_nationkey == nation.n_nationkey).select(
-            F.lit("org/tpch").alias("repo"),
-            F.concat(F.lit("cust/"), F.col("c_custkey").cast("string"), F.lit(".json")).alias("path"),
-            F.lit("c0").alias("commit"),
-            F.lit("json").alias("lang"),
-            F.to_json(
-                F.struct(
-                    F.col("c_name").alias("name"),
-                    F.struct(F.col("n_name").alias("name")).alias("nation"),
-                    F.col("c_mktsegment").alias("segment"),
-                    F.col("c_acctbal").alias("balance"),
-                )
-            ).alias("content"),
-        )
-        te = construct_te_document_from_json(corpus)
-        return te.select("doc_id", F.explode("triples").alias("t")).select(
-            "doc_id",
-            F.col("t.subject.surface_form").alias("s_surface"),
-            F.col("t.subject.mapping").alias("s_mapping"),
-            F.col("t.predicate.surface_form").alias("p_surface"),
-            F.col("t.object.surface_form").alias("o_surface"),
-            F.col("t.object.mapping").alias("o_mapping"),
-        )
+        return _te_triple_rows(construct_te_document_from_json(_flagship_corpus(s, d)))
 
     q["kg_te_from_json"] = _te_from_json
 
@@ -1642,36 +1598,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from kgpipe_spark.operators.te_construct import construct_te_document_from_json
         from kgpipe_spark.sources.readers import read_te_json, write_te_json
 
-        cust = _read(s, d, "customer").filter(F.col("c_custkey") % 10 == 0)
-        nation = _read(s, d, "nation")
-        corpus = cust.join(nation, cust.c_nationkey == nation.n_nationkey).select(
-            F.lit("org/tpch").alias("repo"),
-            F.concat(F.lit("cust/"), F.col("c_custkey").cast("string"), F.lit(".json")).alias("path"),
-            F.lit("c0").alias("commit"),
-            F.lit("json").alias("lang"),
-            F.to_json(
-                F.struct(
-                    F.col("c_name").alias("name"),
-                    F.struct(F.col("n_name").alias("name")).alias("nation"),
-                    F.col("c_mktsegment").alias("segment"),
-                    F.col("c_acctbal").alias("balance"),
-                )
-            ).alias("content"),
-        )
+        # c_custkey % 10 == 0 ⇔ the key's decimal form ends in 0
+        corpus = _flagship_corpus(s, d).filter(F.col("path").endswith("0.json"))
         out = _os.path.join(
             _os.environ.get("TMPDIR", "/tmp"),
             f"kg_te_json_{s.sparkContext.applicationId}_{_os.path.basename(d.rstrip('/'))}",
         )
         write_te_json(construct_te_document_from_json(corpus), out)
         back = read_te_json(s, out)
-        return back.select("doc_id", F.explode("triples").alias("t")).select(
-            "doc_id",
-            F.col("t.subject.surface_form").alias("s_surface"),
-            F.col("t.subject.mapping").alias("s_mapping"),
-            F.col("t.predicate.surface_form").alias("p_surface"),
-            F.col("t.object.surface_form").alias("o_surface"),
-            F.col("t.object.mapping").alias("o_mapping"),
-        )
+        return _te_triple_rows(back)
 
     q["kg_te_json_roundtrip"] = _te_json_roundtrip
 

@@ -35,21 +35,6 @@ def main() -> None:
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument(
-        "--warm-runs",
-        type=int,
-        default=0,
-        help="untimed full pipeline runs before the timed one (steady-state "
-        "measurement: a cluster executor JVM is long-lived, so JIT/Catalyst/"
-        "codegen-cache warmth is its normal operating point; applied "
-        "identically at every parallelism level in scaling comparisons)",
-    )
-    ap.add_argument(
-        "--stage-times",
-        action="store_true",
-        help="time each pipeline stage separately (persist+count barriers; "
-        "diagnostic mode — adds actions the plain run fuses away)",
-    )
-    ap.add_argument(
         "--eval-report",
         action="store_true",
         help="after the run, print the long-table evaluation report "
@@ -85,9 +70,6 @@ def main() -> None:
 
     # warmup (JVM/codegen), excluded from the timed run
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for _ in range(args.warm_runs):
-        run_flagship(spark, corpus, seed).count()
-        spark.catalog.clearCache()
 
     t0 = time.time()
     if args.checkpoint_dir:
@@ -104,29 +86,6 @@ def main() -> None:
         )
         for row in report:
             print(json.dumps({"stage_report": row}), file=sys.stderr)
-    elif args.stage_times:
-        # diagnostic: per-stage wall clock with persist+count barriers, so a
-        # scaling run can attribute serial residue to a specific stage
-        from kgpipe_spark.pipelines import (
-            _stage_extract,
-            _stage_fuse_complete,
-            _stage_link_canonicalize,
-        )
-
-        stage_times = {}
-        ts = time.time()
-        extracted = _stage_extract(spark, corpus, seed).persist()
-        extracted.count()
-        stage_times["extract"] = round(time.time() - ts, 2)
-        ts = time.time()
-        canonical = _stage_link_canonicalize(spark, extracted, seed).persist()
-        canonical.count()
-        stage_times["link_canonicalize"] = round(time.time() - ts, 2)
-        ts = time.time()
-        triples = _stage_fuse_complete(spark, canonical, seed)
-        triples.count()
-        stage_times["fuse_complete"] = round(time.time() - ts, 2)
-        print(json.dumps({"stage_times": stage_times}), file=sys.stderr)
     else:
         triples = run_flagship(spark, corpus, seed)
     if args.output:

@@ -13,8 +13,6 @@ accept (0.70). Our decomposition keeps the corpus-wide parts relational:
                              ``queries @ label_matrix.T`` against a
                              *broadcast* dictionary matrix; top-1 ≥ threshold
                              (mirrors extract_json.py:93-96 argmax ≥ 0.70)
- 4. ``link_minhash_lsh``   — long-tail fuzzy candidates via MLlib MinHashLSH
-                             over char-3-gram sets (BASELINE.json north star)
 
 Embeddings are feature-flagged deterministic hashed char-ngram vectors
 (`hash_embed``) so tests are reproducible without ML deps — mirroring the
@@ -30,8 +28,7 @@ two-pass variant (SURVEY.md §4.2.5): ``link_two_pass`` links against the
 seed dictionary, then re-links residuals against pass-1 minted entities.
 Pass 2 (``minted_near_edges``) is a char-3-gram front end on the engine's
 one banded MinHash-LSH kernel, ``dedup.minhash_token_signatures`` →
-``dedup.minhash_verified_pairs``, which document dedup shares; the MLlib
-``link_minhash_lsh`` above is a separate hash family.
+``dedup.minhash_verified_pairs``, which document dedup shares.
 The reference itself ships ``dynamic_index=False`` variants
 (extract_json.py:583,624) — those are the semantics we match.
 """
@@ -129,7 +126,6 @@ def link_embedding_topk(
     dictionary: DataFrame,
     spark: SparkSession,
     accept: float = DEFAULT_ACCEPT,
-    max_broadcast: int = 2_000_000,
     embedder=None,
 ) -> DataFrame:
     """Residual mentions → top-1 cosine against broadcast label matrix.
@@ -144,22 +140,14 @@ def link_embedding_topk(
     ``SentenceTransformerEmbedder`` for a real model — the reference's
     ``[ml]``-extra seam (st_emb.py:17).
 
-    SCALE GUARD: a seed-KG dictionary broadcasts fine (2M labels × 64 dims
-    ≈ 512 MB float32 — the documented ceiling), but a corpus-derived
-    dictionary at 100 TB does not. Above ``max_broadcast`` rows this falls
-    back to the distributed MinHash-LSH join (``link_minhash_lsh``), whose
-    char-3-gram Jaccard is the blocking surrogate the reference itself uses
-    for long-tail entities.
+    SCALE: every (uri, label) row is collected to the driver and embedded
+    there. That collect is bounded by ``spark.driver.maxResultSize`` (Spark
+    default 1g), which fails an oversized dictionary with Spark's own error.
+    At every dictionary size a link means "nearest label by embedding cosine".
     """
     from kgpipe_spark.functions.embedders import get_default_embedder
 
     emb = embedder if embedder is not None else get_default_embedder()
-    over = dictionary.limit(max_broadcast + 1).count() > max_broadcast
-    if over:
-        linked_q = link_minhash_lsh(
-            mentions.select("query_text").distinct(), dictionary
-        ).filter(F.col("score") >= accept)
-        return mentions.join(linked_q, "query_text", "left")
     dict_rows = dictionary.select("uri", "label").collect()
     uris = [r["uri"] for r in dict_rows]
     labels = pd.Series([r["label"] for r in dict_rows])
@@ -190,74 +178,6 @@ def link_embedding_topk(
         "query_text", F.col("res.mapping").alias("mapping"), F.col("res.score").alias("score")
     )
     return mentions.join(F.broadcast(linked_q), "query_text", "left")
-
-
-# ---------------------------------------------------------------------------
-# MinHash-LSH long-tail candidates (MLlib)
-# ---------------------------------------------------------------------------
-
-
-def link_minhash_lsh(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    jaccard_threshold: float = 0.5,
-    num_hash_tables: int = 3,
-    keep_all: bool = False,
-) -> DataFrame:
-    """Fuzzy label candidates via MinHashLSH over char-3-gram count vectors.
-
-    Output: (query_text, mapping, score=1-jaccardDistance), top-1 per query
-    (Window rerank — LSH join output must be deduped to match the
-    reference's argmax semantics, SURVEY.md §4.2.2). With ``keep_all`` every
-    pair above threshold is returned (the edge-list form ``link_two_pass``
-    clusters on).
-    """
-    from pyspark.ml.feature import CountVectorizer, MinHashLSH, NGram
-    from pyspark.sql.window import Window
-
-    # char array via split on empty pattern (JVM-side), then MLlib NGram
-    def with_grams(df: DataFrame) -> DataFrame:
-        chars = F.filter(F.split(F.col("norm_text"), ""), lambda c: c != "")
-        g = NGram(n=3, inputCol="chars", outputCol="grams")
-        return g.transform(df.withColumn("chars", chars))
-
-    q = mentions.select("query_text").distinct().withColumn(
-        "norm_text", normalize_label(F.col("query_text"))
-    )
-    d = dictionary.select("uri", "label").dropDuplicates(["uri", "label"]).withColumn(
-        "norm_text", normalize_label(F.col("label"))
-    )
-    q_g = with_grams(q).filter(F.size("grams") > 0)
-    d_g = with_grams(d).filter(F.size("grams") > 0)
-
-    cv = CountVectorizer(inputCol="grams", outputCol="features", binary=True)
-    cv_model = cv.fit(d_g.select("grams").unionByName(q_g.select("grams")))
-    q_v = cv_model.transform(q_g).filter(F.expr("features IS NOT NULL"))
-    d_v = cv_model.transform(d_g)
-
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42)
-    model = lsh.fit(d_v)
-    pairs = model.approxSimilarityJoin(q_v, d_v, 1.0 - jaccard_threshold, distCol="dist")
-
-    flat = pairs.select(
-        F.col("datasetA.query_text").alias("query_text"),
-        F.col("datasetB.uri").alias("mapping"),
-        (1.0 - F.col("dist")).alias("score"),
-    )
-    if keep_all:
-        return flat
-    ranked = (
-        flat
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_text").orderBy(F.desc("score"), F.asc("mapping"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    return ranked
 
 
 # ---------------------------------------------------------------------------

@@ -38,14 +38,20 @@ RECORD_WINDOW = 50  # the driver records the first 50 registrations
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _load_record(path: str):
+    """Parse one CORRECTNESS_r*.json; a corrupt record raises, naming its file."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except ValueError as e:
+        raise ValueError(f"unreadable driver record {path}: {e}") from e
+
+
 def recorded_ever(root: str = _ROOT) -> set:
     """Union of query names the driver has ever recorded (CORRECTNESS_r*.json)."""
     names: set = set()
     for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            names |= set(json.load(open(p)))
-        except Exception:
-            pass
+        names |= set(_load_record(p))
     return names
 
 
@@ -53,12 +59,9 @@ def latest_recorded_round(root: str = _ROOT) -> dict:
     """name -> newest round number whose CORRECTNESS_r*.json contains it."""
     latest: dict = {}
     for p in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            rnd = int(os.path.basename(p).split("_r")[1].split(".")[0])
-            for n in json.load(open(p)):
-                latest[n] = max(latest.get(n, 0), rnd)
-        except Exception:
-            pass
+        rnd = int(os.path.basename(p).split("_r")[1].split(".")[0])
+        for n in _load_record(p):
+            latest[n] = max(latest.get(n, 0), rnd)
     return latest
 
 

@@ -72,3 +72,20 @@ def test_contract_errors_empty():
     assert preflight.RECORD_WINDOW == 50
     errors = preflight.contract_errors(entrymod)
     assert not errors, "\n".join(errors)
+
+
+def test_corrupt_driver_record_raises_naming_the_file(tmp_path):
+    """A corrupt CORRECTNESS_r*.json must fail the contract check loudly,
+    not silently drop its names from it."""
+    import pytest
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+    )
+    import preflight
+
+    (tmp_path / "CORRECTNESS_r01.json").write_text('{"kg_a": {}}')
+    (tmp_path / "CORRECTNESS_r99.json").write_text('{"kg_a": ')
+    for check in (preflight.recorded_ever, preflight.latest_recorded_round):
+        with pytest.raises(ValueError, match="CORRECTNESS_r99.json"):
+            check(str(tmp_path))

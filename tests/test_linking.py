@@ -4,7 +4,6 @@ from kgpipe_spark.operators.linking import (
     label_dictionary,
     link_exact,
     link_embedding_topk,
-    link_minhash_lsh,
     link_or_mint,
 )
 from kgpipe_spark.schemas import RDFS_LABEL, SKOS_ALT_LABEL
@@ -69,14 +68,6 @@ def test_link_embedding_topk(spark):
     assert out["totally unrelated zzz"][0] is None
 
 
-def test_link_minhash_lsh(spark):
-    d = label_dictionary(_kg(spark))
-    m = _mentions(spark, ["Director 1", "Directer 1"])  # typo variant
-    out = {r["query_text"]: r["mapping"] for r in link_minhash_lsh(m, d, jaccard_threshold=0.3).collect()}
-    assert out.get("Director 1") == "http://kg.org/person/d1"
-    assert out.get("Directer 1") == "http://kg.org/person/d1"
-
-
 def test_link_two_pass_collapses_near_identical_minted(spark):
     """Pass 2 (soft_metrics dynamic-index replacement): near-identical new
     surfaces collapse to one canonical minted URI; distinct surfaces don't."""
@@ -99,17 +90,22 @@ def test_link_two_pass_collapses_near_identical_minted(spark):
     assert out["Totally Other Thing"].startswith("http://kg.org/newE/")
 
 
-def test_link_embedding_topk_lsh_fallback(spark):
-    """Above max_broadcast the linker must route through the distributed
-    LSH join instead of collecting the dictionary."""
-    d = label_dictionary(_kg(spark))
-    m = _mentions(spark, ["Director 1", "zzz unknown zzz"])
-    out = {
-        r["query_text"]: r["mapping"]
-        for r in link_embedding_topk(m, d, spark, max_broadcast=1).collect()
-    }
-    assert out["Director 1"] == "http://kg.org/person/d1"
-    assert out["zzz unknown zzz"] is None
+def test_link_embedding_topk_plans_with_one_job(spark):
+    """Building the embedding linker's plan runs exactly one Spark job: the
+    dictionary collect. No size probe runs beside it."""
+    d = label_dictionary(_kg(spark)).localCheckpoint()
+    m = _mentions(spark, ["Director 1", "zzz"])
+
+    sc = spark.sparkContext
+    sc.setJobGroup("embedding-link-plan", "plan only")
+    try:
+        out = link_embedding_topk(m, d, spark)
+        jobs = sc.statusTracker().getJobIdsForGroup("embedding-link-plan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1
+    rows = {r["query_text"]: r["mapping"] for r in out.collect()}
+    assert rows == {"Director 1": "http://kg.org/person/d1", "zzz": None}
 
 
 def test_link_embedding_topk_pluggable_embedder(spark):

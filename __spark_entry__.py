@@ -1177,7 +1177,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         te = surface_triples_to_te_documents(
             extract_text_surface_triples(_text_corpus(s, d))
         )
-        # lineage cut: the rl chain (cosine blocking + fallback) references
+        # lineage cut: the rl chain (all-pairs cosine top-1) references
         # its own subtree several times, and every downstream stage references
         # `te`/`staging` 3-5×; without truncation Catalyst analyzes an
         # exponentially duplicated tree and the driver OOMs
@@ -1270,7 +1270,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # label_alias_embedding_el replaces the spotlight dictionary NER/NEL
         # of text_a: cosine-matrix argmax per surface against the KG's
         # geography labels, raw scores kept (thresholding happens inside
-        # te_documents_to_triples at entity_threshold)
+        # te_documents_to_triples at ENTITY_LINK_THRESHOLD)
         geo = kg1.filter(
             F.col("subject").startswith(NAT) | F.col("subject").startswith(REG)
         )
@@ -2752,7 +2752,7 @@ def oracle_sql() -> dict[str, str]:
     # relation-linker oracle: the TE predicate surfaces of this corpus are
     # exactly {{name, nation, segment, balance}}; replay the hashed-gram
     # cosine (exact int dot / sqrt — bit-identical doubles) over the same
-    # share-any-bin pair set as the small-target path and the
+    # share-any-bin pair set as te_construct._top1 and the
     # (cos desc, uri asc) argmax
     sql["kg_relation_link_top1"] = f"""
         WITH surfaces(id, text) AS (VALUES
@@ -3567,8 +3567,8 @@ def oracle_sql() -> dict[str, str]:
     def _text_staging_full(kgname: str, p: str) -> str:
         """text_b staging: closed-form OpenIE surfaces → embedding EL
         (cosine argmax per surface vs {kgname}'s geography labels via the
-        share-any-bin small-target pair set — label_alias_embedding_el's
-        dictionary-sized fast path) → embedding RL against
+        share-any-bin pair set of label_alias_embedding_el's
+        ``te_construct._top1``) → embedding RL against
         director/writer ONLY (the 'stars' surface stays unlinked and mints
         prop/stars) → FULL te_documents_to_triples (construct.py without the
         mappings-only filter): minted predicates/subjects, label rows,
@@ -3787,7 +3787,7 @@ def oracle_sql() -> dict[str, str]:
 
     # text_b staging (pipeline.conf:112-124 through construct_rdf_from_te_json):
     # OpenIE surfaces → embedding EL (cosine argmax vs the seed's geography
-    # labels, share-any-bin small-target pair set) → embedding RL
+    # labels, share-any-bin pair set of te_construct._top1) → embedding RL
     # (director/writer only — the
     # 'stars' surface mints prop/stars) → FULL TE construct with minted
     # subjects/predicates, labels and domain/range types
@@ -4528,18 +4528,18 @@ def _sql_embed(p: str, src: str) -> str:
 
 def _sql_cosine_binpairs(a: str, e: str, out: str) -> str:
     """CTE chain: {out}(lid, rid, cos) — the exact pair set and scores of
-    ``te_construct._blocked_top1``'s small-target path (``soft.
-    cosine_all_pairs``): every (left, right) pair sharing at least one HASH
-    BIN, scored by the same integer bin dot / sqrt. The Spark side joins the
+    ``te_construct._top1`` (``soft.cosine_all_pairs``): every (left, right)
+    pair sharing at least one HASH BIN, scored by the same integer bin
+    dot / sqrt. The Spark side joins the
     64-bin vectors directly (no gram-candidate restriction), so a pair that
     shares a bin through hash collision alone carries a nonzero score there;
     a gram-blocked oracle candidate set would EXCLUDE such pairs and can
     disagree on the argmax for mentions whose genuine candidates are weak.
     Replaying the identical bin join keeps the pair sets — and therefore
-    every top-1 — bit-identical. Only valid where the target side is
-    structurally dictionary-sized (≤ max_block at EVERY scale factor:
-    ontology properties, nation/region geography labels), which is what
-    guarantees the Spark side takes the small-target path."""
+    every top-1 — bit-identical. The target sides replayed here are
+    structurally dictionary-sized at every scale factor (ontology
+    properties, nation/region geography labels), as ``_top1``'s broadcast
+    of the target vectors requires."""
     return f"""
 {out} AS MATERIALIZED (
   SELECT lb.id AS lid, rb.id AS rid,

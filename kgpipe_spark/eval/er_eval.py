@@ -6,12 +6,17 @@
  - ``duplicate_entities`` mirrors ``eval_duplicates``
    (`src/kgpipe_eval/metrics/duplicates.py:21-42`): >1 actual entity aligned
    to the same reference entity.
+
+Both matching evaluators count with ``alignment.set_counts`` over the
+(id_1, id_2) pair and project with the f1 form their oracle fixes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgpipe_spark.eval.alignment import prf_from_counts, prf_from_rates, set_counts
 
 
 def evaluate_matching(predicted: DataFrame, gold_clusters: DataFrame) -> DataFrame:
@@ -25,31 +30,11 @@ def evaluate_matching(predicted: DataFrame, gold_clusters: DataFrame) -> DataFra
         .join(g.alias("b"), "cluster_id")
         .filter(F.col("a.e") < F.col("b.e"))
         .select(F.col("a.e").alias("id_1"), F.col("b.e").alias("id_2"))
-        .distinct()
     )
     pred_pairs = predicted.select(
         F.least("id_1", "id_2").alias("id_1"), F.greatest("id_1", "id_2").alias("id_2")
-    ).distinct()
-
-    # ONE job: full-outer + single agg instead of three count jobs
-    row = (
-        pred_pairs.withColumn("_p", F.lit(1))
-        .join(gold_pairs.withColumn("_g", F.lit(1)), ["id_1", "id_2"], "full_outer")
-        .agg(
-            F.sum(F.when(F.col("_p").isNotNull() & F.col("_g").isNotNull(), 1).otherwise(0)).alias("tp"),
-            F.sum(F.when(F.col("_p").isNotNull() & F.col("_g").isNull(), 1).otherwise(0)).alias("fp"),
-            F.sum(F.when(F.col("_p").isNull() & F.col("_g").isNotNull(), 1).otherwise(0)).alias("fn"),
-        )
-        .collect()[0]
     )
-    tp, fp, fn = int(row["tp"] or 0), int(row["fp"] or 0), int(row["fn"] or 0)
-    precision = tp / (tp + fp) if (tp + fp) else 0.0
-    recall = tp / (tp + fn) if (tp + fn) else 0.0
-    f1 = 2 * precision * recall / (precision + recall) if (precision + recall) else 0.0
-    return predicted.sparkSession.createDataFrame(
-        [(tp, fp, fn, round(precision, 6), round(recall, 6), round(f1, 6))],
-        "tp bigint, fp bigint, fn bigint, precision double, recall double, f1 double",
-    )
+    return prf_from_rates(set_counts(pred_pairs, gold_pairs, ["id_1", "id_2"]))
 
 
 def duplicate_entities(alignment: DataFrame) -> DataFrame:
@@ -104,22 +89,11 @@ def evaluate_relation_matching(
         .select(
             F.least("id_1", "id_2").alias("id_1"), F.greatest("id_1", "id_2").alias("id_2")
         )
-        .distinct()
     )
+    # a predicted pair whose URIs share a local name is judged as if it were
+    # gold: tp = rel ∩ (gold ∪ same_name), fp = the rest of rel, and fn =
+    # gold \ rel, since same_name ⊆ rel adds nothing to it
+    expected = rel.filter(suffix(F.col("id_1")) == suffix(F.col("id_2")))
     if gold_clusters is not None:
-        gold = cluster_pairs(gold_clusters).withColumn("_g", F.lit(1))
-    else:
-        gold = rel.limit(0).withColumn("_g", F.lit(1))
-    judged = rel.join(gold, ["id_1", "id_2"], "left").withColumn(
-        "_ok", (suffix(F.col("id_1")) == suffix(F.col("id_2"))) | F.col("_g").isNotNull()
-    )
-    tp = judged.filter(F.col("_ok")).count()
-    fp = judged.filter(~F.col("_ok")).count()
-    fn = gold.join(rel, ["id_1", "id_2"], "left_anti").count()
-    precision = tp / (tp + fp) if (tp + fp) else 0.0
-    recall = tp / (tp + fn) if (tp + fn) else 0.0
-    f1 = 2 * tp / (2 * tp + fp + fn) if (2 * tp + fp + fn) else 0.0
-    return predicted.sparkSession.createDataFrame(
-        [(tp, fp, fn, round(precision, 6), round(recall, 6), round(f1, 6))],
-        "tp bigint, fp bigint, fn bigint, precision double, recall double, f1 double",
-    )
+        expected = expected.unionByName(cluster_pairs(gold_clusters))
+    return prf_from_counts(set_counts(rel, expected, ["id_1", "id_2"]))

@@ -7,7 +7,8 @@ metric rows into one long-table EvaluationReport that the CLI renders
 statistical / semantic / reference aspects.
 
 Spark-first: every metric is a 1-row lazy aggregation over the existing
-oracle-gated operators' plans, unioned into ONE DataFrame — no driver-side
+oracle-gated operators' plans (the reference aspect is ``fact_alignment``
+itself, not a copy of its math), unioned into ONE DataFrame — no driver-side
 loop collects intermediate metrics (the reference evaluates aspect-by-aspect
 in Python; here Catalyst sees the whole report as a single plan and shares
 the scan of the KG across the aggregations).
@@ -18,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgpipe_spark.eval.alignment import fact_alignment
 from kgpipe_spark.eval.semantic import (
     cardinality_violations,
     datatype_violations,
@@ -26,8 +28,6 @@ from kgpipe_spark.eval.semantic import (
     range_violations,
 )
 from kgpipe_spark.schemas import RDF_TYPE
-
-_ROW = "aspect string, metric string, value double"
 
 
 def _metric(df: DataFrame, aspect: str, metric: str) -> DataFrame:
@@ -46,7 +46,8 @@ def eval_report(kg: DataFrame, gold: DataFrame, ontology: DataFrame) -> DataFram
     - ``semantic``: violation counts from the ontology validators
       (semantic.py / reference ``semantic.py`` checkers).
     - ``reference``: exact fact alignment vs ``gold`` — tp/fp/fn and
-      precision/recall/f1 (alignment.py / reference ``reference.py``).
+      precision/recall/f1, the 1-row ``alignment.fact_alignment`` plan
+      stacked into six rows (reference ``reference.py``).
     """
     # --- statistical -------------------------------------------------------
     entities = kg.select(F.col("subject").alias("e")).union(
@@ -74,44 +75,11 @@ def eval_report(kg: DataFrame, gold: DataFrame, ontology: DataFrame) -> DataFram
     ]
 
     # --- reference (exact fact alignment, lazy P/R/F1) ---------------------
-    key = ["subject", "predicate", "object_lex", "object_kind"]
-    a = kg.select(*key).distinct().withColumn("_a", F.lit(1))
-    e = gold.select(*key).distinct().withColumn("_e", F.lit(1))
-    counts = a.join(e, key, "full_outer").agg(
-        F.sum(F.when(F.col("_a").isNotNull() & F.col("_e").isNotNull(), 1).otherwise(0))
-        .cast("double")
-        .alias("tp"),
-        F.sum(F.when(F.col("_a").isNotNull() & F.col("_e").isNull(), 1).otherwise(0))
-        .cast("double")
-        .alias("fp"),
-        F.sum(F.when(F.col("_a").isNull() & F.col("_e").isNotNull(), 1).otherwise(0))
-        .cast("double")
-        .alias("fn"),
-    )
-    prf = counts.select(
-        "tp",
-        "fp",
-        "fn",
-        F.when(F.col("tp") + F.col("fp") > 0, F.col("tp") / (F.col("tp") + F.col("fp")))
-        .otherwise(F.lit(0.0))
-        .alias("p"),
-        F.when(F.col("tp") + F.col("fn") > 0, F.col("tp") / (F.col("tp") + F.col("fn")))
-        .otherwise(F.lit(0.0))
-        .alias("r"),
-    ).select(
-        "tp",
-        "fp",
-        "fn",
-        F.round("p", 6).alias("p"),
-        F.round("r", 6).alias("r"),
-        F.when(F.col("p") + F.col("r") > 0, F.round(2 * F.col("p") * F.col("r") / (F.col("p") + F.col("r")), 6))
-        .otherwise(F.lit(0.0))
-        .alias("f1"),
-    )
-    ref = prf.select(
+    ref = fact_alignment(kg, gold).select(
         F.expr(
-            "stack(6, 'tp', tp, 'fp', fp, 'fn', fn, "
-            "'precision', p, 'recall', r, 'f1', f1) AS (metric, value)"
+            "stack(6, 'tp', CAST(tp AS DOUBLE), 'fp', CAST(fp AS DOUBLE), "
+            "'fn', CAST(fn AS DOUBLE), 'precision', precision, 'recall', recall, "
+            "'f1', f1) AS (metric, value)"
         )
     ).select(F.lit("reference").alias("aspect"), "metric", "value")
 

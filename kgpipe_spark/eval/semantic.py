@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgpipe_spark.eval.alignment import prf_from_counts, set_counts
 from kgpipe_spark.schemas import RDF_TYPE
 
 
@@ -212,29 +213,6 @@ def relation_direction_counts(triples: DataFrame, ontology: DataFrame) -> DataFr
     )
 
 
-def _prf_counts(expected: DataFrame, found: DataFrame, col: str) -> DataFrame:
-    """One row (tp, fp, fn, precision, recall, f1) from two single-column
-    distinct sets."""
-    e = expected.select(col).distinct().withColumn("_e", F.lit(1))
-    a = found.select(col).distinct().withColumn("_a", F.lit(1))
-    j = a.join(e, col, "full_outer")
-    agg = j.agg(
-        F.sum(F.when(F.col("_a").isNotNull() & F.col("_e").isNotNull(), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("_a").isNotNull() & F.col("_e").isNull(), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(F.col("_a").isNull() & F.col("_e").isNotNull(), 1).otherwise(0)).alias("fn"),
-    )
-    return agg.select(
-        F.coalesce("tp", F.lit(0)).cast("bigint").alias("tp"),
-        F.coalesce("fp", F.lit(0)).cast("bigint").alias("fp"),
-        F.coalesce("fn", F.lit(0)).cast("bigint").alias("fn"),
-        F.round(F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1)), 6).alias("precision"),
-        F.round(F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1)), 6).alias("recall"),
-        F.round(
-            2 * F.col("tp") / F.greatest(2 * F.col("tp") + F.col("fp") + F.col("fn"), F.lit(1)), 6
-        ).alias("f1"),
-    )
-
-
 _OWL_NS = "http://www.w3.org/2002/07/owl#"
 _RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 _RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
@@ -250,7 +228,7 @@ def ontology_class_coverage(triples: DataFrame, expected_classes: DataFrame) -> 
         .filter(~F.col("cls").startswith(_OWL_NS))
     )
     expected = expected_classes.select("cls").filter(~F.col("cls").startswith(_OWL_NS))
-    return _prf_counts(expected, found, "cls")
+    return prf_from_counts(set_counts(found, expected, ["cls"]))
 
 
 def ontology_relation_coverage(triples: DataFrame, ontology: DataFrame) -> DataFrame:
@@ -266,7 +244,7 @@ def ontology_relation_coverage(triples: DataFrame, ontology: DataFrame) -> DataF
 
     found = triples.select(F.col("predicate").alias("rel")).filter(keep("rel"))
     expected = ontology.select(F.col("uri").alias("rel")).filter(keep("rel"))
-    return _prf_counts(expected, found, "rel")
+    return prf_from_counts(set_counts(found, expected, ["rel"]))
 
 
 def ontology_namespace_coverage(triples: DataFrame, expected_ns: DataFrame) -> DataFrame:
@@ -287,4 +265,4 @@ def ontology_namespace_coverage(triples: DataFrame, expected_ns: DataFrame) -> D
         )
         .filter(F.col("ns") != "")
     )
-    return _prf_counts(expected_ns.select("ns"), found, "ns")
+    return prf_from_counts(set_counts(found, expected_ns, ["ns"]))

@@ -18,9 +18,13 @@ Reimplements the reference's embedding-based acceptance math:
    ``source_entity_precision_fuzzy`` mirror ``evaluate_source_entity_*``
    (`integration_eval.py:119-250`).
 
+Both soft P/R/F1 rows end in ``alignment.prf_from_counts`` (SoftE counts
+with ``alignment.set_counts``), so empty inputs give 0 and 0.0, not nulls.
+
 Engine-symmetric embedding design (the point of this module): instead of
-float32 numpy vectors behind a pandas UDF (``linking.hash_embed``), metrics
-use a *sparse integer* representation computed entirely JVM-side —
+float32 numpy vectors behind a pandas UDF
+(``functions.embedders.HashedGramEmbedder``), metrics use a *sparse
+integer* representation computed entirely JVM-side —
 char-3-grams → md5 → signed 64-bin counts — so the DuckDB oracle replicates
 every intermediate bit-exactly:
 
@@ -47,13 +51,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kgpipe_spark.eval.alignment import TRIPLE_KEY, prf_from_counts, set_counts
 from kgpipe_spark.schemas import RDFS_LABEL
 
 SOFT_THRESHOLD = 0.95  # soft_metrics.py:15-16, integration_eval.py:22
 EMBED_BINS = 64
 DEFAULT_MAX_BLOCK = 1000
-
-_KEY = ["subject", "predicate", "object_lex", "object_kind"]
 
 
 def clean_label(c: F.Column) -> F.Column:
@@ -68,8 +71,8 @@ def clean_label(c: F.Column) -> F.Column:
 
 def gram_bins(df: DataFrame, id_col: str, text_col: str, bins: int = EMBED_BINS) -> DataFrame:
     """(id, bin, v): signed char-3-gram counts, the sparse integer form of
-    ``linking._hash_embed_numpy`` (same md5 first-4-bytes-little-endian hash,
-    same sign bit 31, same modulus)."""
+    ``embedders.HashedGramEmbedder.encode`` (same md5
+    first-4-bytes-little-endian hash, same sign bit 31, same modulus)."""
     s = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
     d = (
         df.select(F.col(id_col).alias("id"), s.alias("s"))
@@ -116,29 +119,25 @@ def cosine_pairs(
     left: DataFrame,
     right: DataFrame,
     max_block: int = DEFAULT_MAX_BLOCK,
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """(left.id, right.id, cos) candidate pairs with exact cosine.
 
-    left/right: (id, text). With ``prefix_filter`` (the default), candidate
-    generation is a PREFIX FILTER with a global rarity order (ppjoin-style):
-    each string keeps only its ``⌊n/10⌋+2`` globally-rarest grams (rank by
-    total frequency, then gram), and a pair is a candidate iff the kept
-    prefixes intersect — for the near-identical strings a 0.95 threshold
-    accepts, the gram sets overlap ~90%+, so their rarity prefixes must
-    collide. This keeps candidates LINEAR in corpus size where
-    share-any-gram blocking grows quadratically in every mid-frequency
-    gram's block (measured: minutes vs seconds at 10× data).
+    left/right: (id, text). Candidate generation is a PREFIX FILTER with a
+    global rarity order (ppjoin-style): each string keeps only its
+    ``⌊n/10⌋+2`` globally-rarest grams (rank by total frequency, then gram),
+    and a pair is a candidate iff the kept prefixes intersect — for the
+    near-identical strings a 0.95 threshold accepts, the gram sets overlap
+    ~90%+, so their rarity prefixes must collide. This keeps candidates
+    LINEAR in corpus size where share-any-gram blocking grows quadratically
+    in every mid-frequency gram's block (measured: minutes vs seconds at 10×
+    data).
 
-    ``prefix_filter=False`` falls back to share-any-(non-hot)-gram blocking.
-    REQUIRED for top-1/argmax consumers (label_alias_embedding_rl links
-    every surface to its best property with NO threshold): the rarity
+    Only valid under a high (≥0.9) similarity cut downstream: the rarity
     prefix of two moderately-similar strings is dominated by exactly the
-    grams they DON'T share, so it can miss the argmax pair entirely — only
-    use the prefix path when a high (≥0.9) similarity cut is applied
-    downstream. Grams hotter than ``max_block`` on either side are dropped
-    from candidate generation in both modes. The dot product itself is
-    exact over all 64 bins.
+    grams they DON'T share, so it can miss a weaker argmax pair. Top-1
+    consumers with no cut use ``cosine_all_pairs``. Grams hotter than
+    ``max_block`` on either side are dropped from candidate generation. The
+    dot product itself is exact over all 64 bins.
     """
     lg = _grams_distinct(left, "id", "text")
     rg = _grams_distinct(right, "id", "text")
@@ -167,10 +166,8 @@ def cosine_pairs(
             .select("id", "g")
         )
 
-    lg_c = prefix(lg) if prefix_filter else lg.join(keep.select("g"), "g")
-    rg_c = prefix(rg) if prefix_filter else rg.join(keep.select("g"), "g")
     cand = (
-        lg_c.join(rg_c.withColumnRenamed("id", "rid"), "g")
+        prefix(lg).join(prefix(rg).withColumnRenamed("id", "rid"), "g")
         .select(F.col("id").alias("lid"), "rid")
         .distinct()
     )
@@ -207,8 +204,9 @@ def cosine_all_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
     blocking. Use only when one side is small (e.g. ontology-sized): the
     small side's binned vectors are broadcast into the join.
 
-    This is the recall-complete fallback for top-1 consumers when blocking
-    drops a string whose grams are all hotter than ``max_block``."""
+    Every pair sharing at least one hash bin gets a row, so a top-1 over it
+    is argmax-complete; the TE linkers' top-1 (``te_construct._top1``) is a
+    window over this pair set, which the oracle replays bin for bin."""
     lv = gram_bins(left, "id", "text")
     rv = gram_bins(right, "id", "text")
     dots = (
@@ -278,30 +276,6 @@ def soft_entity_mapping(
 # ---------------------------------------------------------------------------
 
 
-def _one_pass_alignment(a: DataFrame, e: DataFrame) -> DataFrame:
-    """tp/fp/fn + P/R/F1 in ONE job: full-outer join on the triple key
-    (fixes the 3-count-job pattern flagged in round 1)."""
-    a = a.select(*_KEY).distinct().withColumn("_a", F.lit(1))
-    e = e.select(*_KEY).distinct().withColumn("_e", F.lit(1))
-    j = a.join(e, _KEY, "full_outer")
-    agg = j.agg(
-        F.sum(F.when(F.col("_a").isNotNull() & F.col("_e").isNotNull(), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("_a").isNotNull() & F.col("_e").isNull(), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(F.col("_a").isNull() & F.col("_e").isNotNull(), 1).otherwise(0)).alias("fn"),
-    )
-    return agg.select(
-        F.col("tp").cast("bigint").alias("tp"),
-        F.col("fp").cast("bigint").alias("fp"),
-        F.col("fn").cast("bigint").alias("fn"),
-        F.round(F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1)), 6).alias("precision"),
-        F.round(F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1)), 6).alias("recall"),
-        F.round(
-            2 * F.col("tp") / F.greatest(2 * F.col("tp") + F.col("fp") + F.col("fn"), F.lit(1)),
-            6,
-        ).alias("f1"),
-    )
-
-
 def fact_alignment_soft_entities(
     actual: DataFrame,
     expected: DataFrame,
@@ -309,7 +283,8 @@ def fact_alignment_soft_entities(
     max_block: int = DEFAULT_MAX_BLOCK,
 ) -> DataFrame:
     """SoftE (`soft_metrics.py:87-101`): map actual subjects AND uri objects
-    through the soft mapping, then exact alignment."""
+    through the soft mapping, then exact alignment (``set_counts`` over the
+    triple key)."""
     # the mapping cosine chain feeds both the subject and the object rewrite
     # joins — materialize it once
     mapping = soft_entity_mapping(actual, expected, threshold, max_block).select(
@@ -335,7 +310,7 @@ def fact_alignment_soft_entities(
             "object_kind",
         )
     )
-    return _one_pass_alignment(rewritten, expected)
+    return prf_from_counts(set_counts(rewritten, expected, TRIPLE_KEY))
 
 
 # ---------------------------------------------------------------------------
@@ -438,27 +413,16 @@ def fact_alignment_soft_values(
     per_actual = scored.groupBy("subject", "predicate", "value").agg(
         F.max("cos").alias("best")
     )
+    hit = F.coalesce(F.col("best") > threshold, F.lit(False))
     counts = per_actual.agg(
-        F.sum(F.when(F.col("best") > threshold, 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("best") > threshold, 0).otherwise(1)).alias("fp"),
+        F.count(F.when(hit, 1)).alias("tp"), F.count(F.when(~hit, 1)).alias("fp")
     )
     sp_actual = ga.select("subject", "predicate").distinct()
     fn_df = (
         ge.join(sp_actual, ["subject", "predicate"], "left_anti")
         .agg(F.count(F.lit(1)).alias("fn"))
     )
-    out = counts.crossJoin(fn_df)
-    return out.select(
-        F.coalesce(F.col("tp"), F.lit(0)).cast("bigint").alias("tp"),
-        F.coalesce(F.col("fp"), F.lit(0)).cast("bigint").alias("fp"),
-        F.col("fn").cast("bigint").alias("fn"),
-        F.round(F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1)), 6).alias("precision"),
-        F.round(F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1)), 6).alias("recall"),
-        F.round(
-            2 * F.col("tp") / F.greatest(2 * F.col("tp") + F.col("fp") + F.col("fn"), F.lit(1)),
-            6,
-        ).alias("f1"),
-    )
+    return prf_from_counts(counts.crossJoin(fn_df))
 
 
 # ---------------------------------------------------------------------------

@@ -3,10 +3,11 @@
 The reference mints URIs two ways:
  - ``md5(json.dumps(obj))`` for JSON-structure entities
    (`/root/reference/src/kgpipe_tasks/construction/json_to_rdf.py:197,325`,
-   `extract_json.py:480-481`)
+   `extract_json.py:480-481`) — minted inside ``operators.extract``, where
+   the JSON is parsed
  - ``sha256(surface_form)`` for new entities from text surfaces
    (`/root/reference/src/kgpipe_tasks/common/benchutils.py:10-14`,
-   `construct.py:116-177`)
+   `construct.py:116-177`) — ``mint_uri_sha256``
 
 ``stable_order_key`` pins the engine's deterministic "first value"
 (SURVEY.md §4.2.4): the reference iterates rdflib's unordered set, so its
@@ -19,10 +20,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from kgpipe_spark.schemas import KG_NS
-
-
-def mint_uri_md5(payload: Column, namespace: str = KG_NS, prefix: str = "e/") -> Column:
-    return F.concat(F.lit(namespace + prefix), F.md5(payload))
 
 
 def mint_uri_sha256(surface: Column, namespace: str = KG_NS, prefix: str = "newE/") -> Column:

@@ -14,10 +14,11 @@ accept (0.70). Our decomposition keeps the corpus-wide parts relational:
                              *broadcast* dictionary matrix; top-1 ≥ threshold
                              (mirrors extract_json.py:93-96 argmax ≥ 0.70)
 
-Embeddings are feature-flagged deterministic hashed char-ngram vectors
-(`hash_embed``) so tests are reproducible without ML deps — mirroring the
-reference's optional ``[ml]`` extra (`pyproject.toml:23-25`). A real
-sentence-transformer can be slotted in by swapping ``embed_fn``.
+Embeddings default to deterministic hashed char-ngram vectors
+(``functions.embedders.HashedGramEmbedder``) so tests are reproducible
+without ML deps — mirroring the reference's optional ``[ml]`` extra
+(`pyproject.toml:23-25`). A real sentence-transformer can be slotted in by
+passing ``embedder=``.
 
 Per-key memoization in the reference (extract_json.py:145-168) maps to
 ``distinct()`` before the expensive UDF + join back after (relational CSE).
@@ -35,13 +36,10 @@ The reference itself ships ``dynamic_index=False`` variants
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, FloatType
 
 from kgpipe_spark.functions.hashing import mint_uri_sha256
 from kgpipe_spark.functions.strings import normalize_label
@@ -49,7 +47,6 @@ from kgpipe_spark.operators.dedup import minhash_token_signatures, minhash_verif
 from kgpipe_spark.schemas import RDFS_LABEL, SKOS_ALT_LABEL
 
 DEFAULT_ACCEPT = 0.70  # extract_json.py:23 ENTITY_ACCEPT
-EMBED_DIM = 64
 
 
 # ---------------------------------------------------------------------------
@@ -94,26 +91,6 @@ def link_exact(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
         F.col("mapping"),
         F.when(F.col("mapping").isNotNull(), F.lit(1.0)).otherwise(F.lit(None).cast("double")).alias("score"),
     )
-
-
-# ---------------------------------------------------------------------------
-# deterministic hashed embeddings (test-mode embedder)
-# ---------------------------------------------------------------------------
-
-
-def _hash_embed_numpy(texts: "pd.Series", dim: int = EMBED_DIM) -> np.ndarray:
-    """Char-3-gram hashed embedding, L2-normalized. Deterministic, no deps.
-    (Kept as the module-level fast path; the pluggable provider seam lives
-    in ``functions.embedders`` — this is ``HashedGramEmbedder.encode``.)"""
-    from kgpipe_spark.functions.embedders import HashedGramEmbedder
-
-    return HashedGramEmbedder(dim).encode(texts)
-
-
-@F.pandas_udf(ArrayType(FloatType()))  # type: ignore[call-overload]
-def hash_embed(texts: pd.Series) -> pd.Series:
-    mat = _hash_embed_numpy(texts)
-    return pd.Series(list(mat))
 
 
 # ---------------------------------------------------------------------------

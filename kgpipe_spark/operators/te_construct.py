@@ -17,24 +17,39 @@ Reimplements ``construct_rdf_from_te_json``
 
 Everything is explode + broadcast joins — per-document arrays become rows,
 linking is corpus-wide relational, then triples are assembled back.
+
+The TE linkers (dictionary, embedding EL, embedding RL) all append their
+TE_Pairs through ``_append_links``; the two embedding linkers share
+``_top1``, a window over ``eval.soft.cosine_all_pairs``. Building a linker's
+plan runs no Spark job. Empty TE arrays are typed by ``schemas.TE_PAIR`` /
+``TE_CHAIN``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
+from pyspark.sql.window import Window
 
+from kgpipe_spark.eval.soft import cosine_all_pairs
 from kgpipe_spark.functions.hashing import mint_uri_sha256
 from kgpipe_spark.functions.strings import normalize_label
+from kgpipe_spark.operators.linking import label_dictionary, link_exact
 from kgpipe_spark.schemas import (
     KG_NS,
     RDF_TYPE,
     RDFS_LABEL,
+    TE_CHAIN,
+    TE_PAIR,
+    TE_TRIPLE,
     XSD_STRING,
 )
 
 ENTITY_LINK_THRESHOLD = 0.5  # construct.py:31
 PREDICATE_LINK_THRESHOLD = 0.3  # construct.py:32
+JSON_DOC_NS = KG_NS + "json/"  # document subjects: <JSON_DOC_NS><filename stem>
+JSON_MINT_NS = "http://example.org/"  # nested objects: <JSON_MINT_NS>sha256(json)
 
 
 def aggregate_te_documents(*te_docs: DataFrame) -> DataFrame:
@@ -112,12 +127,7 @@ def filter_te_entity_links(te_docs: DataFrame, uri_map: DataFrame) -> DataFrame:
     )
     return te_docs.drop("links").join(regrouped, "doc_id", "left").withColumn(
         "links",
-        F.coalesce(
-            F.col("links"),
-            F.array().cast(
-                "array<struct<span:string,mapping:string,link_type:string,score:double>>"
-            ),
-        ),
+        F.coalesce(F.col("links"), F.array().cast(ArrayType(TE_PAIR))),
     )
 
 
@@ -139,8 +149,6 @@ def _link_map(te_docs: DataFrame, link_type: str, threshold: float) -> DataFrame
     (construct.py:61-105 `lower()`); best link per surface wins
     (max score, deterministic tiebreak).
     """
-    from pyspark.sql.window import Window
-
     links = (
         te_docs.select("doc_id", F.explode("links").alias("l"))
         .filter((F.col("l.link_type") == link_type) & (F.col("l.score") >= threshold))
@@ -160,13 +168,11 @@ def _link_map(te_docs: DataFrame, link_type: str, threshold: float) -> DataFrame
 
 
 def te_documents_to_triples(
-    te_docs: DataFrame,
-    ontology: DataFrame,
-    entity_threshold: float = ENTITY_LINK_THRESHOLD,
-    predicate_threshold: float = PREDICATE_LINK_THRESHOLD,
-    mappings_only: bool = False,
+    te_docs: DataFrame, ontology: DataFrame, mappings_only: bool = False
 ) -> DataFrame:
-    """TE_Documents → triples. ``mappings_only=True`` mirrors
+    """TE_Documents → triples, accepting entity links at
+    ``ENTITY_LINK_THRESHOLD`` and predicate links at
+    ``PREDICATE_LINK_THRESHOLD``. ``mappings_only=True`` mirrors
     ``construct_rdf_from_te_json_mappings_only`` (construct.py:300-330):
     only triples whose predicate linked to the ontology are emitted."""
     spark = te_docs.sparkSession
@@ -193,8 +199,8 @@ def te_documents_to_triples(
         )
 
     # 2. links
-    ent_links = _link_map(te_docs, "entity", entity_threshold)
-    pred_links = _link_map(te_docs, "predicate", predicate_threshold)
+    ent_links = _link_map(te_docs, "entity", ENTITY_LINK_THRESHOLD)
+    pred_links = _link_map(te_docs, "predicate", PREDICATE_LINK_THRESHOLD)
 
     for side, out in (("subj_surface", "subj_uri"), ("obj_surface", "obj_mapping")):
         el = ent_links.select(
@@ -332,19 +338,16 @@ def te_documents_to_triples(
 # ---------------------------------------------------------------------------
 
 
-def construct_te_document_from_json(
-    corpus: DataFrame,
-    doc_ns: str = KG_NS + "json/",
-    mint_ns: str = "http://example.org/",
-) -> DataFrame:
+def construct_te_document_from_json(corpus: DataFrame) -> DataFrame:
     """JSON-lang blobs → TE_Documents.
 
     Mirrors ``construct_te_document_from_json`` /
     ``__extract_data_filenameUri``
     (`/root/reference/src/kgpipe_tasks/construction/json_processing.py:74-127,
-    303-310`): the document subject is ``<doc_ns><filename-stem>``, nested
-    dicts mint ``<mint_ns>sha256(json.dumps(obj, sort_keys=True))``, lists
-    recurse with the parent key, primitives attach to the parent subject.
+    303-310`): the document subject is ``<JSON_DOC_NS><filename-stem>``,
+    nested dicts mint
+    ``<JSON_MINT_NS>sha256(json.dumps(obj, sort_keys=True))``, lists recurse
+    with the parent key, primitives attach to the parent subject.
     Span fields follow json_processing.py:84-100: http-prefixed surfaces get
     ``mapping``, others get ``text``; start=0, end=len(surface).
 
@@ -354,13 +357,10 @@ def construct_te_document_from_json(
     import json
 
     import pandas as pd
-    from pyspark.sql.types import ArrayType
-
-    from kgpipe_spark.schemas import TE_TRIPLE
 
     def _subject(data) -> str:
         payload = json.dumps(data, sort_keys=True)
-        return mint_ns + hashlib.sha256(payload.encode()).hexdigest()
+        return JSON_MINT_NS + hashlib.sha256(payload.encode()).hexdigest()
 
     def _extract(data, parent_key, parent_subject, out):
         if isinstance(data, dict):
@@ -395,9 +395,9 @@ def construct_te_document_from_json(
                 if isinstance(obj, dict):
                     # top level: keys attach to the filename URI directly
                     for key, value in obj.items():
-                        _extract(value, key, doc_ns + doc_id, triplets)
+                        _extract(value, key, JSON_DOC_NS + doc_id, triplets)
                 elif isinstance(obj, list):
-                    _extract(obj, None, doc_ns + doc_id, triplets)
+                    _extract(obj, None, JSON_DOC_NS + doc_id, triplets)
             except (ValueError, TypeError):
                 pass
             results.append(
@@ -423,8 +423,8 @@ def construct_te_document_from_json(
             "doc_id",
             F.lit("").alias("text"),
             extract_te(F.col("doc_id"), F.col("content")).alias("triples"),
-            F.array().cast("array<struct<main:string,aliases:array<struct<start:int,end:int,surface_form:string,text:string,mapping:string>>>>").alias("chains"),
-            F.array().cast("array<struct<span:string,mapping:string,link_type:string,score:double>>").alias("links"),
+            F.array().cast(ArrayType(TE_CHAIN)).alias("chains"),
+            F.array().cast(ArrayType(TE_PAIR)).alias("links"),
         )
     )
 
@@ -473,59 +473,32 @@ def surface_triples_to_te_documents(surfaces: DataFrame) -> DataFrame:
         "doc_id",
         F.lit("").alias("text"),
         "triples",
-        F.array().cast(
-            "array<struct<main:string,aliases:array<struct<start:int,end:int,surface_form:string,text:string,mapping:string>>>>"
-        ).alias("chains"),
-        F.array().cast(
-            "array<struct<span:string,mapping:string,link_type:string,score:double>>"
-        ).alias("links"),
+        F.array().cast(ArrayType(TE_CHAIN)).alias("chains"),
+        F.array().cast(ArrayType(TE_PAIR)).alias("links"),
     )
 
 
-def link_te_entities_dictionary(
-    te_docs: DataFrame, dictionary: DataFrame, score: float = 1.0
-) -> DataFrame:
-    """Append entity links for triple surfaces whose NORMALIZED form exactly
-    matches a dictionary label.
-
-    Native replacement for the ``dbpedia_spotlight_ner_nel`` +
-    ``dbpedia_spotlight_exchange`` stages
-    (`/root/reference/src/kgpipe_tasks/text_processing/entity_linking/spotlight_entity_linking.py:51,143`,
-    pipeline.conf:103-104): spotlight's surface→DBpedia-URI annotations
-    become exact-label hits against a KG label dictionary
-    (``label_dictionary(kg)`` → (uri, label, norm_label)); ambiguous labels
-    resolve to the min URI, hits get the fixed annotator confidence.
-
-    SCALE: distinct surfaces per doc → broadcast join on the (small)
-    dictionary → per-doc re-aggregation; no driver collect.
-    """
-    surf = (
+def _entity_surfaces(te_docs: DataFrame) -> DataFrame:
+    """(doc_id, span): distinct subject/object surfaces per document."""
+    return (
         te_docs.select("doc_id", F.explode("triples").alias("t"))
         .select(
             "doc_id",
             F.explode(
                 F.array(F.col("t.subject.surface_form"), F.col("t.object.surface_form"))
-            ).alias("surface"),
+            ).alias("span"),
         )
-        .filter(F.col("surface").isNotNull())
+        .filter(F.col("span").isNotNull())
         .distinct()
     )
-    d = (
-        dictionary.groupBy("norm_label")
-        .agg(F.min("uri").alias("mapping"))
-        .withColumnRenamed("norm_label", "__norm")
-    )
-    hits = surf.withColumn("__norm", normalize_label(F.col("surface"))).join(
-        F.broadcast(d), "__norm"
-    )
-    doc_links = hits.groupBy("doc_id").agg(
+
+
+def _append_links(te_docs: DataFrame, links: DataFrame, link_type: str) -> DataFrame:
+    """Append (doc_id, span, mapping, score) rows to te_docs.links as
+    TE_Pairs of ``link_type``; documents without new links keep theirs."""
+    doc_links = links.groupBy("doc_id").agg(
         F.collect_list(
-            F.struct(
-                F.col("surface").alias("span"),
-                F.col("mapping"),
-                F.lit("entity").alias("link_type"),
-                F.lit(score).alias("score"),
-            )
+            F.struct("span", "mapping", F.lit(link_type).alias("link_type"), "score")
         ).alias("_new_links")
     )
     return (
@@ -534,136 +507,54 @@ def link_te_entities_dictionary(
             "links",
             F.concat(
                 F.coalesce(F.col("links"), F.array()),
-                F.coalesce(
-                    F.col("_new_links"),
-                    F.array().cast(
-                        "array<struct<span:string,mapping:string,link_type:string,score:double>>"
-                    ),
-                ),
+                F.coalesce(F.col("_new_links"), F.array().cast(ArrayType(TE_PAIR))),
             ),
         )
         .drop("_new_links")
     )
 
 
-def _blocked_top1(
-    mentions: DataFrame, targets: DataFrame, expect_small_targets: bool = False
-) -> DataFrame:
-    """Exact-cosine top-1 of each mention (id, text) against a small target
-    side (id, text): blocked candidate generation + hot-gram brute backstop.
+def link_te_entities_dictionary(te_docs: DataFrame, dictionary: DataFrame) -> DataFrame:
+    """Append entity links for triple surfaces whose NORMALIZED form exactly
+    matches a dictionary label.
 
-    prefix_filter=False: a TOP-1 link has no similarity cut, so candidate
-    generation must be recall-complete over shared grams; the target side is
-    ontology/dictionary-sized so any-gram blocking stays tiny.
+    Native replacement for the ``dbpedia_spotlight_ner_nel`` +
+    ``dbpedia_spotlight_exchange`` stages
+    (`/root/reference/src/kgpipe_tasks/text_processing/entity_linking/spotlight_entity_linking.py:51,143`,
+    pipeline.conf:103-104): spotlight's surface→DBpedia-URI annotations
+    become exact-label hits against a KG label dictionary
+    (``label_dictionary(kg)`` → (uri, label, norm_label)). This is
+    ``linking.link_exact`` over the surfaces: ambiguous labels resolve to
+    the min URI and hits carry its score 1.0.
 
-    Recall backstop: blocking drops grams hotter than max_block, so a
-    mention whose true argmax pair shares ONLY hot grams can surface a
-    weaker candidate as top-1 — not just the fully-uncovered case. Any
-    mention touching at least one hot gram (plus the zero-candidate
-    leftovers: all-hot or under-length surfaces) is re-scored against the
-    full (small) target side with the identical exact cosine, so the union
-    preserves bit-exact scores and argmax completeness.
-
-    Small-target fast path: when the target side is at most ``max_block``
-    rows (counted — it is dictionary/ontology-sized by contract here), the
-    blocked+backstop chain degenerates into "brute-force everything", so we
-    go straight to ``cosine_all_pairs`` (one broadcast gram join). The pair
-    set and scores are identical — all-pairs is trivially argmax-complete
-    and uses the same exact integer dot — but the plan is ~5 stages instead
-    of ~40, which matters when this runs inside composed pipelines.
-
-    Returns (span, mapping, score) — the best target per mention.
+    SCALE: distinct surfaces per doc → broadcast join on the (small)
+    dictionary → per-doc re-aggregation; no driver collect.
     """
-    from pyspark.sql.window import Window
-
-    from kgpipe_spark.eval.soft import (
-        DEFAULT_MAX_BLOCK,
-        _grams_distinct,
-        cosine_all_pairs,
-        cosine_pairs,
+    hits = link_exact(
+        _entity_surfaces(te_docs).withColumnRenamed("span", "query_text"), dictionary
+    ).filter(F.col("mapping").isNotNull())
+    return _append_links(
+        te_docs, hits.withColumnRenamed("query_text", "span"), "entity"
     )
 
-    def _top1(pairs: DataFrame) -> DataFrame:
-        return (
-            pairs.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("lid").orderBy(F.desc("cos"), F.asc("rid"))
-                ),
-            )
-            .filter(F.col("rn") == 1)
-            .select(
-                F.col("lid").alias("span"),
-                F.col("rid").alias("mapping"),
-                F.col("cos").alias("score"),
-            )
-        )
 
-    # localCheckpoint, not persist(): the target side is consumed 2-4x below
-    # (count probe, gram join, hot-gram stats, brute backstop). persist()
-    # registers in the session CacheManager and is never freed without an
-    # explicit unpersist — in the long-lived gate session running 110 queries
-    # those blocks accumulate in the /dev/shm-backed local dir; checkpointed
-    # RDD blocks are ContextCleaner-collected once the plan is dropped.
-    # Eager is fine: targets is dictionary/ontology-sized by contract here.
-    targets = targets.localCheckpoint()
-    n_targets = targets.count()
-    if n_targets <= DEFAULT_MAX_BLOCK:
-        return _top1(cosine_all_pairs(mentions, targets))
-    if expect_small_targets:
-        # Oracle-backed callers replay the fast path's 64-bin candidate join
-        # in SQL (_sql_cosine_binpairs); silently switching to the gram-
-        # blocked path would diverge the candidate sets. Fail loudly instead.
-        raise ValueError(
-            f"_blocked_top1: target side has {n_targets} rows > "
-            f"DEFAULT_MAX_BLOCK={DEFAULT_MAX_BLOCK}, but this call site is "
-            "oracle-backed against the small-target all-pairs path "
-            "(_sql_cosine_binpairs). Raise DEFAULT_MAX_BLOCK or rework the "
-            "oracle to mirror the gram-blocked candidate set."
-        )
+def _top1(mentions: DataFrame, targets: DataFrame) -> DataFrame:
+    """Exact-cosine top-1 of each mention (id, text) against a small target
+    side (id, text) → (span, mapping, score): a window over
+    ``cosine_all_pairs``, ties to the min target id.
 
-    pairs = cosine_pairs(mentions, targets, prefix_filter=False)
-    lg = _grams_distinct(mentions, "id", "text")
-    rg = _grams_distinct(targets, "id", "text")
-    hot = (
-        lg.groupBy("g").agg(F.count(F.lit(1)).alias("nl"))
-        .join(rg.groupBy("g").agg(F.count(F.lit(1)).alias("nr")), "g", "outer")
-        .filter(
-            (F.coalesce("nl", F.lit(0)) > DEFAULT_MAX_BLOCK)
-            | (F.coalesce("nr", F.lit(0)) > DEFAULT_MAX_BLOCK)
-        )
-        .select("g")
-    )
-    touched = lg.join(hot, "g", "left_semi").select("id").distinct()
-    uncovered = mentions.join(
-        pairs.select(F.col("lid").alias("id")).distinct(), "id", "left_anti"
-    )
-    to_brute = mentions.join(touched, "id", "left_semi").unionByName(uncovered).dropDuplicates(
-        ["id"]
-    )
-    pairs = pairs.join(
-        to_brute.select(F.col("id").alias("lid")), "lid", "left_anti"
-    ).unionByName(cosine_all_pairs(to_brute, targets))
-    return _top1(pairs)
-
-
-def _append_links(te_docs: DataFrame, doc_links: DataFrame) -> DataFrame:
-    """Concat per-doc new links (doc_id, _new_links) onto te_docs.links."""
+    All pairs sharing a hash bin are scored, so the argmax is complete; the
+    target side must be dictionary/ontology-sized, since its binned vectors
+    are broadcast. ``_sql_cosine_binpairs`` replays this pair set in SQL.
+    """
+    w = Window.partitionBy("lid").orderBy(F.desc("cos"), F.asc("rid"))
     return (
-        te_docs.join(doc_links, "doc_id", "left")
-        .withColumn(
-            "links",
-            F.concat(
-                F.coalesce(F.col("links"), F.array()),
-                F.coalesce(
-                    F.col("_new_links"),
-                    F.array().cast(
-                        "array<struct<span:string,mapping:string,link_type:string,score:double>>"
-                    ),
-                ),
-            ),
+        cosine_all_pairs(mentions, targets)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            F.col("lid").alias("span"), F.col("rid").alias("mapping"), F.col("cos").alias("score")
         )
-        .drop("_new_links")
     )
 
 
@@ -677,23 +568,11 @@ def label_alias_embedding_el(te_docs: DataFrame, kg: DataFrame) -> DataFrame:
     the reference embeds ALL target-KG label strings, takes the full
     cosine-matrix argmax per extracted surface, and links every surface —
     thresholding happens downstream at TE finalization
-    (``te_documents_to_triples`` entity_threshold). Here the matrix argmax
-    is the blocked exact cosine with the hot-gram brute backstop
-    (``_blocked_top1``) — JVM-side, no driver collect.
+    (``te_documents_to_triples`` at ``ENTITY_LINK_THRESHOLD``). Here the
+    matrix argmax is ``_top1`` over the label dictionary — JVM-side, no
+    driver collect, no job until the result is used.
     """
-    from kgpipe_spark.operators.linking import label_dictionary
-
-    surfaces = (
-        te_docs.select("doc_id", F.explode("triples").alias("t"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.array(F.col("t.subject.surface_form"), F.col("t.object.surface_form"))
-            ).alias("span"),
-        )
-        .filter(F.col("span").isNotNull())
-        .distinct()
-    )
+    surfaces = _entity_surfaces(te_docs)
     targets = (
         label_dictionary(kg, include_alt=False)
         .groupBy(F.col("norm_label").alias("text"))
@@ -703,39 +582,22 @@ def label_alias_embedding_el(te_docs: DataFrame, kg: DataFrame) -> DataFrame:
     mentions = surfaces.select(F.col("span").alias("id")).distinct().withColumn(
         "text", normalize_label(F.col("id"))
     )
-    # oracle-backed (kg_te_construct_full / pipeline_text_* replay the
-    # all-pairs bin join in SQL); the seed-label target side is structurally
-    # small at every sf — fail loudly if that ever stops holding
-    best = _blocked_top1(mentions, targets, expect_small_targets=True)
-    doc_links = (
-        surfaces.join(F.broadcast(best), "span")
-        .groupBy("doc_id")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    F.col("span"),
-                    F.col("mapping"),
-                    F.lit("entity").alias("link_type"),
-                    F.col("score"),
-                )
-            ).alias("_new_links")
-        )
-    )
-    return _append_links(te_docs, doc_links)
+    best = _top1(mentions, targets)
+    return _append_links(te_docs, surfaces.join(F.broadcast(best), "span"), "entity")
 
 
 def label_alias_embedding_rl(te_docs: DataFrame, ontology: DataFrame) -> DataFrame:
     """Link each distinct predicate surface to its best ontology property and
     append the matches as ``link_type='predicate'`` TE_Pairs.
 
-    Mirrors ``AliasAndTransformerBasedRelationLinker`` / 
+    Mirrors ``AliasAndTransformerBasedRelationLinker`` /
     ``label_alias_embedding_rl``
     (`/root/reference/src/kgpipe_tasks/text_processing/relation_match.py:35-134`):
     property text = ``label: <norm label>; altLabels: <norm aliases>``,
     cosine top-1 per extracted relation surface (every top-1 is linked, as in
     the reference — thresholding happens downstream at TE finalization).
-    Embeddings are the engine-symmetric hashed-gram cosine
-    (``eval.soft.cosine_pairs``) — JVM-side, blocked, no driver collect.
+    Embeddings are the engine-symmetric hashed-gram cosine (``_top1``) —
+    JVM-side, no driver collect, no job until the result is used.
     """
     surfaces = (
         te_docs.select("doc_id", F.explode("triples").alias("t"))
@@ -756,21 +618,5 @@ def label_alias_embedding_rl(te_docs: DataFrame, ontology: DataFrame) -> DataFra
     mentions = surfaces.select(F.col("span").alias("id")).distinct().withColumn(
         "text", normalize_label(F.col("id"))
     )
-    # oracle-backed (kg_relation_link_top1 replays the bin join in SQL);
-    # ontology property tables are structurally small at every sf
-    best = _blocked_top1(mentions, props, expect_small_targets=True)
-    doc_links = (
-        surfaces.join(F.broadcast(best), "span")
-        .groupBy("doc_id")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    F.col("span"),
-                    F.col("mapping"),
-                    F.lit("predicate").alias("link_type"),
-                    F.col("score"),
-                )
-            ).alias("_new_links")
-        )
-    )
-    return _append_links(te_docs, doc_links)
+    best = _top1(mentions, props)
+    return _append_links(te_docs, surfaces.join(F.broadcast(best), "span"), "predicate")

@@ -69,3 +69,45 @@ def test_mint_uri_matches_duckdb(pairs):
     for r in pairs:
         got = con.execute("SELECT 'http://kg.org/newE/' || sha256(?)", [r["v"]]).fetchone()[0]
         assert got == r["mint"], f"mint mismatch for {r['v']!r}"
+
+
+def test_prf_precision_ties_round_like_duckdb(spark):
+    """1 hit in 128 predictions is precision 1/128 = 0.0078125, a 6-digit
+    rounding tie. Every P/R/F1 evaluator must round it as the DuckDB oracle
+    expressions do (0.007813), not as Python's round-half-even (0.007812)."""
+    from kgpipe_spark.eval.alignment import fact_alignment
+    from kgpipe_spark.eval.er_eval import evaluate_matching, evaluate_relation_matching
+    from kgpipe_spark.eval.report import eval_report
+
+    want = duckdb.connect().execute("SELECT round(1 / CAST(128 AS DOUBLE), 6)").fetchone()[0]
+    assert want == 0.007813
+
+    n = 128
+    kg = spark.createDataFrame(
+        [(f"s{i}", "p", f"o{i}", "literal", None) for i in range(n)],
+        "subject string, predicate string, object_lex string, object_kind string,"
+        " object_datatype string",
+    )
+    gold = kg.limit(1)
+    onto = spark.createDataFrame(
+        [],
+        "uri string, label string, aliases array<string>, domain string, range string,"
+        " is_object_prop string, max_cardinality int",
+    )
+    pairs = spark.createDataFrame(
+        [(f"a{i}", f"b{i}", 0.9, "relation") for i in range(n)],
+        "id_1 string, id_2 string, score double, id_type string",
+    )
+    clusters = spark.createDataFrame([("c0", "a0"), ("c0", "b0")], "cluster_id string, entity_uri string")
+    rel_gold = spark.createDataFrame([(["a0", "b0"],)], "uris array<string>")
+
+    report = eval_report(kg, gold, onto).filter(F.col("aspect") == "reference")
+    got = {
+        "fact_alignment": fact_alignment(kg, gold).collect()[0]["precision"],
+        "evaluate_matching": evaluate_matching(pairs, clusters).collect()[0]["precision"],
+        "evaluate_relation_matching": evaluate_relation_matching(pairs, rel_gold).collect()[0][
+            "precision"
+        ],
+        "eval_report": {r["metric"]: r["value"] for r in report.collect()}["precision"],
+    }
+    assert got == dict.fromkeys(got, want)

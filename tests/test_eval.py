@@ -258,3 +258,19 @@ def test_evaluate_expected_links(spark):
     # d1: links e:1 (hit), e:9 (miss-mapping), e:2 below threshold → 1 true, 1 missing
     # d2: relation link doesn't count → 0 true, 1 missing; d9 absent from te → skipped
     assert (row["true_link_cnt"], row["false_missing_link_cnt"]) == (1, 2)
+
+
+def test_prf_on_empty_sets_is_zero(spark):
+    """Two empty sides count 0/0/0 and every rate is 0.0, never null, in
+    both f1 projections and in the metrics built on them."""
+    from kgpipe_spark.eval.alignment import TRIPLE_KEY, prf_from_counts, prf_from_rates, set_counts
+    from kgpipe_spark.eval.semantic import ontology_class_coverage
+
+    empty = t(spark, [])
+    counts = set_counts(empty, empty, TRIPLE_KEY)
+    rows = [prf(counts).collect()[0] for prf in (prf_from_rates, prf_from_counts)]
+    rows.append(ontology_class_coverage(empty, spark.createDataFrame([], "cls string")).collect()[0])
+    for r in rows:
+        assert r.asDict() == {
+            "tp": 0, "fp": 0, "fn": 0, "precision": 0.0, "recall": 0.0, "f1": 0.0
+        }

@@ -137,6 +137,43 @@ def test_label_alias_embedding_rl(spark):
     assert scores["directed_by"] > scores.get("totally_unrelated_key", 0.0)
 
 
+def test_embedding_linkers_plan_with_no_job(spark):
+    """Building either TE embedding linker's plan over checkpointed inputs
+    runs no Spark job: no size probe, no eager checkpoint of the targets."""
+    from kgpipe_spark.operators.te_construct import (
+        label_alias_embedding_el,
+        label_alias_embedding_rl,
+    )
+
+    te = _te_docs(spark).localCheckpoint()
+    onto = _onto(spark).localCheckpoint()
+    kg = spark.createDataFrame(
+        [(KG_NS + "person/tolkien", RDFS_LABEL, "Tolkien", "literal", XSD_STRING)],
+        "subject string, predicate string, object_lex string, object_kind string,"
+        " object_datatype string",
+    ).localCheckpoint()
+
+    sc = spark.sparkContext
+    jobs, out = {}, {}
+    for name, build in (
+        ("rl", lambda: label_alias_embedding_rl(te, onto)),
+        ("el", lambda: label_alias_embedding_el(te, kg)),
+    ):
+        sc.setJobGroup(f"te-{name}-plan", "plan only")
+        try:
+            out[name] = build()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"te-{name}-plan"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == {"rl": 0, "el": 0}
+
+    def appended(df):
+        return {(p["span"], p["mapping"]) for p in df.collect()[0]["links"][3:]}
+
+    assert ("written by", KG_NS + "onto/author") in appended(out["rl"])
+    assert ("Tolkien", KG_NS + "person/tolkien") in appended(out["el"])
+
+
 def test_filter_te_entity_links(spark):
     from kgpipe_spark.operators.te_construct import filter_te_entity_links
 

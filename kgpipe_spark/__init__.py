@@ -21,5 +21,3 @@ Python UDFs anywhere (BASELINE.json input_hint mandate).
 """
 
 __version__ = "0.1.0"
-
-from kgpipe_spark.schemas import TRIPLE_SCHEMA, CORPUS_SCHEMA  # noqa: F401

@@ -18,8 +18,8 @@ written, and each keeps its oracle's operand order exactly, because a
  - ``prf_from_counts``: f1 = 2·tp/greatest(2·tp+fp+fn, 1)
    (``_SQL_PRF``, ``kg_er_relation_eval``).
 
-Both round with Spark's ``round`` on the JVM and give 0.0 where a
-denominator is zero. Nothing here collects to the driver.
+Both round with ``round6``, DuckDB's rounding, on the JVM and give 0.0
+where a denominator is zero. Nothing here collects to the driver.
 """
 
 from __future__ import annotations
@@ -64,6 +64,14 @@ def set_counts(actual: DataFrame, expected: DataFrame, key: list[str]) -> DataFr
     )
 
 
+def round6(x: Column) -> Column:
+    """A double rounded to 6 places as DuckDB's ``round(x, 6)`` does it:
+    round(x·10⁶)/10⁶. Spark's ``round(x, 6)`` rounds the shortest decimal
+    string of x half-up instead, and splits some ties the other way
+    (41/640: 0.064063 there, 0.064062 here and in DuckDB)."""
+    return F.round(x * 1e6) / 1e6
+
+
 def _rate(num: Column, den: Column) -> Column:
     return F.when(den > 0, num / den).otherwise(F.lit(0.0))
 
@@ -79,9 +87,9 @@ def prf_from_rates(counts: DataFrame) -> DataFrame:
         "tp",
         "fp",
         "fn",
-        F.round(p, 6).alias("precision"),
-        F.round(r, 6).alias("recall"),
-        F.round(_rate(2 * p * r, p + r), 6).alias("f1"),
+        round6(p).alias("precision"),
+        round6(r).alias("recall"),
+        round6(_rate(2 * p * r, p + r)).alias("f1"),
     )
 
 
@@ -93,9 +101,9 @@ def prf_from_counts(counts: DataFrame) -> DataFrame:
         "tp",
         "fp",
         "fn",
-        F.round(tp / F.greatest(tp + fp, F.lit(1)), 6).alias("precision"),
-        F.round(tp / F.greatest(tp + fn, F.lit(1)), 6).alias("recall"),
-        F.round(2 * tp / F.greatest(2 * tp + fp + fn, F.lit(1)), 6).alias("f1"),
+        round6(tp / F.greatest(tp + fp, F.lit(1))).alias("precision"),
+        round6(tp / F.greatest(tp + fn, F.lit(1))).alias("recall"),
+        round6(2 * tp / F.greatest(2 * tp + fp + fn, F.lit(1))).alias("f1"),
     )
 
 

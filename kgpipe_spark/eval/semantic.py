@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgpipe_spark.eval.alignment import prf_from_counts, set_counts
+from kgpipe_spark.eval.alignment import prf_from_counts, round6, set_counts
 from kgpipe_spark.schemas import RDF_TYPE
 
 
@@ -203,12 +203,11 @@ def relation_direction_counts(triples: DataFrame, ontology: DataFrame) -> DataFr
     return agg.select(
         F.coalesce("incorrect", F.lit(0)).cast("bigint").alias("incorrect"),
         F.coalesce("correct", F.lit(0)).cast("bigint").alias("correct"),
-        F.round(
+        round6(
             F.when(
                 (F.col("incorrect") + F.col("correct")) > 0,
                 1.0 - F.col("incorrect") / (F.col("incorrect") + F.col("correct")),
-            ).otherwise(F.lit(0.0)),
-            6,
+            ).otherwise(F.lit(0.0))
         ).alias("score"),
     )
 

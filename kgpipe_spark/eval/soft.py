@@ -428,6 +428,17 @@ def fact_alignment_soft_values(
 # ---------------------------------------------------------------------------
 # source entity coverage (integration_eval.py:119-250)
 # ---------------------------------------------------------------------------
+#
+# Each metric is one lazy 1-row DataFrame: 1-row aggregates cross-joined,
+# run as one job when collected.
+
+
+def _n_rows(df: DataFrame, name: str) -> DataFrame:
+    return df.agg(F.count(F.lit(1)).alias(name))
+
+
+def _expected_entities(entity_dict: DataFrame) -> DataFrame:
+    return _n_rows(entity_dict.select("entity_uri").distinct(), "expected_entities")
 
 
 def source_entity_coverage(kg: DataFrame, entity_dict: DataFrame) -> DataFrame:
@@ -450,16 +461,19 @@ def source_entity_coverage(kg: DataFrame, entity_dict: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    expected_n = entity_dict.select("entity_uri").distinct().count()
-    found_n = labeled.select("subject").distinct().count()
-    overlap_n = overlap.count()
-    cov = overlap_n / expected_n if expected_n else 0.0
-    import math
-
-    cov6 = math.floor(min(cov, 1.0) * 1000000) / 1000000  # engine-portable quantize
-    return kg.sparkSession.createDataFrame(
-        [(expected_n, found_n, overlap_n, cov6)],
-        "expected_entities bigint, found_entities bigint, overlapping_entities bigint, coverage double",
+    e, o = F.col("expected_entities"), F.col("overlapping_entities")
+    cov = F.when(e > 0, o / e).otherwise(F.lit(0.0))
+    return (
+        _expected_entities(entity_dict)
+        .crossJoin(_n_rows(labeled.select("subject").distinct(), "found_entities"))
+        .crossJoin(_n_rows(overlap, "overlapping_entities"))
+        .select(
+            "expected_entities",
+            "found_entities",
+            "overlapping_entities",
+            # engine-portable quantize: floor to 6 places, as the oracle does
+            (F.floor(F.least(cov, F.lit(1.0)) * 1000000) / 1000000).alias("coverage"),
+        )
     )
 
 
@@ -484,12 +498,11 @@ def source_entity_coverage_fuzzy(
     found_distinct = found.distinct().select(F.col("label").alias("text"), F.col("label").alias("id"))
     pairs = cosine_pairs(found_distinct, dict_labels, max_block)
     matched = pairs.filter(F.col("cos") >= threshold).select(F.col("lid").alias("label")).distinct()
-    expected_n = entity_dict.select("entity_uri").distinct().count()
-    found_n = found.count()  # label *occurrences*, integration_eval.py:153-156
-    overlap_n = matched.count()
-    return kg.sparkSession.createDataFrame(
-        [(expected_n, found_n, overlap_n)],
-        "expected_entities bigint, found_labels bigint, overlapping_labels bigint",
+    return (
+        _expected_entities(entity_dict)
+        # label *occurrences*, integration_eval.py:153-156
+        .crossJoin(_n_rows(found, "found_labels"))
+        .crossJoin(_n_rows(matched, "overlapping_labels"))
     )
 
 
@@ -538,14 +551,17 @@ def source_entity_precision_fuzzy(
         F.sum(F.when(F.col("claim_rn") == 1, 1).otherwise(0)).alias("strict"),
         F.sum("n_occ").alias("matched_occ"),
     )
-    expected_n = entity_dict.select("entity_uri").distinct().count()
-    found_n = found.count()
-    row = agg.collect()[0]
-    overlapping = row["overlapping"] or 0
-    strict = row["strict"] or 0
-    dup = (row["matched_occ"] or 0) - strict
-    return kg.sparkSession.createDataFrame(
-        [(expected_n, found_n, overlapping, strict, dup)],
-        "expected_entities bigint, found_labels bigint, overlapping_labels bigint,"
-        " strict_overlapping bigint, possible_duplicates bigint",
+    strict = F.coalesce("strict", F.lit(0))
+    dup = F.coalesce("matched_occ", F.lit(0)) - strict
+    return (
+        _expected_entities(entity_dict)
+        .crossJoin(_n_rows(found, "found_labels"))
+        .crossJoin(agg)
+        .select(
+            "expected_entities",
+            "found_labels",
+            F.col("overlapping").alias("overlapping_labels"),
+            strict.cast("bigint").alias("strict_overlapping"),
+            dup.cast("bigint").alias("possible_duplicates"),
+        )
     )

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgpipe_spark.eval.alignment import round6
+
 
 def evaluate_expected_links(
     te_docs: DataFrame,
@@ -80,10 +82,9 @@ def evaluate_expected_links(
     return agg.select(
         F.coalesce("t", F.lit(0)).cast("bigint").alias("true_link_cnt"),
         F.coalesce("fm", F.lit(0)).cast("bigint").alias("false_missing_link_cnt"),
-        F.round(
+        round6(
             F.coalesce("t", F.lit(0))
-            / F.greatest(F.coalesce("t", F.lit(0)) + F.coalesce("fm", F.lit(0)), F.lit(1)),
-            6,
+            / F.greatest(F.coalesce("t", F.lit(0)) + F.coalesce("fm", F.lit(0)), F.lit(1))
         ).alias("score"),
     )
 

@@ -111,3 +111,30 @@ def test_prf_precision_ties_round_like_duckdb(spark):
         "eval_report": {r["metric"]: r["value"] for r in report.collect()}["precision"],
     }
     assert got == dict.fromkeys(got, want)
+
+
+def test_prf_projections_round_41_of_640_like_duckdb(spark):
+    """41/640 = 0.0640625 is a tie that Spark's round(x, 6) takes up
+    (0.064063) from the shortest decimal string, while DuckDB's round(x, 6)
+    computes round(x·10⁶)/10⁶ = 0.064062. Both projections must give the
+    oracle expressions' values for precision, recall and f1 alike."""
+    from __spark_entry__ import _SQL_PRF
+    from kgpipe_spark.eval.alignment import prf_from_counts, prf_from_rates
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE counts AS SELECT 41 AS tp, 599 AS fp, 599 AS fn")
+    by_counts = con.execute(_SQL_PRF).fetchone()
+    # kg_fact_alignment's projection
+    by_rates = con.execute(
+        """SELECT tp, fp, fn,
+                  round(tp / CAST(tp + fp AS DOUBLE), 6),
+                  round(tp / CAST(tp + fn AS DOUBLE), 6),
+                  round(2.0 * (tp / CAST(tp + fp AS DOUBLE)) * (tp / CAST(tp + fn AS DOUBLE))
+                        / ((tp / CAST(tp + fp AS DOUBLE)) + (tp / CAST(tp + fn AS DOUBLE))), 6)
+           FROM counts"""
+    ).fetchone()
+    assert by_counts[3:] == (0.064062, 0.064062, 0.064062)
+
+    counts = spark.createDataFrame([(41, 599, 599)], "tp bigint, fp bigint, fn bigint")
+    assert tuple(prf_from_counts(counts).collect()[0]) == by_counts
+    assert tuple(prf_from_rates(counts).collect()[0]) == by_rates

@@ -158,3 +158,37 @@ def test_source_entity_precision_fuzzy_duplicates(spark):
     assert row["overlapping_labels"] == 3  # distinct matched labels
     assert row["strict_overlapping"] == 2  # one claim per dict label
     assert row["possible_duplicates"] == 2  # 4 matched occurrences - 2 strict
+
+
+def test_source_entity_metrics_plan_with_no_job(spark):
+    """Building the three source-entity metrics runs no Spark job: each is
+    one lazy 1-row DataFrame, not driver counts rebuilt by createDataFrame."""
+    kg = _kg(spark, [_lab("e:1", "Alpha Centauri"), _lab("e:2", "Beta")]).localCheckpoint()
+    d = spark.createDataFrame(
+        [("e:1", None), ("d:2", "Beta")], "entity_uri string, entity_label string"
+    ).localCheckpoint()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("source-entity-plan", "plan only")
+    try:
+        out = [
+            source_entity_coverage(kg, d),
+            source_entity_coverage_fuzzy(kg, d),
+            source_entity_precision_fuzzy(kg, d),
+        ]
+        jobs = len(sc.statusTracker().getJobIdsForGroup("source-entity-plan"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == 0
+    assert [tuple(df.collect()[0]) for df in out] == [(2, 2, 2, 1.0), (2, 2, 1), (2, 2, 1, 1, 0)]
+
+
+def test_source_entity_metrics_on_empty_inputs(spark):
+    kg = _kg(spark, [])
+    d = spark.createDataFrame([], "entity_uri string, entity_label string")
+    metrics = (source_entity_coverage, source_entity_coverage_fuzzy, source_entity_precision_fuzzy)
+    assert [tuple(f(kg, d).collect()[0]) for f in metrics] == [
+        (0, 0, 0, 0.0),
+        (0, 0, 0),
+        (0, 0, 0, 0, 0),
+    ]

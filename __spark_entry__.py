@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgpipe_spark.functions.literals import round6
 from kgpipe_spark.schemas import (
     KG_NS,
     RDF_TYPE,
@@ -836,7 +837,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select(
                 F.col("l.span").alias("span"),
                 F.col("l.mapping").alias("mapping"),
-                F.round(F.col("l.score"), 6).alias("score_r"),
+                round6(F.col("l.score")).alias("score_r"),
             )
             .distinct()
         )
@@ -1005,7 +1006,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kg_ntriples_roundtrip"] = _nt_roundtrip
 
     def _prefix_expand(s, d):
-        from kgpipe_spark.sources.readers import DEFAULT_PREFIXES, _expand_prefix
+        from kgpipe_spark.sources.readers import _expand_prefix
 
         cust = _read(s, d, "customer")
         k = F.col("c_custkey")
@@ -1016,7 +1017,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .otherwise(F.concat(F.lit("http://already.org/"), k.cast("string")))
             .alias("raw")
         )
-        return ids.select("raw", _expand_prefix(F.col("raw"), DEFAULT_PREFIXES).alias("expanded"))
+        return ids.select("raw", _expand_prefix(F.col("raw")).alias("expanded"))
 
     q["kg_prefix_expansion"] = _prefix_expand
 
@@ -1729,7 +1730,7 @@ def _linkmedia_queries() -> dict:
         return linked.select(
             "query_text",
             "mapping",
-            F.coalesce(F.round(F.col("score"), 6), F.lit(-1.0)).alias("score_r"),
+            F.coalesce(round6(F.col("score")), F.lit(-1.0)).alias("score_r"),
         ).distinct()
 
     q["kg_link_embed_top1"] = _embed_top1

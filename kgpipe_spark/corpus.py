@@ -175,7 +175,7 @@ def synth_corpus(spark: SparkSession, n_rows: int, seed: int = 42) -> DataFrame:
     )
 
 
-def seed_kg(spark: SparkSession, seed: int = 42) -> DataFrame:
+def seed_kg(spark: SparkSession) -> DataFrame:
     """Small deterministic seed KG: the director/actor dictionary.
 
     Mirrors the role of the reference's seed ``result.nt`` from the previous

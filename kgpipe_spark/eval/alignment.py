@@ -29,6 +29,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kgpipe_spark.functions.literals import round6
+
 TRIPLE_KEY = ["subject", "predicate", "object_lex", "object_kind"]
 
 
@@ -62,14 +64,6 @@ def set_counts(actual: DataFrame, expected: DataFrame, key: list[str]) -> DataFr
             F.count(F.when(in_e & (has_null | ~in_a), 1)).alias("fn"),
         )
     )
-
-
-def round6(x: Column) -> Column:
-    """A double rounded to 6 places as DuckDB's ``round(x, 6)`` does it:
-    round(x·10⁶)/10⁶. Spark's ``round(x, 6)`` rounds the shortest decimal
-    string of x half-up instead, and splits some ties the other way
-    (41/640: 0.064063 there, 0.064062 here and in DuckDB)."""
-    return F.round(x * 1e6) / 1e6
 
 
 def _rate(num: Column, den: Column) -> Column:

@@ -48,18 +48,17 @@ def duplicate_entities(alignment: DataFrame) -> DataFrame:
     )
 
 
-def cluster_pairs(clusters: DataFrame, col: str = "uris") -> DataFrame:
-    """n-member cluster rows → all unordered within-cluster pairs (id_1 < id_2).
+def cluster_pairs(clusters: DataFrame) -> DataFrame:
+    """n-member ``uris`` cluster rows → all unordered within-cluster pairs
+    (id_1 < id_2).
 
     Mirrors the cluster-format branch of ``load_matches``
     (`/root/reference/src/kgpipe/evaluation/cluster.py:134-175`): a 2-col row
     is a pair, an n-col row yields all pairwise matches. Row-local explode —
     no shuffle beyond the final distinct."""
-    a = clusters.select(F.col(col).alias("_us")).select(
-        F.explode("_us").alias("id_1"), F.col("_us")
-    )
+    a = clusters.select(F.explode("uris").alias("id_1"), "uris")
     return (
-        a.select("id_1", F.explode("_us").alias("id_2"))
+        a.select("id_1", F.explode("uris").alias("id_2"))
         .filter(F.col("id_1") < F.col("id_2"))
         .distinct()
     )

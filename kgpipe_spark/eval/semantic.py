@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgpipe_spark.eval.alignment import prf_from_counts, round6, set_counts
+from kgpipe_spark.eval.alignment import prf_from_counts, set_counts
+from kgpipe_spark.functions.literals import round6
 from kgpipe_spark.schemas import RDF_TYPE
 
 

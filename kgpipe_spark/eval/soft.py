@@ -69,8 +69,9 @@ def clean_label(c: F.Column) -> F.Column:
 # ---------------------------------------------------------------------------
 
 
-def gram_bins(df: DataFrame, id_col: str, text_col: str, bins: int = EMBED_BINS) -> DataFrame:
-    """(id, bin, v): signed char-3-gram counts, the sparse integer form of
+def gram_bins(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, bin, v): signed char-3-gram counts over ``EMBED_BINS`` bins, the
+    sparse integer form of
     ``embedders.HashedGramEmbedder.encode`` (same md5
     first-4-bytes-little-endian hash, same sign bit 31, same modulus)."""
     s = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
@@ -93,7 +94,7 @@ def gram_bins(df: DataFrame, id_col: str, text_col: str, bins: int = EMBED_BINS)
                 10,
             ).cast("long"),
         )
-        .withColumn("bin", F.col("h") % bins)
+        .withColumn("bin", F.col("h") % EMBED_BINS)
         .withColumn("sign", F.lit(1) - 2 * F.shiftright("h", 31))
     )
     return d.groupBy("id", "bin").agg(F.sum("sign").alias("v"))
@@ -115,11 +116,7 @@ def _grams_distinct(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def cosine_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
+def cosine_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
     """(left.id, right.id, cos) candidate pairs with exact cosine.
 
     left/right: (id, text). Candidate generation is a PREFIX FILTER with a
@@ -136,7 +133,8 @@ def cosine_pairs(
     prefix of two moderately-similar strings is dominated by exactly the
     grams they DON'T share, so it can miss a weaker argmax pair. Top-1
     consumers with no cut use ``cosine_all_pairs``. Grams hotter than
-    ``max_block`` on either side are dropped from candidate generation. The
+    ``DEFAULT_MAX_BLOCK`` on either side are dropped from candidate
+    generation. The
     dot product itself is exact over all 64 bins.
     """
     lg = _grams_distinct(left, "id", "text")
@@ -151,7 +149,9 @@ def cosine_pairs(
             F.coalesce("nr", F.lit(0)).alias("nr"),
         )
     )
-    keep = freq.filter((F.col("nl") <= max_block) & (F.col("nr") <= max_block)).select(
+    keep = freq.filter(
+        (F.col("nl") <= DEFAULT_MAX_BLOCK) & (F.col("nr") <= DEFAULT_MAX_BLOCK)
+    ).select(
         "g", "freq"
     )
 
@@ -250,19 +250,14 @@ def _uri_labels(kg: DataFrame) -> DataFrame:
     )
 
 
-def soft_entity_mapping(
-    actual: DataFrame,
-    expected: DataFrame,
-    threshold: float = SOFT_THRESHOLD,
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
+def soft_entity_mapping(actual: DataFrame, expected: DataFrame) -> DataFrame:
     """(actual_uri, expected_uri, score): best expected per actual, score >
-    threshold (strict >, soft_metrics.py:76-83)."""
-    pairs = cosine_pairs(_uri_labels(actual), _uri_labels(expected), max_block)
+    ``SOFT_THRESHOLD`` (strict >, soft_metrics.py:76-83)."""
+    pairs = cosine_pairs(_uri_labels(actual), _uri_labels(expected))
     w = Window.partitionBy("lid").orderBy(F.desc("cos"), F.asc("rid"))
     return (
         pairs.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("cos") > threshold))
+        .filter((F.col("rn") == 1) & (F.col("cos") > SOFT_THRESHOLD))
         .select(
             F.col("lid").alias("actual_uri"),
             F.col("rid").alias("expected_uri"),
@@ -276,18 +271,13 @@ def soft_entity_mapping(
 # ---------------------------------------------------------------------------
 
 
-def fact_alignment_soft_entities(
-    actual: DataFrame,
-    expected: DataFrame,
-    threshold: float = SOFT_THRESHOLD,
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
+def fact_alignment_soft_entities(actual: DataFrame, expected: DataFrame) -> DataFrame:
     """SoftE (`soft_metrics.py:87-101`): map actual subjects AND uri objects
     through the soft mapping, then exact alignment (``set_counts`` over the
     triple key)."""
     # the mapping cosine chain feeds both the subject and the object rewrite
     # joins — materialize it once
-    mapping = soft_entity_mapping(actual, expected, threshold, max_block).select(
+    mapping = soft_entity_mapping(actual, expected).select(
         "actual_uri", "expected_uri"
     ).localCheckpoint()
     ms = mapping.withColumnRenamed("actual_uri", "subject").withColumnRenamed(
@@ -353,19 +343,12 @@ def _label_expanded(kg: DataFrame, subject_map: DataFrame | None) -> DataFrame:
     return expanded.unionByName(lits).distinct()
 
 
-def fact_alignment_soft_values(
-    actual: DataFrame,
-    expected: DataFrame,
-    threshold: float = SOFT_THRESHOLD,
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
+def fact_alignment_soft_values(actual: DataFrame, expected: DataFrame) -> DataFrame:
     """SoftEV (`soft_metrics.py:104-205`): subjects soft-mapped, URI objects
     label-expanded on BOTH sides, values compared per (s, p) group by best
-    cosine (> threshold → tp, else fp; expected (s,p) groups absent from
+    cosine (> ``SOFT_THRESHOLD`` → tp, else fp; expected (s,p) groups absent from
     actual contribute their triple count to fn)."""
-    mapping = soft_entity_mapping(actual, expected, threshold, max_block).select(
-        "actual_uri", "expected_uri"
-    )
+    mapping = soft_entity_mapping(actual, expected).select("actual_uri", "expected_uri")
     # the soft-mapping cosine chain folded into `ga` is referenced by the
     # pair join, the scored join AND the fn anti-join — persist both
     # expanded sides once instead of re-deriving the chain per consumer
@@ -413,7 +396,7 @@ def fact_alignment_soft_values(
     per_actual = scored.groupBy("subject", "predicate", "value").agg(
         F.max("cos").alias("best")
     )
-    hit = F.coalesce(F.col("best") > threshold, F.lit(False))
+    hit = F.coalesce(F.col("best") > SOFT_THRESHOLD, F.lit(False))
     counts = per_actual.agg(
         F.count(F.when(hit, 1)).alias("tp"), F.count(F.when(~hit, 1)).alias("fp")
     )
@@ -477,14 +460,9 @@ def source_entity_coverage(kg: DataFrame, entity_dict: DataFrame) -> DataFrame:
     )
 
 
-def source_entity_coverage_fuzzy(
-    kg: DataFrame,
-    entity_dict: DataFrame,
-    threshold: float = SOFT_THRESHOLD,
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
+def source_entity_coverage_fuzzy(kg: DataFrame, entity_dict: DataFrame) -> DataFrame:
     """Fuzzy coverage (`integration_eval.py:142-177`): found labels matching
-    any dict label at cosine ≥ threshold (raw labels, not cleaned — the
+    any dict label at cosine ≥ ``SOFT_THRESHOLD`` (raw labels, not cleaned — the
     reference embeds them as-is)."""
     found = kg.filter(F.col("predicate") == RDFS_LABEL).select(
         F.col("object_lex").alias("label")
@@ -496,8 +474,10 @@ def source_entity_coverage_fuzzy(
         .withColumn("id", F.col("text"))
     )
     found_distinct = found.distinct().select(F.col("label").alias("text"), F.col("label").alias("id"))
-    pairs = cosine_pairs(found_distinct, dict_labels, max_block)
-    matched = pairs.filter(F.col("cos") >= threshold).select(F.col("lid").alias("label")).distinct()
+    pairs = cosine_pairs(found_distinct, dict_labels)
+    matched = (
+        pairs.filter(F.col("cos") >= SOFT_THRESHOLD).select(F.col("lid").alias("label")).distinct()
+    )
     return (
         _expected_entities(entity_dict)
         # label *occurrences*, integration_eval.py:153-156
@@ -506,14 +486,9 @@ def source_entity_coverage_fuzzy(
     )
 
 
-def source_entity_precision_fuzzy(
-    kg: DataFrame,
-    entity_dict: DataFrame,
-    threshold: float = SOFT_THRESHOLD,
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
+def source_entity_precision_fuzzy(kg: DataFrame, entity_dict: DataFrame) -> DataFrame:
     """Fuzzy precision (`integration_eval.py:179-244`): each found label
-    claims its best dict label ≥ threshold; a dict label claimed more than
+    claims its best dict label ≥ ``SOFT_THRESHOLD``; a dict label claimed more than
     once marks the extra claims as possible duplicates.
 
     Deterministic deviation: the reference claims in unordered graph
@@ -531,9 +506,7 @@ def source_entity_precision_fuzzy(
         .withColumn("id", F.col("text"))
     )
     found_distinct = occ.select(F.col("label").alias("text"), F.col("label").alias("id"))
-    pairs = cosine_pairs(found_distinct, dict_labels, max_block).filter(
-        F.col("cos") >= threshold
-    )
+    pairs = cosine_pairs(found_distinct, dict_labels).filter(F.col("cos") >= SOFT_THRESHOLD)
     best = (
         pairs.withColumn(
             "rn",

@@ -1,7 +1,6 @@
 """TE expected-link metrics (SURVEY.md §2.9).
 
-Reimplements ``evaluate_expected_entity_links`` /
-``evaluate_expected_relation_links``
+Reimplements ``evaluate_expected_entity_links``
 (`/root/reference/src/kgpipe/evaluation/aspects/func/te_task_eval.py:56-120`,
 `reference.py:130-187`): for each document with expected link targets, count
 TE links of the given type above threshold whose mapping hits an expected
@@ -13,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgpipe_spark.eval.alignment import round6
+from kgpipe_spark.functions.literals import round6
 
 
 def evaluate_expected_links(
@@ -93,9 +92,3 @@ def evaluate_expected_entity_links(
     te_docs: DataFrame, expected: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     return evaluate_expected_links(te_docs, expected, "entity", threshold)
-
-
-def evaluate_expected_relation_links(
-    te_docs: DataFrame, expected: DataFrame, threshold: float = 0.5
-) -> DataFrame:
-    return evaluate_expected_links(te_docs, expected, "relation", threshold)

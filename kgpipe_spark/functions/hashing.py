@@ -22,8 +22,9 @@ from pyspark.sql import functions as F
 from kgpipe_spark.schemas import KG_NS
 
 
-def mint_uri_sha256(surface: Column, namespace: str = KG_NS, prefix: str = "newE/") -> Column:
-    return F.concat(F.lit(namespace + prefix), F.sha2(surface, 256))
+def mint_uri_sha256(surface: Column) -> Column:
+    """``KG_NS`` + ``newE/`` + sha256(surface)."""
+    return F.concat(F.lit(KG_NS + "newE/"), F.sha2(surface, 256))
 
 
 def stable_order_key(*cols: Column) -> Column:

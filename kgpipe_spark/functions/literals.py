@@ -5,6 +5,9 @@ Mirrors ``guess_literal``
 and ``_literal`` (`json_to_rdf.py:168-175`): bool → xsd:boolean,
 int → xsd:integer, float → xsd:decimal, ISO date → xsd:date,
 ISO dateTime → xsd:dateTime, fallback xsd:string.
+
+``round6`` rounds a double to 6 places the way the DuckDB oracle does, for
+every rounded score the engine emits.
 """
 
 from __future__ import annotations
@@ -37,3 +40,11 @@ def guess_literal_datatype(lex: Column) -> Column:
         .when(t.rlike(_FLOAT_RE) & t.rlike(r"[.eE]"), F.lit(XSD_DECIMAL))
         .otherwise(F.lit(XSD_STRING))
     )
+
+
+def round6(x: Column) -> Column:
+    """A double rounded to 6 places as DuckDB's ``round(x, 6)`` does it:
+    round(x·10⁶)/10⁶. Spark's ``round(x, 6)`` rounds the shortest decimal
+    string of x half-up instead, and splits some ties the other way
+    (41/640: 0.064063 there, 0.064062 here and in DuckDB)."""
+    return F.round(x * 1e6) / 1e6

@@ -195,14 +195,14 @@ def canonical_map(
     )
 
 
-def best_match_1to1(matches: DataFrame, max_rounds: int = 10) -> DataFrame:
+def best_match_1to1(matches: DataFrame) -> DataFrame:
     """Iterated symmetric best-match — the deterministic, distributable
     counterpart of the reference's greedy 1:1 reduction
     (`fusion/simple.py:41-67`).
 
     Each round keeps pairs that are the top match for BOTH endpoints
     (score desc, deterministic tiebreak), removes their endpoints, and
-    repeats on the residual pairs. This converges to the same matching as
+    repeats on the residual pairs, for at most 10 rounds. This converges to the same matching as
     sequential greedy whenever scores are distinct per endpoint (greedy's
     accepted pair is always locally symmetric-best among remaining pairs);
     ties are broken by id order instead of input order.
@@ -216,7 +216,7 @@ def best_match_1to1(matches: DataFrame, max_rounds: int = 10) -> DataFrame:
     remaining = matches
     accepted: DataFrame | None = None
     pair_key = F.sha2(F.concat_ws("\x01", "id_1", "id_2"), 256)
-    for _ in range(max_rounds):
+    for _ in range(10):
         pairs = remaining.withColumn("pk", pair_key)
         incid = pairs.select(F.col("id_1").alias("node"), "pk", "score").unionByName(
             pairs.select(F.col("id_2").alias("node"), "pk", "score")

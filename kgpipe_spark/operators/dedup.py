@@ -35,6 +35,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kgpipe_spark.functions.literals import round6
+
+_SHINGLE_N = 3
+_SIMHASH_BITS = 32
+
 
 def _norm_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
@@ -44,28 +49,26 @@ def _words(col: Column) -> Column:
     return F.filter(F.split(_norm_text(col), " "), lambda w: w != "")
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Array of distinct n-word shingles (JVM higher-order functions)."""
+def word_shingles(col: Column) -> Column:
+    """Array of distinct 3-word shingles (JVM higher-order functions)."""
     words = _words(col)
-    k = F.size(words) - F.lit(n - 1)
+    k = F.size(words) - F.lit(_SHINGLE_N - 1)
     shingles = F.when(
         k > 0,
         F.transform(
             F.sequence(F.lit(0), k - 1),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
+            lambda i: F.concat_ws(" ", F.slice(words, i + 1, _SHINGLE_N)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     return F.array_distinct(shingles)
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(content_hash, n_copies, keep_id, doc_ids) for texts appearing >1×.
+def exact_duplicates(docs: DataFrame) -> DataFrame:
+    """(content_hash, n_copies, keep_id, doc_ids) for ``text``s appearing >1×.
 
-    keep_id = min id — the deterministic survivor.
+    keep_id = min ``doc_id`` — the deterministic survivor.
     """
-    h = docs.select(
-        F.col(id_col).alias("doc_id"), F.md5(_norm_text(F.col(text_col))).alias("content_hash")
-    )
+    h = docs.select("doc_id", F.md5(_norm_text(F.col("text"))).alias("content_hash"))
     return (
         h.groupBy("content_hash")
         .agg(
@@ -77,8 +80,8 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def _shingle_tokens(docs: DataFrame, id_col: str, text_col: str, shingle_n: int) -> DataFrame:
-    """(id, token) — each doc's distinct n-word shingles, one row each.
+def _shingle_tokens(docs: DataFrame) -> DataFrame:
+    """(id, token) — each doc's distinct 3-word shingles, one row each.
 
     The input is repartitioned first: higher-order lambda expressions are
     interpreted (not codegen'd), so this projection is CPU-bound — a narrow
@@ -92,17 +95,17 @@ def _shingle_tokens(docs: DataFrame, id_col: str, text_col: str, shingle_n: int)
     # transform/slice lambda formulation is interpreted, ~5× slower), the
     # per-doc distinct and the signature aggregation all cluster on id.
     words = (
-        docs.repartition(n_part, F.col(id_col))
+        docs.repartition(n_part, F.col("doc_id"))
         .select(
-            F.col(id_col).alias("id"),
-            F.posexplode(_words(F.col(text_col))).alias("pos", "w"),
+            F.col("doc_id").alias("id"),
+            F.posexplode(_words(F.col("text"))).alias("pos", "w"),
         )
     )
     w = Window.partitionBy("id").orderBy("pos")
-    leads = [F.lead("w", j).over(w) for j in range(1, shingle_n)]
+    leads = [F.lead("w", j).over(w) for j in range(1, _SHINGLE_N)]
     return (
         words.withColumn("token", F.concat_ws(" ", F.col("w"), *leads))
-        .withColumn("_last", leads[-1] if leads else F.col("w"))
+        .withColumn("_last", leads[-1])
         .filter(F.col("_last").isNotNull())
         .select("id", "token")
         .distinct()  # set semantics (word_shingles is distinct) — local
@@ -224,64 +227,41 @@ def minhash_verified_pairs(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(doc_id, grams64, sig) over each doc's distinct n-word shingles —
-    ``minhash_token_signatures`` of the shingle set."""
-    tokens = _shingle_tokens(docs, id_col, text_col, shingle_n)
-    return minhash_token_signatures(tokens, num_hashes).withColumnRenamed("id", "doc_id")
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, grams64, sig) over each doc's distinct 3-word shingles —
+    the 16-hash ``minhash_token_signatures`` of the shingle set."""
+    return minhash_token_signatures(_shingle_tokens(docs)).withColumnRenamed("id", "doc_id")
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.5,
+    docs: DataFrame, num_hashes: int = 16, bands: int = 8, jaccard_threshold: float = 0.5
 ) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard) via banded MinHash-LSH
-    over word shingles.
+    """Near-duplicate ``doc_id`` pairs (id_a < id_b, jaccard) via banded
+    MinHash-LSH over the 3-word shingles of ``text``.
 
     Candidates share at least one full band; verification computes exact
     shingle-set Jaccard (array_intersect/union over the 64-bit gram-hash
     proxy sets — identical to string-set Jaccard barring a 2^-64 collision)
     and filters ≥ threshold.
     """
-    tokens = _shingle_tokens(docs, id_col, text_col, shingle_n)
-    sigs = minhash_token_signatures(tokens, num_hashes)
+    sigs = minhash_token_signatures(_shingle_tokens(docs), num_hashes)
     return minhash_verified_pairs(sigs, num_hashes, bands, jaccard_threshold).select(
-        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
+        "id_a", "id_b", round6(F.col("jaccard")).alias("jaccard")
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_block: int = 2000,
-) -> DataFrame:
-    """Exact n-gram Jaccard ≥ t pairs via shared-shingle blocking.
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact 3-word-shingle Jaccard ≥ t ``doc_id`` pairs via shared-shingle
+    blocking.
 
-    Blocks on each shingle (capped at ``max_block`` docs to kill stop-shingle
+    Blocks on each shingle (capped at 2,000 docs to kill stop-shingle
     blowup), counts shared shingles per pair, then Jaccard from per-doc
     shingle counts — no arrays are carried through the shuffle.
     """
     n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     sh = (
-        docs.repartition(n_part, F.col(id_col))
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(word_shingles(F.col(text_col), shingle_n)).alias("shingle"),
-        )
+        docs.repartition(n_part, F.col("doc_id"))
+        .select("doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle"))
         .dropDuplicates()
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
@@ -292,7 +272,7 @@ def ngram_jaccard_pairs(
     # self-join (AQE skew-splittable) handles large blocks gracefully. The
     # join stays.
     block_ok = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("bn")).filter(
-        F.col("bn") <= max_block
+        F.col("bn") <= 2000
     )
     sh_f = sh.join(block_ok.select("shingle"), "shingle", "left_semi")
 
@@ -308,20 +288,16 @@ def ngram_jaccard_pairs(
         .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_shingles", "nb"), "id_b")
         .withColumn("jaccard", F.col("common") / (F.col("na") + F.col("nb") - F.col("common")))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+        .select("id_a", "id_b", round6(F.col("jaccard")).alias("jaccard"))
     )
 
 
-def simhash_fingerprints(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 32
-) -> DataFrame:
-    """(doc_id, simhash BIGINT) — bit b set iff the majority of word tokens
-    have md5-bit b set. Pure JVM: per-token bits from conv(md5 hex, 16, 10).
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash BIGINT) — bit b of 32 set iff the majority of the
+    ``text``'s word tokens have md5-bit b set. Pure JVM: per-token bits from
+    conv(md5 hex, 16, 10).
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(_words(F.col(text_col)))).alias("tok"),
-    )
+    toks = docs.select("doc_id", F.explode(F.array_distinct(_words(F.col("text")))).alias("tok"))
     # token hash = first 8 hex chars of md5 → 32-bit int (conv returns string)
     toks = toks.withColumn(
         "th", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
@@ -330,30 +306,21 @@ def simhash_fingerprints(
         F.sum(F.when(F.shiftright(F.col("th"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(
             f"b{b}"
         )
-        for b in range(bits)
+        for b in range(_SIMHASH_BITS)
     ]
     agg = toks.groupBy("doc_id").agg(*per_bit)
     fp = None
-    for b in range(bits):
+    for b in range(_SIMHASH_BITS):
         bit = F.when(F.col(f"b{b}") > 0, F.lit(2 ** b)).otherwise(F.lit(0))
         fp = bit if fp is None else fp + bit
     return agg.select("doc_id", fp.cast("bigint").alias("simhash"))
 
 
-def simhash_near_duplicates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-    max_hamming: int = 3,
-    block_bits: int = 8,
-) -> DataFrame:
+def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Pairs with Hamming(simhash) ≤ max_hamming, blocked on the 4 byte-bands
     of the fingerprint (a pair within distance 3 must agree on ≥1 of 4
     bands — pigeonhole)."""
-    fps = simhash_fingerprints(docs, id_col, text_col, bits)
-    bands = bits // block_bits
-    mask = (1 << block_bits) - 1
+    fps = simhash_fingerprints(docs)
     banded = fps.select(
         "doc_id",
         "simhash",
@@ -363,9 +330,9 @@ def simhash_near_duplicates(
                     F.concat_ws(
                         ":",
                         F.lit(i),
-                        F.shiftright(F.col("simhash"), i * block_bits).bitwiseAND(F.lit(mask)),
+                        F.shiftright(F.col("simhash"), i * 8).bitwiseAND(F.lit(0xFF)),
                     )
-                    for i in range(bands)
+                    for i in range(_SIMHASH_BITS // 8)
                 ]
             )
         ).alias("band_key"),
@@ -386,16 +353,12 @@ def simhash_near_duplicates(
 
 
 def embedding_near_duplicates(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    bucket_col: str | None = None,
-    max_all_pairs: int = 20_000,
+    embeddings: DataFrame, threshold: float = 0.95, bucket_col: str | None = None
 ) -> DataFrame:
-    """Cosine ≥ t pairs. With ``bucket_col``, pairs are only searched within
-    buckets (IVF-style). Without one, the input is COUNTED first: up to
-    ``max_all_pairs`` rows run all-pairs exactly; above it, buckets are
+    """Cosine ≥ t (``vec_id``) pairs over the ``embedding`` column. With
+    ``bucket_col``, pairs are only searched within buckets (IVF-style).
+    Without one, the input is COUNTED first: up to 20,000 rows run
+    all-pairs exactly; above it, buckets are
     auto-derived from deterministic hyperplane LSH so the pair count stays
     bounded instead of going quadratic — at 100 TB an unbucketed cartesian
     is a plan that never finishes, so the guard refuses to build one.
@@ -408,21 +371,19 @@ def embedding_near_duplicates(
         # upstream 2-3×; localCheckpoint also breaks the twin lineage of the
         # a/b self-join
         embeddings = embeddings.localCheckpoint(eager=True)
-        if embeddings.count() > max_all_pairs:
+        if embeddings.count() > 20_000:
             from kgpipe_spark.operators.similarity import random_hyperplane_buckets
 
             # collision-safe derived-bucket name: the input may legitimately
             # carry its own 'bucket' column that the caller chose NOT to use
-            buckets = (
-                random_hyperplane_buckets(embeddings, id_col=id_col, vec_col=vec_col)
-                .withColumnRenamed("vec_id", id_col)
-                .withColumnRenamed("bucket", "_auto_bucket")
+            buckets = random_hyperplane_buckets(embeddings).withColumnRenamed(
+                "bucket", "_auto_bucket"
             )
-            embeddings = embeddings.drop("_auto_bucket").join(buckets, id_col)
+            embeddings = embeddings.drop("_auto_bucket").join(buckets, "vec_id")
             bucket_col = "_auto_bucket"
     e = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").cast("array<double>").alias("v"),
         *( [F.col(bucket_col).alias("bucket")] if bucket_col else [F.lit(0).alias("bucket")] ),
     ).withColumn(
         "norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
@@ -435,5 +396,5 @@ def embedding_near_duplicates(
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", dot / (F.col("na") * F.col("nb")))
         .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+        .select("id_a", "id_b", round6(F.col("cosine")).alias("cosine"))
     )

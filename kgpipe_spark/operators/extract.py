@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
 from kgpipe_spark.functions.literals import guess_literal_datatype
-from kgpipe_spark.functions.strings import split_camel_case
 from kgpipe_spark.schemas import (
     KG_NS,
     RDF_TYPE,
@@ -57,13 +56,13 @@ from kgpipe_spark.schemas import (
 # ---------------------------------------------------------------------------
 
 
-def salted_repartition(corpus: DataFrame, num_partitions: int, salt_buckets: int = 64) -> DataFrame:
-    """Repartition by (repo, hash(path) % salt) so one mega-repo spreads over
-    ``salt_buckets`` partitions instead of one (north rule skew handling)."""
+def salted_repartition(corpus: DataFrame, num_partitions: int) -> DataFrame:
+    """Repartition by (repo, hash(path) % 64) so one mega-repo spreads over
+    64 partitions instead of one (north rule skew handling)."""
     return corpus.repartition(
         num_partitions,
         F.col("repo"),
-        F.pmod(F.xxhash64(F.col("path")), F.lit(salt_buckets)),
+        F.pmod(F.xxhash64(F.col("path")), F.lit(64)),
     )
 
 
@@ -72,7 +71,6 @@ def salted_repartition(corpus: DataFrame, num_partitions: int, salt_buckets: int
 # ---------------------------------------------------------------------------
 
 _LABELISH = re.compile(r"(?i)^(.*(name|label|title)|displayname|preflabel)$")
-_CAMEL = re.compile(r"(?<=[a-z0-9])(?=[A-Z])")
 _INT_RE = re.compile(r"^[+-]?\d+$")
 _FLOAT_RE = re.compile(r"^[+-]?(\d+\.\d*|\.\d+|\d+)([eE][+-]?\d+)?$")
 _DATE_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
@@ -428,5 +426,4 @@ __all__ = [
     "extract_text_surface_triples",
     "mentions_from_triples",
     "unpivot_to_triples",
-    "split_camel_case",
 ]

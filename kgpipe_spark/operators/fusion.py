@@ -1,7 +1,7 @@
 """Fusion operators (SURVEY.md §2.7) + canonicalization rewrites (§2.6).
 
- - ``canonicalize_triples`` — rewrite subject / URI-object / predicate via a
-   canonical map (`preference.py:145-175`), emitting an ``owl:sameAs``
+ - ``canonicalize_triples`` — rewrite subject / URI-object via a canonical
+   map (`preference.py:145-175`), emitting an ``owl:sameAs``
    provenance DataFrame instead of the reference's sidecar graph.
  - ``fuse_first_value`` — the main fuser (`preference.py:103-227`):
    seed-priority first-value for fusable props (max_cardinality==1 ∪
@@ -46,11 +46,9 @@ def type_namespace_filter(triples: DataFrame, namespace: str) -> DataFrame:
     )
 
 
-def canonicalize_triples(
-    triples: DataFrame, canon: DataFrame, rewrite_predicates: bool = False
-) -> DataFrame:
-    """Rewrite subject and URI objects (and optionally predicates) to cluster
-    representatives. ``canon`` = (entity, canonical).
+def canonicalize_triples(triples: DataFrame, canon: DataFrame) -> DataFrame:
+    """Rewrite subject and URI objects to cluster representatives; predicates
+    are left as they are. ``canon`` = (entity, canonical).
 
     The map is alias-sized by construction (one row per *aliased* entity)
     while the triples side is the whole KG, so the map is always broadcast
@@ -71,7 +69,7 @@ def canonicalize_triples(
     obj_canon = c.select(
         F.col("entity").alias("object_lex"), F.col("canonical").alias("__obj_canon")
     )
-    out = (
+    return (
         out.join(obj_canon, "object_lex", "left")
         .withColumn(
             "object_lex",
@@ -82,16 +80,6 @@ def canonicalize_triples(
         )
         .drop("__obj_canon")
     )
-    if rewrite_predicates:
-        pred_canon = c.select(
-            F.col("entity").alias("predicate"), F.col("canonical").alias("__pred_canon")
-        )
-        out = (
-            out.join(pred_canon, "predicate", "left")
-            .withColumn("predicate", F.coalesce(F.col("__pred_canon"), F.col("predicate")))
-            .drop("__pred_canon")
-        )
-    return out
 
 
 def sameas_provenance(canon: DataFrame) -> DataFrame:
@@ -126,21 +114,17 @@ def allowed_predicates(ontology: DataFrame) -> DataFrame:
     return props.unionByName(extra).distinct()
 
 
-def select_first_value(
-    seed: DataFrame,
-    source: DataFrame,
-    ontology: DataFrame,
-    namespace: str = KG_NS + "onto/",
-) -> DataFrame:
+def select_first_value(seed: DataFrame, source: DataFrame, ontology: DataFrame) -> DataFrame:
     """Matchless merge of ``source`` into ``seed`` (`preference.py:34-101`):
     unlike ``fusion_first_value`` no id rewrite precedes — the source is
     filtered to allowed predicates, rdf:type objects outside the target
-    ontology namespace are dropped, then fusable props (max_cardinality==1
-    ∪ {label, type}) take the seed's value when present else ONE source
-    value, and non-fusable props union with a presence guard.
+    ontology namespace ``KG_NS + "onto/"`` are dropped, then fusable props
+    (max_cardinality==1 ∪ {label, type}) take the seed's value when present
+    else ONE source value, and non-fusable props union with a presence
+    guard.
     """
     src = type_namespace_filter(
-        allowed_predicate_filter(source, allowed_predicates(ontology)), namespace
+        allowed_predicate_filter(source, allowed_predicates(ontology)), KG_NS + "onto/"
     )
     return fuse_first_value(seed, src, fusable_predicates(ontology))
 
@@ -272,15 +256,10 @@ def fuse_majority(source: DataFrame) -> DataFrame:
     )
 
 
-def preference_fusion(
-    triples: DataFrame,
-    preferred_source: str = "target_kg",
-    score_col: str = "score",
-    source_col: str = "source",
-) -> DataFrame:
-    """One value per (subject, predicate): the highest-scoring value from
-    ``preferred_source`` when that source contributed any, else the overall
-    highest-scoring value.
+def preference_fusion(triples: DataFrame) -> DataFrame:
+    """One value per (subject, predicate): the highest-``score`` value whose
+    ``source`` is ``target_kg`` when that source contributed any, else the
+    overall highest-scoring value.
 
     Mirrors ``preference_fusion``
     (`/root/reference/src/kgpipe_tasks/entity_resolution/fusion/preference.py:230-252`).
@@ -288,8 +267,8 @@ def preference_fusion(
     dependent); we pin a stable content-hash tiebreak (SURVEY.md §4.2.4).
     """
     w = Window.partitionBy("subject", "predicate").orderBy(
-        F.when(F.col(source_col) == preferred_source, 0).otherwise(1),
-        F.desc(score_col),
+        F.when(F.col("source") == "target_kg", 0).otherwise(1),
+        F.desc("score"),
         stable_order_key(
             F.col("object_lex"), F.col("object_kind"), F.col("object_datatype")
         ),

@@ -162,49 +162,46 @@ def link_embedding_topk(
 # ---------------------------------------------------------------------------
 
 
-def link_or_mint(linked_mentions: DataFrame, accept: float = DEFAULT_ACCEPT) -> DataFrame:
-    """Accepted link → reuse URI; else mint ``newE/sha256(surface)``.
+def link_or_mint(linked_mentions: DataFrame) -> DataFrame:
+    """Accepted link (score ≥ ``DEFAULT_ACCEPT``) → reuse URI; else mint
+    ``newE/sha256(surface)``.
 
     Mirrors ``_link_or_create_entity`` (extract_json.py:478-521) with the
     reference's sha256 minting (benchutils.py:10-14).
     """
+    accepted = F.coalesce(F.col("score"), F.lit(0.0)) >= DEFAULT_ACCEPT
     return linked_mentions.withColumn(
         "resolved_uri",
-        F.when(
-            F.col("mapping").isNotNull() & (F.coalesce(F.col("score"), F.lit(0.0)) >= accept),
-            F.col("mapping"),
-        ).otherwise(mint_uri_sha256(normalize_label(F.col("query_text")))),
+        F.when(F.col("mapping").isNotNull() & accepted, F.col("mapping")).otherwise(
+            mint_uri_sha256(normalize_label(F.col("query_text")))
+        ),
     )
 
 
-def char_gram_set(norm: "F.Column", n: int = 3) -> "F.Column":
-    """Distinct char-n-grams of an (already normalized) string, JVM-side.
+def char_gram_set(norm: "F.Column") -> "F.Column":
+    """Distinct char-3-grams of an (already normalized) string, JVM-side.
 
     ``sequence(1, length-2)`` would run *descending* for short strings
     (Spark's sequence fills stop < start), so the under-length case is
     guarded to an empty array explicitly.
     """
     return F.when(
-        F.length(norm) >= n,
+        F.length(norm) >= 3,
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(1), F.length(norm) - (n - 1)),
-                lambda i: F.substring(norm, i, n),
+                F.sequence(F.lit(1), F.length(norm) - 2),
+                lambda i: F.substring(norm, i, 3),
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
 
 
-def minted_near_edges(
-    minted_dict: DataFrame,
-    jaccard_threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame:
+def minted_near_edges(minted_dict: DataFrame) -> DataFrame:
     """(src, dst) edges between minted URIs whose normalized surfaces are
     near-identical: the engine's one banded MinHash-LSH
-    (``dedup.minhash_token_signatures`` → ``dedup.minhash_verified_pairs``)
-    over char-3-gram sets, verified by set Jaccard ≥ threshold.
+    (``dedup.minhash_token_signatures`` → ``dedup.minhash_verified_pairs``,
+    16 hashes in 8 bands) over char-3-gram sets, verified by set
+    Jaccard ≥ 0.5.
 
     The md5-derived hash family is deterministic and engine-portable, so the
     whole two-pass linker replays in DuckDB (unlike MLlib MinHashLSH, whose
@@ -217,20 +214,12 @@ def minted_near_edges(
     tokens = minted_dict.select(
         F.col("uri").alias("id"), F.explode(char_gram_set(F.col("norm"))).alias("token")
     )
-    sigs = minhash_token_signatures(tokens, num_hashes)
-    return minhash_verified_pairs(sigs, num_hashes, bands, jaccard_threshold).select(
+    return minhash_verified_pairs(minhash_token_signatures(tokens)).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
 
 
-def link_two_pass(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    accept: float = DEFAULT_ACCEPT,
-    jaccard_threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 8,
-) -> DataFrame:
+def link_two_pass(mentions: DataFrame, dictionary: DataFrame) -> DataFrame:
     """Two-pass replacement for the reference's mutable dynamic index
     (extract_json.py:84-89,498-510).
 
@@ -245,7 +234,7 @@ def link_two_pass(
     """
     from kgpipe_spark.operators.cluster import connected_components
 
-    pass1 = link_or_mint(link_exact(mentions, dictionary), accept)
+    pass1 = link_or_mint(link_exact(mentions, dictionary))
     minted = pass1.filter(F.col("mapping").isNull())
     # uri = sha256(normalized surface), so uri ↔ norm is functional; dedup by
     # uri keeps one deterministic (uri, norm) row even when several raw
@@ -254,7 +243,7 @@ def link_two_pass(
         F.col("resolved_uri").alias("uri"),
         normalize_label(F.col("query_text")).alias("norm"),
     ).dropDuplicates(["uri"])
-    edges = minted_near_edges(minted_dict, jaccard_threshold, num_hashes, bands)
+    edges = minted_near_edges(minted_dict)
     comp = connected_components(edges)
     rewrite = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("resolved_uri"), F.col("component").alias("_canon")

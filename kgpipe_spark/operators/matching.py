@@ -17,7 +17,7 @@ Native replacements for the reference's Docker matchers:
  - ``map_matched_relations`` rewrites source predicates by accepted relation
    matches (`rdf_om.py:445-451`).
 
-Scale notes: blocks are capped (``max_block_size``) so a stop-word token
+Scale notes: blocks are capped (1,000² candidate pairs) so a stop-word token
 cannot create a quadratic block — the standard meta-blocking guard; the
 final pair scoring is a shuffle join on (block token) with AQE skew
 splitting.
@@ -45,12 +45,7 @@ def _entity_tokens(kg: DataFrame, side: str) -> DataFrame:
     )
 
 
-def token_blocking_matches(
-    kg1: DataFrame,
-    kg2: DataFrame,
-    threshold: float = 0.3,
-    max_block_size: int = 1000,
-) -> DataFrame:
+def token_blocking_matches(kg1: DataFrame, kg2: DataFrame, threshold: float = 0.3) -> DataFrame:
     """Token-blocked entity candidates scored by token Jaccard.
 
     matches(id_1, id_2, score, id_type='entity'); score = |T1∩T2|/|T1∪T2|.
@@ -61,11 +56,11 @@ def token_blocking_matches(
     sizes1 = t1.groupBy("id_1").agg(F.count(F.lit(1)).alias("n1"))
     sizes2 = t2.groupBy("id_2").agg(F.count(F.lit(1)).alias("n2"))
 
-    # meta-blocking guard: drop tokens whose block would exceed the cap
+    # meta-blocking guard: drop tokens whose block would exceed 1000² pairs
     block_sizes = (
         t1.groupBy("token").agg(F.count(F.lit(1)).alias("b1"))
         .join(t2.groupBy("token").agg(F.count(F.lit(1)).alias("b2")), "token")
-        .filter((F.col("b1") * F.col("b2")) <= max_block_size * max_block_size)
+        .filter((F.col("b1") * F.col("b2")) <= 1000 * 1000)
         .select("token")
     )
     t1 = t1.join(F.broadcast(block_sizes), "token", "left_semi")
@@ -136,9 +131,7 @@ def blocked_entity_matching(
     return boosted
 
 
-def schema_column_matching(
-    df1: DataFrame, df2: DataFrame, sample_rows: int = 500, threshold: float = 0.5
-) -> DataFrame:
+def schema_column_matching(df1: DataFrame, df2: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Valentine-style column matching: name similarity + value overlap on a
     bounded sample (the reference samples 500 rows,
     `valentine_schema_matching.py:74`). Tiny data → computed via a driver
@@ -146,8 +139,8 @@ def schema_column_matching(
     emits matches with id_type='relation'."""
     import pandas as pd
 
-    s1 = df1.limit(sample_rows).toPandas()
-    s2 = df2.limit(sample_rows).toPandas()
+    s1 = df1.limit(500).toPandas()
+    s2 = df2.limit(500).toPandas()
     rows = []
     for c1 in s1.columns:
         v1 = set(s1[c1].dropna().astype(str).str.lower())
@@ -173,14 +166,12 @@ def normalize_py(s: str) -> str:
     return re.sub(r"\s+", " ", s.replace("_", " ").replace("-", " ")).strip().lower()
 
 
-def map_matched_relations(
-    triples: DataFrame, relation_matches: DataFrame, threshold: float = 0.5
-) -> DataFrame:
-    """Rewrite predicates by accepted relation matches (`rdf_om.py:445-451`):
-    coalesce(mapped, predicate)."""
+def map_matched_relations(triples: DataFrame, relation_matches: DataFrame) -> DataFrame:
+    """Rewrite predicates by accepted relation matches (score > 0.5,
+    `rdf_om.py:445-451`): coalesce(mapped, predicate)."""
     mapping = (
         relation_matches.filter(
-            (F.col("id_type") == "relation") & (F.col("score") > threshold)
+            (F.col("id_type") == "relation") & (F.col("score") > 0.5)
         )
         .groupBy(F.col("id_1").alias("predicate"))
         .agg(F.min("id_2").alias("__mapped"))

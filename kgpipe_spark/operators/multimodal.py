@@ -63,7 +63,7 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def synth_media(spark: SparkSession, n_rows: int, seed: int = 42) -> DataFrame:
+def synth_media(spark: SparkSession, n_rows: int) -> DataFrame:
     """Deterministic fake media table: payload = sha-derived bytes."""
     df = spark.range(n_rows)
     kind = (
@@ -71,7 +71,7 @@ def synth_media(spark: SparkSession, n_rows: int, seed: int = 42) -> DataFrame:
         .when(F.pmod("id", F.lit(3)) == 1, F.lit("audio"))
         .otherwise(F.lit("video"))
     )
-    payload = F.encode(F.sha2(F.concat(F.lit(f"media-{seed}-"), F.col("id")), 256), "utf-8")
+    payload = F.encode(F.sha2(F.concat(F.lit("media-42-"), F.col("id")), 256), "utf-8")
     return df.select(
         F.col("id").alias("media_id"),
         kind.alias("kind"),

@@ -45,11 +45,10 @@ def json_paths(contents: pd.Series) -> pd.Series:
     return pd.Series(res)
 
 
-def greedy_set_cover_sample(
-    corpus: DataFrame, id_cols: list[str] | None = None, max_docs: int = 100
-) -> list[dict]:
-    """Greedy set cover: returns [{**ids, "paths": [...]}] covering all paths."""
-    id_cols = id_cols or ["repo", "path"]
+def greedy_set_cover_sample(corpus: DataFrame) -> list[dict]:
+    """Greedy set cover: returns [{repo, path, "paths": [...]}] covering all
+    paths, at most 100 documents."""
+    id_cols = ["repo", "path"]
     with_paths = (
         corpus.filter(F.col("lang") == "json")
         .select(*id_cols, json_paths(F.col("content")).alias("json_paths"))
@@ -77,7 +76,7 @@ def greedy_set_cover_sample(
 
     covered: set[str] = set()
     picked: list[dict] = []
-    while covered != universe and len(picked) < max_docs:
+    while covered != universe and len(picked) < 100:
         best = min(
             docs,
             key=lambda d: (

@@ -1,5 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
+The corpus side is a ``(vec_id, embedding)`` frame and the query side a
+``(q_id, q_vec)`` frame.
+
  - ``cosine_topk_bruteforce`` — exact top-k neighbors for a query set via
    JVM `zip_with`/`aggregate` dot products + Window top-k. The correctness
    baseline; O(n·q) but fully distributed and codegen'd.
@@ -19,6 +22,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from kgpipe_spark.functions.literals import round6
 
 
 def _dot(a: str | Column, b: str | Column) -> Column:
@@ -47,33 +52,27 @@ def _ensure_compute_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
+def _vectors(embeddings: DataFrame) -> DataFrame:
+    return embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+
+
+def _query_vectors(queries: DataFrame) -> DataFrame:
+    return queries.select("q_id", F.col("q_vec").cast("array<double>").alias("qv"))
+
+
 def _norm(v: str | Column) -> Column:
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_topk_bruteforce(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-) -> DataFrame:
+def cosine_topk_bruteforce(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """(q_id, vec_id, cosine, rank) — exact top-k per query.
 
     The query set is broadcast (it is small by construction); the corpus side
     streams through one codegen'd projection — no shuffle until the top-k
     window, which AQE keeps partition-local via partial top-k.
     """
-    e = _ensure_compute_parallelism(
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
-        )
-    ).withColumn("vnorm", _norm("v"))
-    q = queries.select(
-        F.col(q_id_col).alias("q_id"), F.col(q_vec_col).cast("array<double>").alias("qv")
-    ).withColumn("qnorm", _norm("qv"))
+    e = _ensure_compute_parallelism(_vectors(embeddings)).withColumn("vnorm", _norm("v"))
+    q = _query_vectors(queries).withColumn("qnorm", _norm("qv"))
     joined = e.crossJoin(F.broadcast(q))
     scored = joined.select(
         "q_id",
@@ -84,7 +83,7 @@ def cosine_topk_bruteforce(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
+        .select("q_id", "vec_id", round6(F.col("cosine")).alias("cosine"), "rank")
     )
 
 
@@ -100,20 +99,15 @@ def _deterministic_hyperplanes(dim: int, n_planes: int) -> np.ndarray:
     return np.asarray(rows, dtype=np.float64)
 
 
-def random_hyperplane_buckets(
-    embeddings: DataFrame,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def random_hyperplane_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
     """(vec_id, bucket) — sign-pattern bucket over deterministic hyperplanes.
 
     The planes are literal arrays baked into the plan (they are tiny), so the
     whole operator is one JVM projection.
     """
-    dim = len(embeddings.select(vec_col).first()[0])
+    dim = len(embeddings.select("embedding").first()[0])
     planes = _deterministic_hyperplanes(dim, n_planes)
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     bits = []
     for p in range(n_planes):
         plane = F.array(*[F.lit(float(x)) for x in planes[p]])
@@ -122,7 +116,7 @@ def random_hyperplane_buckets(
     bucket = bits[0]
     for b in bits[1:]:
         bucket = bucket + b
-    return embeddings.select(F.col(id_col).alias("vec_id"), bucket.cast("int").alias("bucket"))
+    return embeddings.select("vec_id", bucket.cast("int").alias("bucket"))
 
 
 def ivf_topk(
@@ -131,10 +125,6 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
     lloyd_steps: int = 1,
 ) -> DataFrame:
     """Approximate top-k: centroid-partitioned search (IVF).
@@ -147,15 +137,19 @@ def ivf_topk(
 
     ``lloyd_steps=0`` keeps the raw sample centroids — fully bit-exact
     cross-engine (no float means whose summation order varies with the
-    shuffle), which is what the driver-gated recall query uses.
+    shuffle), which is what the oracle-gated recall query uses. With a Lloyd
+    step the means can shift by an ULP with summation order, which follows
+    the input's partitioning, so neighbours near a tie can change rank.
+
+    The sample is read before ``_ensure_compute_parallelism``'s repartition,
+    and a Lloyd step cuts the repartitioned vectors first, so the
+    repartition's shuffle runs once however many actions read it.
     """
-    e = _ensure_compute_parallelism(
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
-        )
-    )
-    init = [r["v"] for r in e.orderBy("vec_id").limit(n_centroids).collect()]
+    vecs = _vectors(embeddings)
+    init = [r["v"] for r in vecs.orderBy("vec_id").limit(n_centroids).collect()]
+    e = _ensure_compute_parallelism(vecs)
     if lloyd_steps > 0:
+        e = e.localCheckpoint(eager=False)
         assign = _assign_nearest(e, init)
         means = (
             assign.select("cid", F.posexplode("v").alias("pos", "x"))
@@ -173,10 +167,7 @@ def ivf_topk(
 
     assigned = _assign_nearest(e, cent_list).select("vec_id", "v", "cid")
 
-    q = queries.select(
-        F.col(q_id_col).alias("q_id"), F.col(q_vec_col).cast("array<double>").alias("qv")
-    )
-    q_probe = _assign_topn(q, cent_list, nprobe)
+    q_probe = _assign_topn(_query_vectors(queries), cent_list, nprobe)
 
     joined = assigned.join(q_probe, "cid")
     scored = joined.select(
@@ -188,7 +179,7 @@ def ivf_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
+        .select("q_id", "vec_id", round6(F.col("cosine")).alias("cosine"), "rank")
     )
 
 

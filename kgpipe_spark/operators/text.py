@@ -1,8 +1,8 @@
 """Text-analysis operators for training-data pipelines.
 
-All pure JVM column expressions (regexp/size/aggregate) — these run over
-every document of a 100 TB corpus, so they must stay inside whole-stage
-codegen; no Python anywhere.
+Each reads a ``(doc_id, text)`` frame. All pure JVM column expressions
+(regexp/size/aggregate) — these run over every document of a 100 TB corpus,
+so they must stay inside whole-stage codegen; no Python anywhere.
 
  - ``token_count``      — whitespace tokens + BPE-ish subword piece count.
  - ``quality_features`` — length / punctuation ratio / stopword ratio /
@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kgpipe_spark.functions.literals import round6
+
 _STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for"],
     "de": ["der", "die", "das", "und", "ist", "nicht", "ein", "mit", "von", "zu"],
@@ -30,33 +32,33 @@ def _words(col: Column) -> Column:
     return F.filter(F.split(F.trim(F.lower(col)), r"\s+"), lambda w: w != "")
 
 
-def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """(doc_id, n_ws_tokens, n_subword_tokens, n_chars).
 
     n_subword_tokens uses a BPE-ish regex: word pieces ≤4 chars count 1,
     longer words count ceil(len/4) — a deterministic token estimator.
     """
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
     subword = F.aggregate(
         words,
         F.lit(0).cast("bigint"),
         lambda acc, w: acc + F.ceil(F.length(w) / F.lit(4.0)).cast("bigint"),
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.size(words).cast("bigint").alias("n_ws_tokens"),
         subword.alias("n_subword_tokens"),
-        F.length(F.col(text_col)).cast("bigint").alias("n_chars"),
+        F.length(F.col("text")).cast("bigint").alias("n_chars"),
     )
 
 
-def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """(doc_id, n_words, punct_ratio, stopword_ratio, mean_word_len, quality).
 
     quality ∈ [0,1]: length-capped × (1 - excess punctuation) ×
     stopword presence — a deterministic analog of common quality filters.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     words = _words(text)
     n_words = F.size(words)
     n_chars = F.length(text)
@@ -74,19 +76,19 @@ def quality_features(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
         F.lit(0.5) + F.least(stopword_ratio * 2, F.lit(0.5))
     )
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         n_words.cast("bigint").alias("n_words"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stopword_ratio, 6).alias("stopword_ratio"),
-        F.round(mean_wl, 6).alias("mean_word_len"),
-        F.round(quality, 6).alias("quality"),
+        round6(punct_ratio).alias("punct_ratio"),
+        round6(stopword_ratio).alias("stopword_ratio"),
+        round6(mean_wl).alias("mean_word_len"),
+        round6(quality).alias("quality"),
     )
 
 
-def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """(doc_id, pred_lang) — argmax of stopword hits per language, 'und' when
     all zero; ties break by language code order (deterministic)."""
-    words = _words(F.col(text_col))
+    words = _words(F.col("text"))
 
     def _hits(lang: str) -> Column:
         stops = list(_STOPWORDS[lang])
@@ -97,18 +99,18 @@ def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
         hit_cols.append(F.struct(_hits(lang).alias("hits"), F.lit(lang).alias("lang")))
     best = F.array_max(F.array(*hit_cols))
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und")).alias("pred_lang"),
     )
 
 
-def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """(doc_id, content_fp, shingle_fp) — md5 of normalized text and md5 of
     the sorted distinct word set (order-insensitive)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    words_sorted = F.sort_array(F.array_distinct(_words(F.col(text_col))))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    words_sorted = F.sort_array(F.array_distinct(_words(F.col("text"))))
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.md5(norm).alias("content_fp"),
         F.md5(F.concat_ws("\x01", words_sorted)).alias("shingle_fp"),
     )

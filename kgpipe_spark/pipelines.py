@@ -405,9 +405,9 @@ def run_flagship_checkpointed(
     seed: DataFrame,
     checkpoint_dir: str,
     input_fingerprint: str = "corpus",
-    ontology: DataFrame | None = None,
 ):
-    """Flagship run through the content-addressed checkpoint driver.
+    """Flagship run, with the default flagship ontology, through the
+    content-addressed checkpointed ``plans.pipeline.Pipeline``.
 
     Each stage snapshots to ``{checkpoint_dir}/stage-{chain_hash}.parquet``
     and logs (rows, partitions, duration) to ``manifest.json`` — the north
@@ -435,7 +435,7 @@ def run_flagship_checkpointed(
         ),
         Stage(
             "fuse_complete",
-            lambda df: _stage_fuse_complete(spark, df, seed, ontology),
+            lambda df: _stage_fuse_complete(spark, df, seed),
             config={"code": code_token(_stage_fuse_complete)},
         ),
     ]

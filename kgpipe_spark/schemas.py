@@ -39,9 +39,6 @@ XSD_DATETIME = XSD + "dateTime"
 # (`/root/reference/src/kgpipe_tasks/construction/json_to_rdf.py:14`)
 KG_NS = "http://kg.org/"
 
-OBJECT_KIND_URI = "uri"
-OBJECT_KIND_LITERAL = "literal"
-
 # ---------------------------------------------------------------------------
 # Corpus table (BASELINE.json input_hint)
 # ---------------------------------------------------------------------------
@@ -128,31 +125,5 @@ TE_DOCUMENT_SCHEMA = StructType(
         StructField("triples", ArrayType(TE_TRIPLE), True),
         StructField("chains", ArrayType(TE_CHAIN), True),
         StructField("links", ArrayType(TE_PAIR), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Ontology (broadcast dimension; mirrors kgcore OwlProperty usage,
-# `/root/reference/src/kgpipe_tasks/entity_resolution/fusion/preference.py:44-46`)
-# ---------------------------------------------------------------------------
-ONTOLOGY_SCHEMA = StructType(
-    [
-        StructField("uri", StringType(), False),
-        StructField("label", StringType(), True),
-        StructField("aliases", ArrayType(StringType()), True),
-        StructField("domain", StringType(), True),
-        StructField("range", StringType(), True),
-        StructField("is_object_prop", StringType(), True),  # 'true'|'false'
-        StructField("max_cardinality", IntegerType(), True),
-    ]
-)
-
-# Extraction mention rows (decomposed linking input, SURVEY.md §2.4)
-MENTION_SCHEMA = StructType(
-    [
-        StructField("doc_uri", StringType(), False),
-        StructField("json_path", StringType(), True),
-        StructField("kind", StringType(), False),  # 'entity' | 'relation'
-        StructField("query_text", StringType(), False),
     ]
 )

@@ -31,27 +31,24 @@ DEFAULT_PREFIXES = {
 }
 
 
-def _expand_prefix(col, prefixes: dict[str, str]):
-    """Prefixed URI → full URI via chained conditionals over the tiny map."""
+def _expand_prefix(col):
+    """Prefixed URI → full URI via chained conditionals over the tiny
+    ``DEFAULT_PREFIXES`` map."""
     expr = col
-    for pfx, ns in prefixes.items():
+    for pfx, ns in DEFAULT_PREFIXES.items():
         expr = F.when(
             col.startswith(pfx), F.concat(F.lit(ns), F.substring(col, len(pfx) + 1, 10_000))
         ).otherwise(expr)
     return expr
 
 
-def read_paris_dir(
-    spark: SparkSession, paris_dir: str, prefixes: dict[str, str] | None = None
-) -> DataFrame:
+def read_paris_dir(spark: SparkSession, paris_dir: str) -> DataFrame:
     """PARIS csv dir → ER matches DataFrame (last non-empty iteration).
 
     Iteration choice happens on the driver (it is a handful of small files —
     exactly what the reference does, paris_rdf_matcher.py:102-157); the TSV
     parse is a parallel spark.read.csv.
     """
-    prefixes = prefixes or DEFAULT_PREFIXES
-
     def last_nonempty(pattern: str) -> str | None:
         files = sorted(
             glob.glob(os.path.join(paris_dir, pattern)),
@@ -68,8 +65,8 @@ def read_paris_dir(
         df = spark.read.csv(eqv, sep="\t").toDF("id_1", "id_2", "score")
         parts.append(
             df.select(
-                _expand_prefix(F.col("id_1"), prefixes).alias("id_1"),
-                _expand_prefix(F.col("id_2"), prefixes).alias("id_2"),
+                _expand_prefix(F.col("id_1")).alias("id_1"),
+                _expand_prefix(F.col("id_2")).alias("id_2"),
                 F.col("score").cast("double").alias("score"),
                 F.lit("entity").alias("id_type"),
             )
@@ -80,8 +77,8 @@ def read_paris_dir(
             df = spark.read.csv(rel, sep="\t").toDF("id_1", "id_2", "score")
             parts.append(
                 df.select(
-                    _expand_prefix(F.col("id_1"), prefixes).alias("id_1"),
-                    _expand_prefix(F.col("id_2"), prefixes).alias("id_2"),
+                    _expand_prefix(F.col("id_1")).alias("id_1"),
+                    _expand_prefix(F.col("id_2")).alias("id_2"),
                     F.col("score").cast("double").alias("score"),
                     F.lit("relation").alias("id_type"),
                 )
@@ -185,17 +182,17 @@ def write_csv_table(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").option("header", True).csv(path)
 
 
-def read_cluster_file(spark: SparkSession, path: str, delimiter: str = "\t") -> DataFrame:
+def read_cluster_file(spark: SparkSession, path: str) -> DataFrame:
     """verified_matches-style gold file → (uris array<string>) cluster rows.
 
     Mirrors ``load_matches`` (`/root/reference/src/kgpipe/evaluation/
     cluster.py:134-175`): per line, TSV two-column rows are pairs, n-column
-    rows are clusters; empty cells dropped; lines whose first row lacks the
-    delimiter fall back to comma. Pair with ``eval.er_eval.cluster_pairs``
+    rows are clusters; empty cells dropped; a file whose first line holds no
+    tab is split on commas instead. Pair with ``eval.er_eval.cluster_pairs``
     for the pairwise edge list."""
     lines = spark.read.text(path)
     first = lines.limit(1).collect()
-    sep = delimiter if (first and delimiter in first[0]["value"]) else ","
+    sep = "\t" if (first and "\t" in first[0]["value"]) else ","
     return (
         lines.select(F.split(F.col("value"), sep).alias("raw"))
         .select(

@@ -138,3 +138,23 @@ def test_prf_projections_round_41_of_640_like_duckdb(spark):
     counts = spark.createDataFrame([(41, 599, 599)], "tp bigint, fp bigint, fn bigint")
     assert tuple(prf_from_counts(counts).collect()[0]) == by_counts
     assert tuple(prf_from_rates(counts).collect()[0]) == by_rates
+
+
+def test_quality_features_round_41_of_640_like_duckdb(spark):
+    """A 640-character text holding 41 punctuation characters has
+    punct_ratio 41/640, the tie above: ``quality_features`` must report
+    DuckDB's 0.064062, and every column must equal its oracle's."""
+    from __spark_entry__ import oracle_sql
+    from kgpipe_spark.operators.text import quality_features
+
+    text = " ".join(["the" + "w" * 5 + "!"] * 41)
+    text += " " + "z" * (640 - len(text) - 1)
+    assert len(text) == 640 and sum(not (c.isalnum() or c.isspace()) for c in text) == 41
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT CAST(1 AS BIGINT) AS doc_id, ? AS text", [text])
+    expected = con.execute(oracle_sql()["doc_quality_features"]).fetchone()
+    assert expected[2] == 0.064062
+
+    docs = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
+    assert tuple(quality_features(docs).collect()[0]) == expected

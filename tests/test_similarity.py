@@ -95,3 +95,28 @@ def test_ivf_recall_at_partial_probe(spark):
     overlap = ivf.join(bf.select("q_id", "vec_id"), ["q_id", "vec_id"], "left_semi").count()
     total = bf.count()
     assert overlap / total >= 0.5  # partial probe keeps at least half the hits
+
+
+def test_ivf_lloyd_step_repartitions_an_under_split_input_once(spark, emb):
+    """Over a 1-partition input, building the IVF plan with a Lloyd step
+    runs 5 Spark jobs: the centroid sample (read before the repartition)
+    and the Lloyd means. Re-running the repartition under each action
+    took 6. The final query reads the cut vectors instead of shuffling
+    them again, and its rows equal the spread input's."""
+    df, vecs = emb
+    q = spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]]) for i in range(3)], "q_id bigint, q_vec array<double>"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-lloyd-plan", "plan only")
+    try:
+        out = ivf_topk(df.coalesce(1), q, k=5, n_centroids=8, nprobe=4, lloyd_steps=1)
+        jobs = sc.statusTracker().getJobIdsForGroup("ivf-lloyd-plan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 5
+    assert "RoundRobinPartitioning" not in out._jdf.queryExecution().executedPlan().toString()
+    wide = ivf_topk(df.repartition(8), q, k=5, n_centroids=8, nprobe=4, lloyd_steps=1)
+    assert {(r["q_id"], r["vec_id"]) for r in out.collect()} == {
+        (r["q_id"], r["vec_id"]) for r in wide.collect()
+    }

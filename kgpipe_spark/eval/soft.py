@@ -32,9 +32,12 @@ every intermediate bit-exactly:
 
 All sums are sums of small integers (exact in double regardless of addition
 order); the only roundings are two sqrts, one multiply, one divide — all
-IEEE-correctly-rounded, hence identical across engines.  The cosine value is
-numerically the same as the float32 dense cosine up to 1e-6, far from the
-0.95 acceptance threshold on any realistic margin.
+IEEE-correctly-rounded, hence identical across engines. A vector whose
+signed counts all cancel (e.g. "ig", "rd") has norm 0; its cosine is NULL,
+what DuckDB's ``0 / 0`` gives the oracle, so it ranks after every score and
+passes no threshold. ``_bin_cosine`` is the one place this formula runs.
+The cosine value is numerically the same as the float32 dense cosine up to
+1e-6, far from the 0.95 acceptance threshold on any realistic margin.
 
 Scale design: candidate pairs come from a *shared-gram equi-join* with a
 frequency cap (mirroring ``dedup.py``'s blocked joins) rather than the
@@ -69,18 +72,26 @@ def clean_label(c: F.Column) -> F.Column:
 # ---------------------------------------------------------------------------
 
 
+def _grams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, g): every char-3-gram of ``' ' + lower(text) + ' '``."""
+    s = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
+    return (
+        df.select(F.col(id_col).alias("id"), s.alias("s"))
+        # Spark sequence(1, n<1) is DESCENDING, not empty — guard short strings
+        .filter(F.length("s") >= 3)
+        .withColumn("j", F.explode(F.sequence(F.lit(1), F.length("s") - 2)))
+        .select("id", F.col("s").substr(F.col("j"), F.lit(3)).alias("g"))
+    )
+
+
 def gram_bins(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, bin, v): signed char-3-gram counts over ``EMBED_BINS`` bins, the
     sparse integer form of
     ``embedders.HashedGramEmbedder.encode`` (same md5
     first-4-bytes-little-endian hash, same sign bit 31, same modulus)."""
-    s = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
     d = (
-        df.select(F.col(id_col).alias("id"), s.alias("s"))
-        # Spark sequence(1, n<1) is DESCENDING, not empty — guard short strings
-        .filter(F.length("s") >= 3)
-        .withColumn("j", F.explode(F.sequence(F.lit(1), F.length("s") - 2)))
-        .withColumn("m", F.md5(F.col("s").substr(F.col("j"), F.lit(3))))
+        _grams(df, id_col, text_col)
+        .withColumn("m", F.md5("g"))
         .withColumn(
             "h",
             F.conv(
@@ -100,19 +111,33 @@ def gram_bins(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return d.groupBy("id", "bin").agg(F.sum("sign").alias("v"))
 
 
-def _with_norms(vec: DataFrame) -> DataFrame:
-    """(id, ssq): integer sum of squares per vector (exact)."""
-    return vec.groupBy("id").agg(F.sum(F.col("v") * F.col("v")).alias("ssq"))
+def _bin_cosine(lv: DataFrame, rv: DataFrame, cand: DataFrame | None) -> DataFrame:
+    """(lid, rid, cos) over ``gram_bins`` vectors ``lv`` × ``rv``: the
+    integer bin dot over ``sqrt(Σ v²) · sqrt(Σ w²)``, NULL when either norm
+    is 0 — the oracle's ``sum(v·w) / (sqrt(min(ssq)) · sqrt(min(ssq)))``.
+    Scores the (lid, rid) pairs of ``cand`` that share a bin, or with
+    ``cand=None`` every pair sharing a bin, the right side broadcast.
 
+    Each bin row carries its vector's ssq (a window over the id), so the
+    pair aggregate needs no join after it."""
 
-def _grams_distinct(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    s = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
-    return (
-        df.select(F.col(id_col).alias("id"), s.alias("s"))
-        .filter(F.length("s") >= 3)
-        .withColumn("j", F.explode(F.sequence(F.lit(1), F.length("s") - 2)))
-        .select("id", F.col("s").substr(F.col("j"), F.lit(3)).alias("g"))
-        .distinct()
+    def with_ssq(vec: DataFrame, id_: str, val: str, ssq: str) -> DataFrame:
+        return vec.select(
+            F.col("id").alias(id_),
+            "bin",
+            F.col("v").alias(val),
+            F.sum(F.col("v") * F.col("v")).over(Window.partitionBy("id")).alias(ssq),
+        )
+
+    lb = with_ssq(lv, "lid", "v", "lssq")
+    rb = with_ssq(rv, "rid", "w", "rssq")
+    if cand is None:
+        joined = lb.join(F.broadcast(rb), "bin")
+    else:
+        joined = cand.join(lb, "lid").join(rb, ["rid", "bin"])
+    norms = F.sqrt(F.min("lssq").cast("double")) * F.sqrt(F.min("rssq").cast("double"))
+    return joined.groupBy("lid", "rid").agg(
+        F.try_divide(F.sum(F.col("v") * F.col("w")), norms).alias("cos")
     )
 
 
@@ -137,8 +162,8 @@ def cosine_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
     generation. The
     dot product itself is exact over all 64 bins.
     """
-    lg = _grams_distinct(left, "id", "text")
-    rg = _grams_distinct(right, "id", "text")
+    lg = _grams(left, "id", "text").distinct()
+    rg = _grams(right, "id", "text").distinct()
     freq = (
         lg.groupBy("g").agg(F.count(F.lit(1)).alias("nl"))
         .join(rg.groupBy("g").agg(F.count(F.lit(1)).alias("nr")), "g", "outer")
@@ -171,31 +196,7 @@ def cosine_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
         .select(F.col("id").alias("lid"), "rid")
         .distinct()
     )
-    lv = gram_bins(left, "id", "text")
-    rv = gram_bins(right, "id", "text")
-    dots = (
-        cand.join(lv.withColumnRenamed("id", "lid"), "lid")
-        .join(
-            rv.select(F.col("id").alias("rid"), "bin", F.col("v").alias("w")),
-            ["rid", "bin"],
-        )
-        .groupBy("lid", "rid")
-        .agg(F.sum(F.col("v") * F.col("w")).alias("dot"))
-    )
-    ln = _with_norms(lv).select(F.col("id").alias("lid"), F.col("ssq").alias("lssq"))
-    rn = _with_norms(rv).select(F.col("id").alias("rid"), F.col("ssq").alias("rssq"))
-    return (
-        dots.join(ln, "lid")
-        .join(rn, "rid")
-        .select(
-            "lid",
-            "rid",
-            (
-                F.col("dot")
-                / (F.sqrt(F.col("lssq").cast("double")) * F.sqrt(F.col("rssq").cast("double")))
-            ).alias("cos"),
-        )
-    )
+    return _bin_cosine(gram_bins(left, "id", "text"), gram_bins(right, "id", "text"), cand)
 
 
 def cosine_all_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -207,31 +208,7 @@ def cosine_all_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
     Every pair sharing at least one hash bin gets a row, so a top-1 over it
     is argmax-complete; the TE linkers' top-1 (``te_construct._top1``) is a
     window over this pair set, which the oracle replays bin for bin."""
-    lv = gram_bins(left, "id", "text")
-    rv = gram_bins(right, "id", "text")
-    dots = (
-        lv.withColumnRenamed("id", "lid")
-        .join(
-            F.broadcast(rv.select(F.col("id").alias("rid"), "bin", F.col("v").alias("w"))),
-            "bin",
-        )
-        .groupBy("lid", "rid")
-        .agg(F.sum(F.col("v") * F.col("w")).alias("dot"))
-    )
-    ln = _with_norms(lv).select(F.col("id").alias("lid"), F.col("ssq").alias("lssq"))
-    rn = _with_norms(rv).select(F.col("id").alias("rid"), F.col("ssq").alias("rssq"))
-    return (
-        dots.join(ln, "lid")
-        .join(F.broadcast(rn), "rid")
-        .select(
-            "lid",
-            "rid",
-            (
-                F.col("dot")
-                / (F.sqrt(F.col("lssq").cast("double")) * F.sqrt(F.col("rssq").cast("double")))
-            ).alias("cos"),
-        )
-    )
+    return _bin_cosine(gram_bins(left, "id", "text"), gram_bins(right, "id", "text"), None)
 
 
 # ---------------------------------------------------------------------------
@@ -363,7 +340,6 @@ def fact_alignment_soft_values(actual: DataFrame, expected: DataFrame) -> DataFr
         .withColumn("id", F.col("text"))
     )
     vec = gram_bins(vals, "id", "text").localCheckpoint()
-    norms = _with_norms(vec)
 
     pairs = (
         ga.join(
@@ -371,27 +347,11 @@ def fact_alignment_soft_values(actual: DataFrame, expected: DataFrame) -> DataFr
             ["subject", "predicate"],
         ).localCheckpoint()
     )
-    dots = (
-        pairs.join(vec.withColumnRenamed("id", "value"), "value")
-        .join(
-            vec.select(F.col("id").alias("evalue"), "bin", F.col("v").alias("w")),
-            ["evalue", "bin"],
-        )
-        .groupBy("subject", "predicate", "value", "evalue")
-        .agg(F.sum(F.col("v") * F.col("w")).alias("dot"))
-    )
-    scored = (
-        pairs.join(dots, ["subject", "predicate", "value", "evalue"], "left")
-        .join(norms.withColumnRenamed("id", "value").withColumnRenamed("ssq", "assq"), "value", "left")
-        .join(norms.withColumnRenamed("id", "evalue").withColumnRenamed("ssq", "essq"), "evalue", "left")
-        .withColumn(
-            "cos",
-            F.when(
-                F.col("dot").isNotNull() & (F.col("assq") > 0) & (F.col("essq") > 0),
-                F.col("dot")
-                / (F.sqrt(F.col("assq").cast("double")) * F.sqrt(F.col("essq").cast("double"))),
-            ).otherwise(F.lit(0.0)),
-        )
+    cand = pairs.select(F.col("value").alias("lid"), F.col("evalue").alias("rid")).distinct()
+    cos = _bin_cosine(vec, vec, cand).withColumnsRenamed({"lid": "value", "rid": "evalue"})
+    # a pair sharing no bin, or with a zero-norm side, scores 0.0
+    scored = pairs.join(cos, ["value", "evalue"], "left").withColumn(
+        "cos", F.coalesce("cos", F.lit(0.0))
     )
     per_actual = scored.groupBy("subject", "predicate", "value").agg(
         F.max("cos").alias("best")

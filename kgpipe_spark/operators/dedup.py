@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kgpipe_spark.functions.literals import round6
+from kgpipe_spark.operators.similarity import _cosine, _hyperplane_bucket, _norm
 
 _SHINGLE_N = 3
 _SIMHASH_BITS = 32
@@ -355,46 +356,27 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 def embedding_near_duplicates(
     embeddings: DataFrame, threshold: float = 0.95, bucket_col: str | None = None
 ) -> DataFrame:
-    """Cosine ≥ t (``vec_id``) pairs over the ``embedding`` column. With
-    ``bucket_col``, pairs are only searched within buckets (IVF-style).
-    Without one, the input is COUNTED first: up to 20,000 rows run
-    all-pairs exactly; above it, buckets are
-    auto-derived from deterministic hyperplane LSH so the pair count stays
+    """Cosine ≥ t (``vec_id``) pairs over the ``embedding`` column, searched
+    only within buckets (IVF-style): ``bucket_col`` when given, else
+    8-plane hyperplane buckets at every size (the bucket of
+    ``similarity.random_hyperplane_buckets``), so the pair count stays
     bounded instead of going quadratic — at 100 TB an unbucketed cartesian
-    is a plan that never finishes, so the guard refuses to build one.
-    Auto-bucketing is approximate (cross-bucket near-dups are missed), the
-    standard LSH recall trade-off; pass an explicit ``bucket_col`` to choose
-    the partitioning yourself."""
-    if bucket_col is None:
-        # materialize ONCE before the guard count — the bucket join and the
-        # pair join below would otherwise re-evaluate a potentially expensive
-        # upstream 2-3×; localCheckpoint also breaks the twin lineage of the
-        # a/b self-join
-        embeddings = embeddings.localCheckpoint(eager=True)
-        if embeddings.count() > 20_000:
-            from kgpipe_spark.operators.similarity import random_hyperplane_buckets
-
-            # collision-safe derived-bucket name: the input may legitimately
-            # carry its own 'bucket' column that the caller chose NOT to use
-            buckets = random_hyperplane_buckets(embeddings).withColumnRenamed(
-                "bucket", "_auto_bucket"
-            )
-            embeddings = embeddings.drop("_auto_bucket").join(buckets, "vec_id")
-            bucket_col = "_auto_bucket"
+    is a plan that never finishes. Hyperplane bucketing is approximate
+    (cross-bucket near-dups are missed), the standard LSH recall trade-off;
+    pass an explicit ``bucket_col`` to choose the partitioning yourself. A
+    zero vector's cosine is NULL, so it pairs with nothing."""
+    bucket = F.col(bucket_col) if bucket_col else _hyperplane_bucket(embeddings, 8)
     e = embeddings.select(
         F.col("vec_id").alias("vid"),
         F.col("embedding").cast("array<double>").alias("v"),
-        *( [F.col(bucket_col).alias("bucket")] if bucket_col else [F.lit(0).alias("bucket")] ),
-    ).withColumn(
-        "norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
-    )
+        bucket.alias("bucket"),
+    ).withColumn("norm", _norm("v"))
     a = e.select(F.col("vid").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"), "bucket")
     b = e.select(F.col("vid").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"), "bucket")
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     return (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", dot / (F.col("na") * F.col("nb")))
+        .withColumn("cosine", _cosine("va", "vb", F.col("na"), F.col("nb")))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", round6(F.col("cosine")).alias("cosine"))
     )

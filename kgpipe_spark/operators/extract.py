@@ -30,7 +30,6 @@ from __future__ import annotations
 import hashlib
 import json
 import re
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame

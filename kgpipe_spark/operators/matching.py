@@ -137,8 +137,6 @@ def schema_column_matching(df1: DataFrame, df2: DataFrame, threshold: float = 0.
     `valentine_schema_matching.py:74`). Tiny data → computed via a driver
     loop over column pairs on collected samples, exactly like the reference;
     emits matches with id_type='relation'."""
-    import pandas as pd
-
     s1 = df1.limit(500).toPandas()
     s2 = df2.limit(500).toPandas()
     rows = []

@@ -4,7 +4,7 @@ The corpus side is a ``(vec_id, embedding)`` frame and the query side a
 ``(q_id, q_vec)`` frame.
 
  - ``cosine_topk_bruteforce`` — exact top-k neighbors for a query set via
-   JVM `zip_with`/`aggregate` dot products + Window top-k. The correctness
+   JVM higher-order-function dot products + Window top-k. The correctness
    baseline; O(n·q) but fully distributed and codegen'd.
  - ``ivf_topk`` — IVF-style scale path: assign every vector to its nearest
    of C centroids (one broadcast matmul pass), search only the ``nprobe``
@@ -12,6 +12,12 @@ The corpus side is a ``(vec_id, embedding)`` frame and the query side a
    one Lloyd refinement in a pandas UDF-free driver step (tiny C).
  - ``random_hyperplane_buckets`` — LSH bucketing via md5-seeded pseudo-random
    hyperplanes (deterministic; no RNG state).
+
+Every cosine here, and ``dedup.embedding_near_duplicates``', is ``_cosine``:
+``_dot`` over ``_norm`` · ``_norm``, divided with ``try_divide``, so a
+zero vector scores NULL — what DuckDB's ``0 / 0`` gives the oracle — and
+never stops the job. A NULL cosine ranks after every score and passes no
+threshold.
 """
 
 from __future__ import annotations
@@ -64,6 +70,22 @@ def _norm(v: str | Column) -> Column:
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def _cosine(a: str, b: str, na: Column, nb: Column) -> Column:
+    """cos(a, b) given the norms ``na``, ``nb``; NULL when either is 0."""
+    return F.try_divide(_dot(a, b), na * nb)
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """(q_id, vec_id, cosine, rank): the ``k`` best ``cosine`` per query,
+    ties to the smaller ``vec_id``."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "vec_id", round6(F.col("cosine")).alias("cosine"), "rank")
+    )
+
+
 def cosine_topk_bruteforce(embeddings: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """(q_id, vec_id, cosine, rank) — exact top-k per query.
 
@@ -74,17 +96,8 @@ def cosine_topk_bruteforce(embeddings: DataFrame, queries: DataFrame, k: int = 1
     e = _ensure_compute_parallelism(_vectors(embeddings)).withColumn("vnorm", _norm("v"))
     q = _query_vectors(queries).withColumn("qnorm", _norm("qv"))
     joined = e.crossJoin(F.broadcast(q))
-    scored = joined.select(
-        "q_id",
-        "vec_id",
-        (_dot("v", "qv") / (F.col("vnorm") * F.col("qnorm"))).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", round6(F.col("cosine")).alias("cosine"), "rank")
-    )
+    cosine = _cosine("v", "qv", F.col("vnorm"), F.col("qnorm"))
+    return _topk(joined.select("q_id", "vec_id", cosine.alias("cosine")), k)
 
 
 def _deterministic_hyperplanes(dim: int, n_planes: int) -> np.ndarray:
@@ -99,11 +112,12 @@ def _deterministic_hyperplanes(dim: int, n_planes: int) -> np.ndarray:
     return np.asarray(rows, dtype=np.float64)
 
 
-def random_hyperplane_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
-    """(vec_id, bucket) — sign-pattern bucket over deterministic hyperplanes.
+def _hyperplane_bucket(embeddings: DataFrame, n_planes: int) -> Column:
+    """The int sign-pattern bucket of ``embeddings.embedding`` over
+    ``n_planes`` deterministic hyperplanes, as a column of ``embeddings``.
 
     The planes are literal arrays baked into the plan (they are tiny), so the
-    whole operator is one JVM projection.
+    bucket is one JVM projection; reading the width is one ``first()`` job.
     """
     dim = len(embeddings.select("embedding").first()[0])
     planes = _deterministic_hyperplanes(dim, n_planes)
@@ -111,12 +125,16 @@ def random_hyperplane_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataF
     bits = []
     for p in range(n_planes):
         plane = F.array(*[F.lit(float(x)) for x in planes[p]])
-        s = F.aggregate(F.zip_with(v, plane, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-        bits.append(F.when(s >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
+        bits.append(F.when(_dot(v, plane) >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
     bucket = bits[0]
     for b in bits[1:]:
         bucket = bucket + b
-    return embeddings.select("vec_id", bucket.cast("int").alias("bucket"))
+    return bucket.cast("int")
+
+
+def random_hyperplane_buckets(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
+    """(vec_id, bucket) — sign-pattern bucket over deterministic hyperplanes."""
+    return embeddings.select("vec_id", _hyperplane_bucket(embeddings, n_planes).alias("bucket"))
 
 
 def ivf_topk(
@@ -170,49 +188,27 @@ def ivf_topk(
     q_probe = _assign_topn(_query_vectors(queries), cent_list, nprobe)
 
     joined = assigned.join(q_probe, "cid")
-    scored = joined.select(
-        "q_id",
-        "vec_id",
-        (_dot("v", "qv") / (_norm("v") * _norm("qv"))).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", round6(F.col("cosine")).alias("cosine"), "rank")
-    )
+    cosine = _cosine("v", "qv", _norm("v"), _norm("qv"))
+    return _topk(joined.select("q_id", "vec_id", cosine.alias("cosine")), k)
 
 
-def _cent_cols(cent_list: list) -> list[Column]:
-    return [F.array(*[F.lit(float(x)) for x in c]) for c in cent_list]
+def _centroid_dists(v: str, cent_list: list) -> Column:
+    """array<struct<d, cid>>: squared distance from ``v`` to each centroid."""
+    dists = []
+    for i, c in enumerate(cent_list):
+        cent = F.array(*[F.lit(float(x)) for x in c])
+        sq = F.zip_with(v, cent, lambda x, y: (x - y) * (x - y))
+        d = F.aggregate(sq, F.lit(0.0), lambda a, x: a + x)
+        dists.append(F.struct(d.alias("d"), F.lit(i).alias("cid")))
+    return F.array(*dists)
 
 
 def _assign_nearest(df: DataFrame, cent_list: list) -> DataFrame:
-    vcol = "v" if "v" in df.columns else "qv"
-    dists = [
-        F.struct(
-            F.aggregate(
-                F.zip_with(vcol, c, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda a, x: a + x
-            ).alias("d"),
-            F.lit(i).alias("cid"),
-        )
-        for i, c in enumerate(_cent_cols(cent_list))
-    ]
-    return df.withColumn("cid", F.array_min(F.array(*dists))["cid"])
+    return df.withColumn("cid", F.array_min(_centroid_dists("v", cent_list))["cid"])
 
 
 def _assign_topn(df: DataFrame, cent_list: list, n: int) -> DataFrame:
-    vcol = "v" if "v" in df.columns else "qv"
-    dists = [
-        F.struct(
-            F.aggregate(
-                F.zip_with(vcol, c, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda a, x: a + x
-            ).alias("d"),
-            F.lit(i).alias("cid"),
-        )
-        for i, c in enumerate(_cent_cols(cent_list))
-    ]
-    top = F.slice(F.array_sort(F.array(*dists)), 1, n)
+    top = F.slice(F.array_sort(_centroid_dists("qv", cent_list)), 1, n)
     return df.withColumn("probe", F.explode(top)).select(
         *df.columns, F.col("probe.cid").alias("cid")
     )

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgpipe_spark.operators.cluster import canonical_map, connected_components, match_edges
+from kgpipe_spark.operators.cluster import canonical_map, connected_components
 from kgpipe_spark.operators.extract import (
     extract_code_triples,
     extract_json_triples,
@@ -30,7 +30,6 @@ from kgpipe_spark.operators.linking import (
     link_or_mint,
 )
 from kgpipe_spark.operators.transform import remove_empty_literals, type_inference_branches
-from kgpipe_spark.functions.hashing import mint_uri_sha256
 from kgpipe_spark.functions.strings import normalize_label
 from kgpipe_spark.schemas import KG_NS, RDF_TYPE, RDFS_LABEL, TRIPLE_COLS, XSD_STRING
 

@@ -61,21 +61,21 @@ def stream_corpus_to_triples(
 def process_batch(
     batch_df: DataFrame, sink: str, dictionary: DataFrame | None = None
 ) -> None:
-    """One micro-batch: extract (JSON + code), link against ``dictionary``
-    when given, and append to ``sink`` only the triples it does not hold.
+    """One micro-batch: extract (JSON + code), drop empty literals as the
+    batch's extract stage does, link against ``dictionary`` when given, and
+    append to ``sink`` only the triples it does not hold.
 
     Linking reads the extracted triples three times (mentions, subject and
     object rewrite), so they are ``localCheckpoint``ed first and the
     extraction UDF runs once per batch. The sink is read with the triples' own
     schema, which skips the parquet footer inference job."""
     from kgpipe_spark.operators.extract import extract_code_triples, extract_json_triples
+    from kgpipe_spark.operators.transform import remove_empty_literals
     from kgpipe_spark.pipelines import link_entities
 
-    triples = (
-        extract_json_triples(batch_df)
-        .unionByName(extract_code_triples(batch_df))
-        .select(*TRIPLE_COLS)
-    )
+    triples = remove_empty_literals(
+        extract_json_triples(batch_df).unionByName(extract_code_triples(batch_df))
+    ).select(*TRIPLE_COLS)
     if dictionary is not None:
         triples = link_entities(triples.localCheckpoint(), dictionary).select(*TRIPLE_COLS)
     triples = triples.dropDuplicates(KEY)

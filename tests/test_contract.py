@@ -215,3 +215,42 @@ def test_every_function_option_is_set_by_a_call_site():
         for rel, _ in where
     )
     assert not unset, f"{len(unset)} options no call site sets:\n" + "\n".join(unset)
+
+
+def _unread_imports(tree):
+    """(line, name) for every name an ``import`` in ``tree`` binds that no
+    expression of the module reads (a ``Name`` load, or the head of a dotted
+    attribute such as ``np.sqrt``) and that ``__all__`` does not list.
+    ``from __future__`` imports are directives, not bindings."""
+    import ast
+
+    bound = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for alias in node.names:
+                if alias.name != "*":
+                    bound.append((node.lineno, alias.asname or alias.name.split(".")[0]))
+    read = {
+        n.id for n in ast.walk(tree) if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+    }
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Assign, ast.AugAssign, ast.AnnAssign)) and node.value is not None:
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            if any(getattr(t, "id", None) == "__all__" for t in targets):
+                read |= {c.value for c in ast.walk(node.value) if isinstance(c, ast.Constant)}
+    return [(line, name) for line, name in bound if name not in read]
+
+
+def test_no_unused_imports():
+    """Every name an import binds in a module under kgpipe_spark/ is read in
+    that module; a package ``__init__.py`` re-exports what it imports and is
+    exempt. An unread import is dead code that still costs its load."""
+    unread = sorted(
+        f"{os.path.relpath(path, _REPO)}:{line}: {name}"
+        for path in _py_files(os.path.join(_REPO, "kgpipe_spark"))
+        if os.path.basename(path) != "__init__.py"
+        for line, name in _unread_imports(_parse(path))
+    )
+    assert not unread, f"{len(unread)} imports nothing reads:\n" + "\n".join(unread)

@@ -158,3 +158,50 @@ def test_quality_features_round_41_of_640_like_duckdb(spark):
 
     docs = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
     assert tuple(quality_features(docs).collect()[0]) == expected
+
+
+def test_gram_bin_zero_norm_cosine_is_null_like_duckdb(spark):
+    """"ig" and "rd" share hash bin 3 with net count 0: a zero vector each.
+    The gram-bin kernel scores their pair NULL, exactly the (lid, rid, cos)
+    rows of the oracle's ``_sql_embed`` + ``_sql_cosine_binpairs`` chain."""
+    from __spark_entry__ import _sql_cosine_binpairs, _sql_embed
+    from kgpipe_spark.eval.soft import cosine_all_pairs
+
+    left, right = [("a", "ig")], [("b", "rd")]
+    got = [
+        tuple(r)
+        for r in cosine_all_pairs(
+            spark.createDataFrame(left, "id string, text string"),
+            spark.createDataFrame(right, "id string, text string"),
+        ).collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE lt AS SELECT * FROM (VALUES ('a', 'ig')) t(id, text)")
+    con.execute("CREATE TABLE rt AS SELECT * FROM (VALUES ('b', 'rd')) t(id, text)")
+    sql = (
+        f"WITH {_sql_embed('l', 'lt')}, {_sql_embed('r', 'rt')}, "
+        f"{_sql_cosine_binpairs('l', 'r', 'cp')} SELECT lid, rid, cos FROM cp"
+    )
+    assert got == con.execute(sql).fetchall() == [("a", "b", None)]
+
+
+def test_dense_zero_vector_topk_like_duckdb(spark):
+    """``cosine_topk_bruteforce`` over a table holding one all-zero
+    embedding gives the (q_id, vec_id, cosine, rank) rows of the
+    ``emb_cosine_topk`` oracle SQL: NULL cosines, ranked last."""
+    from __spark_entry__ import _emb_sql
+    from kgpipe_spark.operators.similarity import cosine_topk_bruteforce
+
+    rows = [(0, [1.0, 2.0, 3.0]), (1, [0.0, 0.0, 0.0]), (2, [3.0, 2.0, 1.0]),
+            (3, [1.0, 0.0, 1.0]), (4, [2.0, 4.0, 6.0]), (5, [-1.0, 1.0, 0.0]), (6, [0.0, 5.0, 1.0])]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    got = sorted(tuple(r) for r in cosine_topk_bruteforce(emb, queries, k=10).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    want = sorted(con.execute(_emb_sql()["emb_cosine_topk"]).fetchall())
+    assert got == want
+    assert (0, 1, None, 7) in got

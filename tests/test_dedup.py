@@ -99,8 +99,39 @@ def test_embedding_near_dup_auto_buckets_above_guard(spark):
     assert n_auto == explicit.count()
     # bounded: far below the ~1.25e9 all-pairs candidates
     assert n_auto < n * 50
-    # under the guard the exact all-pairs path is preserved
+    # a small input takes the same hyperplane buckets
     small = emb.limit(500)
     exact = embedding_near_duplicates(small, threshold=0.9999)
     assert exact.count() >= 0
     emb.unpersist()
+
+
+def test_embedding_near_duplicates_zero_vector_pairs_with_nothing(spark):
+    """A zero vector has no cosine (NULL), so it passes no threshold, with
+    or without a bucket column, instead of stopping the job."""
+    rows = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 0.0, 0.0]), (2, [0.9, 0.1, 0.0]), (3, [0.0, 1.0, 0.0])]
+    e = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>").withColumn("b", F.lit(0))
+    for out in (
+        embedding_near_duplicates(e, threshold=0.9),
+        embedding_near_duplicates(e, threshold=0.9, bucket_col="b"),
+    ):
+        assert {(r["id_a"], r["id_b"]) for r in out.collect()} == {(0, 2)}
+
+
+def test_embedding_near_duplicates_plans_without_a_size_probe(spark):
+    """Building the unbucketed plan runs at most one Spark job: the
+    ``first()`` that reads the embedding width for the hyperplanes. No
+    checkpoint or count picks a path by input size."""
+    emb = spark.range(200).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[(F.col("id") % (3 + i)).cast("double") for i in range(4)]).alias("embedding"),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("embedding-near-dup-plan", "plan only")
+    try:
+        out = embedding_near_duplicates(emb, threshold=0.9999)
+        jobs = sc.statusTracker().getJobIdsForGroup("embedding-near-dup-plan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 1
+    assert out.filter(F.col("cosine") < 0.9999).count() == 0

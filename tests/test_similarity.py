@@ -120,3 +120,16 @@ def test_ivf_lloyd_step_repartitions_an_under_split_input_once(spark, emb):
     assert {(r["q_id"], r["vec_id"]) for r in out.collect()} == {
         (r["q_id"], r["vec_id"]) for r in wide.collect()
     }
+
+
+def test_zero_vector_scores_null(spark):
+    """An all-zero embedding (``HashedGramEmbedder``'s vector for "") has no
+    cosine: both searches score its pairs NULL and rank them last, as the
+    DuckDB oracle's 0/0 does, instead of stopping the job."""
+    rows = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 0.0, 0.0]), (2, [0.9, 0.1, 0.0]), (3, [0.0, 1.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    q = df.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    for out in (cosine_topk_bruteforce(df, q, k=4), ivf_topk(df, q, k=4, n_centroids=2, nprobe=2)):
+        got = {(r["q_id"], r["vec_id"]): (r["cosine"], r["rank"]) for r in out.collect()}
+        assert {got[(1, v)] for v in range(4)} == {(None, 1), (None, 2), (None, 3), (None, 4)}
+        assert got[(0, 1)] == (None, 4) and got[(0, 0)] == (1.0, 1)

@@ -192,3 +192,20 @@ def test_source_entity_metrics_on_empty_inputs(spark):
         (0, 0, 0),
         (0, 0, 0, 0, 0),
     ]
+
+
+def test_zero_norm_labels_score_null(spark):
+    """A label whose signed 3-gram counts cancel ("ig", "rd") has a zero
+    vector: its pairs score NULL, as the DuckDB oracle's 0/0 does, no
+    mapping accepts it, and SoftEV completes, counting such a value pair as
+    a miss, instead of stopping the job."""
+    texts = spark.createDataFrame([("ig", "ig"), ("rd", "rd")], "id string, text string")
+    pairs = {(r["lid"], r["rid"]): r["cos"] for r in cosine_pairs(texts, texts).collect()}
+    assert pairs[("ig", "ig")] is None
+
+    actual = _kg(spark, [_lab("a:1", "ig"), _lab("a:2", "Tolkien"), ("a:2", "p", "rd", "literal", None)])
+    expected = _kg(spark, [_lab("e:1", "ig"), _lab("e:2", "Tolkien"), ("e:2", "p", "ig", "literal", None)])
+    mapping = {(r["actual_uri"], r["expected_uri"]) for r in soft_entity_mapping(actual, expected).collect()}
+    assert mapping == {("a:2", "e:2")}
+    row = fact_alignment_soft_values(actual, expected).collect()[0]
+    assert (row["tp"], row["fp"], row["fn"]) == (1, 1, 1)

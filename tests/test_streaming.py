@@ -99,3 +99,20 @@ def test_linked_stream_matches_batch_link_after_restart(spark, seed, tmp_path):
     assert set(rows) == {tuple(r) for r in expected.collect()}
     seed_uris = {r["subject"] for r in seed.select("subject").distinct().collect()}
     assert seed_uris & {r[0] for r in rows}
+
+
+def test_stream_drops_empty_literals_as_batch_does(spark, tmp_path):
+    """A commit whose JSON holds an empty string field: the sink, like the
+    batch extract stage, keeps no literal whose trimmed lexical form is
+    empty."""
+    inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    spark.createDataFrame(
+        [("org/r", "f.json", "c0", "json", '{"name": "", "title": "X"}')],
+        "repo string, path string, commit string, lang string, content string",
+    ).coalesce(1).write.parquet(inp)
+    q = stream_corpus_to_triples(spark, inp, out, ckpt)
+    assert q.awaitTermination(120)
+    triples = spark.read.parquet(out)
+    assert triples.count() > 0
+    empty = triples.filter((F.col("object_kind") == "literal") & (F.trim("object_lex") == ""))
+    assert empty.count() == 0

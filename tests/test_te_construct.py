@@ -198,3 +198,26 @@ def test_filter_te_entity_links(spark):
         ("p", "kg:prop", "predicate"),  # non-entity passes untouched
     ]
     assert out["d2"] == []
+
+
+def test_embedding_linker_scores_zero_vector_null(spark):
+    """A surface and a KG label whose signed 3-gram counts cancel ("ig",
+    "rd") share a hash bin but have no cosine: the top-1 link carries a NULL
+    score instead of stopping the job."""
+    from kgpipe_spark.operators.te_construct import label_alias_embedding_el
+
+    doc = {
+        "doc_id": "d1",
+        "text": "ig liked it",
+        "triples": [{"subject": _span("ig"), "predicate": _span("liked"), "object": _span("it")}],
+        "chains": [],
+        "links": [],
+    }
+    te = spark.createDataFrame([doc], TE_DOCUMENT_SCHEMA)
+    kg = spark.createDataFrame(
+        [(KG_NS + "x/rd", RDFS_LABEL, "rd", "literal", XSD_STRING)],
+        "subject string, predicate string, object_lex string, object_kind string,"
+        " object_datatype string",
+    )
+    links = label_alias_embedding_el(te, kg).collect()[0]["links"]
+    assert [(p["mapping"], p["score"]) for p in links if p["span"] == "ig"] == [(KG_NS + "x/rd", None)]

@@ -19,14 +19,49 @@ Scale notes (100 TB / 1000-executor design intent, tested on local[N]):
    first call and 0.9-1.3 s warm, against 1.3-1.4 s and 0.29-0.36 s
    (4-vCPU host, ``local[2]``). Workers must be able to import
    ``kgpipe_spark``, as the package's pandas UDFs already require.
+ - The driver JVM starts from a dynamic class-data-sharing archive (JDK 17
+   ``-XX:SharedArchiveFile``): classes come mapped from the archive instead
+   of being loaded, verified and linked from ``$SPARK_HOME/jars``, which cut
+   perfbench's session start from 4.1-5.6 s to 1.9-2.7 s (4-vCPU host,
+   ``local[2]``). The archive lives in ``$XDG_CACHE_HOME/kgpipe_spark/``
+   (else ``~/.cache/kgpipe_spark/``), one file per fingerprint of the JDK
+   and of ``$SPARK_HOME/jars`` (names and sizes), so an upgrade gets a new
+   archive. The first session per machine and fingerprint writes it as its
+   JVM exits (``-XX:ArchiveClassesAtExit``: about 10 s and 180 MB after a
+   flagship run), and starts about 1.5 s slower than without an archive:
+   its JVM spends 2-3 s more kernel time recording where each class came
+   from. The gain holds from the second session on. The archive is never
+   rewritten while complete, so that first session decides which classes
+   it holds: one that only ran a small job archives fewer of them, and
+   later sessions load the rest from the jars. A session maps the file
+   only once the dump's last write, the header magic, is on disk. Delete
+   the ``*.jsa`` file to reset it; archives of an older JDK or Spark stay
+   until deleted. JDK 17 shares no class while a non-empty directory is on
+   the classpath, so the launch points ``SPARK_CONF_DIR`` at an empty
+   directory there; when ``SPARK_CONF_DIR``, ``HADOOP_CONF_DIR`` or
+   ``YARN_CONF_DIR`` is set, or ``$SPARK_HOME/conf`` holds a file that is
+   not a ``*.template``, the JVM starts without an archive. Janino's
+   classes come from a signed jar, which CDS does not archive.
+ - The codegen cache holds 4000 compiled classes
+   (``spark.sql.codegen.cache.maxEntries``, Spark's default 100): one
+   flagship run compiles about 206, so at 100 every warm run in a session
+   compiled its classes again.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
+import shutil
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+DRIVER_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+# a dynamic archive's header magic 0xf00baba8, little-endian; the JDK writes
+# every region under a zeroed header and this header last
+CDS_MAGIC = bytes.fromhex("a8ab0bf0")
 
 
 def get_spark(
@@ -83,10 +118,23 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.daemon.module", "kgpipe_spark.pyworker")
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
     )
-    for k, v in {**_gc_conf(master), **(extra_conf or {})}.items():
+    conf = {**_gc_conf(master), **(extra_conf or {})}
+    # a reused session, or a JVM that spark-submit started, has started already
+    launch = None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        launch = _cds_launch(os.environ)
+    if launch:
+        conf[DRIVER_JAVA_OPTIONS] = f"{conf.get(DRIVER_JAVA_OPTIONS, '')} {launch[0]}".strip()
+        os.environ["SPARK_CONF_DIR"] = launch[1]
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    try:
+        return builder.getOrCreate()
+    finally:
+        if launch:
+            del os.environ["SPARK_CONF_DIR"]
 
 
 def _local_defaults() -> tuple[str, int]:
@@ -144,3 +192,68 @@ def _default_driver_memory_mb() -> int:
     """min(24g, a quarter of physical memory), in MiB."""
     ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
     return min(24 * 1024, ram_mb // 4)
+
+
+def _cds_launch(environ) -> tuple[str, str] | None:
+    """The driver JVM's class-data-sharing options and the empty directory
+    to launch it with as ``SPARK_CONF_DIR``: ``-XX:SharedArchiveFile`` when
+    a complete archive exists, else ``-XX:ArchiveClassesAtExit`` to the same
+    path. ``None`` when a conf directory is set or ``$SPARK_HOME/conf``
+    holds a real file: the JVM then starts exactly as it would without an
+    archive."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = environ.get("SPARK_HOME") or _find_spark_home()
+    java = os.path.join(environ["JAVA_HOME"], "bin", "java") if environ.get("JAVA_HOME") else shutil.which("java")
+    cache = os.path.join(environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"), "kgpipe_spark")
+    empty = os.path.join(cache, "conf")
+    if (
+        any(v in environ for v in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR"))
+        or any(not n.endswith(".template") for n in _names(os.path.join(spark_home, "conf")))
+        or not java
+        or re.search(r"[\s'\"]", cache)  # the launcher splits the options on blanks and quotes
+    ):
+        return None
+    try:
+        os.makedirs(empty, exist_ok=True)
+        archive = os.path.join(cache, _archive_name(java, os.path.join(spark_home, "jars")))
+    except OSError:
+        return None
+    if _names(empty):
+        return None
+    if _dumped(archive):
+        return f"-XX:SharedArchiveFile={archive}", empty
+    # the dump replaces the file with a new one (a JVM that maps the old one
+    # keeps it) and writes the magic last, so a dump still running or killed
+    # leaves a header that _dumped rejects. It warns once per class it skips
+    # (Janino's signed jar, old bytecode); a rejected archive at start still
+    # warns, under cds+dynamic
+    return f"-XX:ArchiveClassesAtExit={archive} -Xlog:cds=error", empty
+
+
+def _archive_name(java: str, jars: str) -> str:
+    """``spark-<fingerprint>.jsa``, the fingerprint taken over the real
+    path of ``java``, the files of its JDK's ``lib/server`` (the JVM and its
+    base archive) and ``jars``: names and sizes."""
+    jdk = os.path.dirname(os.path.dirname(os.path.realpath(java)))
+    parts = [jdk]
+    for d in (os.path.join(jdk, "lib", "server"), jars):
+        parts += [f"{n} {os.path.getsize(os.path.join(d, n))}" for n in sorted(_names(d))]
+    digest = hashlib.sha256("\n".join(parts).encode()).hexdigest()
+    return f"spark-{digest[:16]}.jsa"
+
+
+def _names(directory: str) -> list[str]:
+    try:
+        return os.listdir(directory)
+    except OSError:
+        return []
+
+
+def _dumped(path: str) -> bool:
+    """Whether ``path`` is an archive whose dump finished: its magic is written."""
+    try:
+        with open(path, "rb") as f:
+            return f.read(4) == CDS_MAGIC
+    except OSError:
+        return False

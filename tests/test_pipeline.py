@@ -417,3 +417,17 @@ def test_flagship_leaves_no_cached_plans(spark, small_corpus, seed):
         # the session fixtures were cached; put them back for later tests
         small_corpus.cache()
         seed.cache()
+
+
+def test_warm_flagship_reuses_its_compiled_classes(spark, small_corpus, seed):
+    """A second flagship run in a session compiles next to nothing: the
+    codegen cache holds a whole run's classes (Spark's default 100 entries
+    held about half, so each warm run compiled about 190-230 again). A few
+    recompile all the same: AQE numbers a whole-stage class by the order in
+    which its query stages finish, so a warm run compiled 0-14 classes that
+    differ only in their ``codegenStageId``."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    run_flagship(spark, small_corpus, seed).collect()
+    first = metric.getCount()
+    run_flagship(spark, small_corpus, seed).collect()
+    assert metric.getCount() - first <= 30

@@ -132,3 +132,189 @@ def test_python_workers_import_the_installed_pyspark(spark):
     assert os.path.realpath(module) == os.path.realpath(installed)
     root = os.path.join(os.path.realpath(home), "")
     assert not [k for k in zips if os.path.realpath(k).startswith(root)]
+
+
+def _launch_env(tmp_path, monkeypatch):
+    """A fake $SPARK_HOME (conf templates, one jar) and JDK, and a cache
+    under ``tmp_path``, set in the environment; returns (jdk, jars, cache)."""
+    home, jdk = tmp_path / "spark", tmp_path / "jdk"
+    for d in (home / "conf", home / "jars", jdk / "bin", jdk / "lib" / "server"):
+        d.mkdir(parents=True)
+    (home / "conf" / "spark-defaults.conf.template").write_text("# spark.master\n")
+    (home / "jars" / "spark-core.jar").write_bytes(b"jar")
+    (jdk / "bin" / "java").write_bytes(b"java")
+    (jdk / "lib" / "server" / "libjvm.so").write_bytes(b"jvm")
+    for var in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "PYSPARK_GATEWAY_PORT"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    monkeypatch.setenv("JAVA_HOME", str(jdk))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    monkeypatch.setenv("SPARK_GC_OPTS", "-XX:+UseParallelGC")
+    return jdk, home / "jars", tmp_path / "cache" / "kgpipe_spark"
+
+
+def _dump(path, magic: bool):
+    """An archive as the JDK writes it: regions under a zeroed header, the
+    magic last."""
+    from kgpipe_spark.session import CDS_MAGIC
+
+    with open(path, "wb") as f:
+        f.write((CDS_MAGIC if magic else bytes(4)) + bytes(4092))
+
+
+def test_cds_launch_maps_only_an_archive_whose_dump_finished(tmp_path, monkeypatch):
+    from kgpipe_spark.session import _cds_launch
+
+    _, _, cache = _launch_env(tmp_path, monkeypatch)
+    opts, conf_dir = _cds_launch(os.environ)
+    [dump] = [p for p in opts.split() if p.startswith("-XX:ArchiveClassesAtExit=")]
+    archive = dump.split("=", 1)[1]
+    assert archive.endswith(".jsa") and os.path.dirname(archive) == str(cache)
+    assert conf_dir == str(cache / "conf") and os.listdir(conf_dir) == []
+    assert not os.path.exists(archive)
+
+    # a dump still running (or killed) has a zero header: dump again, map nothing
+    _dump(archive, magic=False)
+    assert _cds_launch(os.environ) == (opts, conf_dir)
+    # a finished dump is mapped
+    _dump(archive, magic=True)
+    assert _cds_launch(os.environ) == (f"-XX:SharedArchiveFile={archive}", conf_dir)
+    assert sorted(os.listdir(cache)) == sorted(["conf", os.path.basename(archive)])
+
+
+def test_archive_name_tracks_the_jdk_and_the_jars(tmp_path, monkeypatch):
+    from kgpipe_spark.session import _archive_name
+
+    jdk, jars, _ = _launch_env(tmp_path, monkeypatch)
+    java = str(jdk / "bin" / "java")
+    name = _archive_name(java, str(jars))
+    assert name == _archive_name(java, str(jars))
+    (jars / "spark-core.jar").write_bytes(b"jar2")  # an upgraded jar
+    assert _archive_name(java, str(jars)) != name
+    name = _archive_name(java, str(jars))
+    (jdk / "lib" / "server" / "libjvm.so").write_bytes(b"jvm2")  # an upgraded JDK
+    assert _archive_name(java, str(jars)) != name
+    other = tmp_path / "jdk-other"
+    (other / "bin").mkdir(parents=True)
+    (other / "bin" / "java").symlink_to(jdk / "bin" / "java")  # its real path counts
+    assert _archive_name(str(other / "bin" / "java"), str(jars)) == _archive_name(java, str(jars))
+    os.rename(jdk, tmp_path / "jdk-moved")
+    assert _archive_name(str(tmp_path / "jdk-moved" / "bin" / "java"), str(jars)) != name
+
+
+def _launched(monkeypatch, master="local[2]"):
+    """get_spark with the JVM launch replaced: the options and the
+    environment that the launch would have seen, and the environment after."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    from kgpipe_spark.session import get_spark
+
+    seen = {}
+
+    def launch(builder):
+        seen.update(options=dict(builder._options), environ=dict(os.environ))
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", launch)
+    get_spark(master=master)
+    return seen["options"][DRIVER], seen["environ"], dict(os.environ)
+
+
+def test_get_spark_launches_with_the_archive_and_restores_the_environment(tmp_path, monkeypatch):
+    from kgpipe_spark.session import _gc_conf
+
+    _, _, cache = _launch_env(tmp_path, monkeypatch)
+    before = dict(os.environ)
+    opts, at_launch, after = _launched(monkeypatch)
+    assert opts.startswith(_gc_conf("local[2]")[DRIVER] + " -XX:ArchiveClassesAtExit=")
+    assert at_launch == {**before, "SPARK_CONF_DIR": str(cache / "conf")}
+    assert after == before
+
+
+def test_get_spark_skips_the_archive_when_a_conf_dir_is_set_or_used(tmp_path, monkeypatch):
+    from pyspark import SparkContext
+
+    from kgpipe_spark.session import _gc_conf
+
+    _, _, cache = _launch_env(tmp_path, monkeypatch)
+    today = _gc_conf("local[2]")[DRIVER]
+    for var in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR"):
+        monkeypatch.setenv(var, str(tmp_path / "site-conf"))
+        before = dict(os.environ)
+        assert _launched(monkeypatch) == (today, before, before)
+        monkeypatch.delenv(var)
+    # a real file among the templates, e.g. a spark-defaults.conf
+    (tmp_path / "spark" / "conf" / "spark-defaults.conf").write_text("spark.master local\n")
+    before = dict(os.environ)
+    assert _launched(monkeypatch) == (today, before, before)
+    assert not cache.exists()
+    # a reused session's JVM is up: no archive work either
+    os.remove(tmp_path / "spark" / "conf" / "spark-defaults.conf")
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    from pyspark.sql import SparkSession
+
+    from kgpipe_spark.session import get_spark
+
+    seen = {}
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda b: seen.update(b._options))
+    get_spark(master="local[2]")
+    assert seen[DRIVER] == today and not cache.exists()
+
+
+_SESSION = """
+import sys
+from kgpipe_spark.session import get_spark
+spark = get_spark(master="local[1]")
+print(spark.range(1000).count())
+gateway = spark.sparkContext._gateway
+spark.stop()
+gateway.shutdown()
+gateway.proc.stdin.close()  # the JVM exits, and writes any archive, when its stdin closes
+gateway.proc.wait(timeout=120)
+"""
+
+
+def test_second_session_maps_the_archive_the_first_one_wrote(tmp_path):
+    """A session writes the archive as its JVM exits; the next one loads
+    its classes from it; a zero-filled archive still lets a session start,
+    and that session writes the archive anew."""
+    import subprocess
+    import sys
+
+    import pytest
+
+    from kgpipe_spark.session import _cds_launch, _dumped
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path), "SPARK_DRIVER_MEMORY": "1g"}
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    if _cds_launch(env) is None:
+        pytest.skip("a conf directory is set or used: sessions start without an archive")
+
+    def session(**extra):
+        done = subprocess.run(
+            [sys.executable, "-c", _SESSION], env={**env, **extra}, cwd=root, capture_output=True, text=True
+        )
+        assert done.returncode == 0, done.stderr[-3000:]
+        assert done.stdout.split()[0] == "1000"
+
+    session()
+    [archive] = (tmp_path / "kgpipe_spark").glob("*.jsa")
+    assert _dumped(str(archive))
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    session(JAVA_TOOL_OPTIONS=f"-Xlog:class+load=info:file={logs}/cl-%p.log")
+    shared = [
+        sum("source: shared objects file (top)" in line for line in open(log))
+        for log in logs.iterdir()  # the launcher's JVM logs too
+    ]
+    assert max(shared) > 1000, shared
+
+    size = archive.stat().st_size
+    archive.unlink()  # the JDK writes it read-only
+    with open(archive, "wb") as f:
+        f.truncate(size)  # all zeros, as a killed dump leaves it
+    session()
+    assert _dumped(str(archive))  # that session dumped over it

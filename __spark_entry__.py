@@ -1623,9 +1623,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kg_flagship_stats"] = _flagship_stats
 
     q.update(_soft_queries())
-    q.update(_doc_queries())
-    q.update(_emb_queries())
-    q.update(_linkmedia_queries())
+    q.update(_linking_queries())
 
     # The driver's correctness gate records only the FIRST 50 registrations.
     # Rounds 1-2 left 42 queries (incl. the 4 round-1 hash failures) outside
@@ -1639,9 +1637,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # ---------------------------------------------------------------------------
-# linking / preference-fusion / schema-match / multimodal queries
-# (closes the round-1 "pytest-only" rows of SURVEY.md §2.4/§2.5/§2.7 and the
-# multimodal family with driver-gated oracles)
+# linking / preference-fusion / schema-match queries
+# (closes the round-1 "pytest-only" rows of SURVEY.md §2.4/§2.5/§2.7 with
+# oracle-gated queries)
 # ---------------------------------------------------------------------------
 
 
@@ -1665,7 +1663,7 @@ def _link_mentions(s: SparkSession, d: str) -> DataFrame:
     return hits.unionByName(misses)
 
 
-def _linkmedia_queries() -> dict:
+def _linking_queries() -> dict:
     from kgpipe_spark.operators.fusion import preference_fusion
     from kgpipe_spark.operators.linking import (
         label_dictionary,
@@ -1674,11 +1672,6 @@ def _linkmedia_queries() -> dict:
         link_or_mint,
     )
     from kgpipe_spark.operators.matching import map_matched_relations, schema_column_matching
-    from kgpipe_spark.operators.multimodal import (
-        extract_features,
-        frame_sample_plan,
-        synth_media,
-    )
 
     q: dict = {}
 
@@ -1763,64 +1756,6 @@ def _linkmedia_queries() -> dict:
         return schema_column_matching(nation, renamed)
 
     q["kg_valentine_schema_match"] = _valentine
-
-    # multimodal: deterministic fake decode through the REAL mapInPandas
-    # plumbing (md5-seeded float32 features over binary payloads)
-    def _media_features(s, d):
-        feats = extract_features(synth_media(s, 300), fake=True, dim=16)
-        return feats.select(
-            "media_id",
-            "n_bytes",
-            F.col("feature")[0].cast("double").alias("f0"),
-            F.col("feature")[5].cast("double").alias("f5"),
-            F.col("feature")[15].cast("double").alias("f15"),
-        )
-
-    q["doc_media_features"] = _media_features
-
-    # frame sampling plan: video rows → (media_id, frame_ts_ms), pure JVM
-    def _frame_plan(s, d):
-        return frame_sample_plan(synth_media(s, 300))
-
-    q["doc_media_frame_plan"] = _frame_plan
-
-    # REAL decode (no fake): pure-Python PPM/BMP/WAV decoders over a
-    # constant-pixel / constant-sample fixture whose decoded statistics are
-    # closed-form in media_id — the decoder genuinely parses bytes, the
-    # oracle replays the stats algebraically
-    def _media_real(s, d):
-        from kgpipe_spark.operators.multimodal import (
-            extract_features as _xf,
-            synth_decodable_media,
-        )
-
-        n = _read(s, d, "customer").count()
-        feats = _xf(synth_decodable_media(s, n), fake=False, dim=8)
-        f = lambda i: F.element_at("feature", i).cast("double").alias(f"f{i - 1}")
-        return feats.select(
-            "media_id", "n_bytes", *[f(i) for i in range(1, 9)]
-        )
-
-    q["doc_media_real_decode"] = _media_real
-
-    # real decode → nearest-neighbor resize → re-encode → re-decode: the
-    # resized constant-color images must report the TARGET dims with the
-    # same channel stats (closed form in media_id)
-    def _media_resize(s, d):
-        from kgpipe_spark.operators.multimodal import (
-            extract_features as _xf,
-            resize_image_batch,
-            synth_decodable_media,
-        )
-
-        n = _read(s, d, "customer").count()
-        media = synth_decodable_media(s, n).filter(F.col("kind") == "image")
-        resized = resize_image_batch(media, target_w=8, target_h=6)
-        feats = _xf(resized, fake=False, dim=8)
-        f = lambda i: F.element_at("feature", i).cast("double").alias(f"f{i - 1}")
-        return feats.select("media_id", "n_bytes", *[f(i) for i in range(1, 6)])
-
-    q["doc_media_resize"] = _media_resize
 
     # json_sampler greedy set cover (json_sampler.py:57-74): 10 schema
     # shapes (5 segments × {with,without} "extra"); the cover is 1 even doc
@@ -1947,10 +1882,10 @@ def _linkmedia_queries() -> dict:
     q["kg_streaming_ingest"] = _streaming
 
     # fully oracle-backed: pass 2 (linking.minted_near_edges) runs the
-    # engine's one md5-derived Carter-Wegman MinHash-LSH kernel, the
-    # dedup.minhash_token_signatures / minhash_verified_pairs steps that
-    # doc_minhash_lsh_pairs also uses, so DuckDB replays the whole two-pass
-    # linker bit-exactly (MLlib MinHashLSH's hash family is not replayable)
+    # engine's one md5-derived Carter-Wegman MinHash-LSH kernel
+    # (linking.minhash_token_signatures / minhash_verified_pairs), so DuckDB
+    # replays the whole two-pass linker bit-exactly (MLlib MinHashLSH's hash
+    # family is not replayable)
     def _link_two_pass(s, d):
         from kgpipe_spark.operators.linking import label_dictionary, link_two_pass
 
@@ -2091,184 +2026,13 @@ def _soft_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return q
 
 
-# ---------------------------------------------------------------------------
-# document / training-data queries
-# ---------------------------------------------------------------------------
-
-
-def _aug_docs(s: SparkSession, d: str) -> DataFrame:
-    """documents + exact duplicates (+100000) + near duplicates (+200000,
-    ' zzextra seventeen' appended to every doc_id % 5 == 0)."""
-    docs = _read(s, d, "documents").select("doc_id", "text")
-    exact = docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    near = docs.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzextra seventeen")).alias("text"),
-    )
-    return docs.unionByName(exact).unionByName(near)
-
-
-SQL_AUG_DOCS = """
-docs AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents
-  UNION ALL
-  SELECT doc_id + 200000, text || ' zzextra seventeen' FROM documents WHERE doc_id % 5 = 0
-)"""
-
-SQL_DOC_WORDS = """
-words AS (
-  SELECT doc_id,
-         list_filter(string_split(trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
-                     w -> w <> '') AS w
-  FROM docs
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(
-           CASE WHEN len(w) >= 3 THEN
-             list_transform(generate_series(1, len(w) - 2), i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-           ELSE [] END
-         ) AS shingles
-  FROM words
-),
-shf AS (SELECT * FROM sh WHERE len(shingles) > 0)"""
-
-
-def _doc_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from kgpipe_spark.operators.dedup import (
-        exact_duplicates,
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-        simhash_fingerprints,
-    )
-    from kgpipe_spark.operators.text import (
-        fingerprint,
-        language_id,
-        quality_features,
-        token_count,
-    )
-
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    def _exact(s, d):
-        dup = exact_duplicates(_aug_docs(s, d))
-        return dup.select(
-            "content_hash",
-            "n_copies",
-            "keep_id",
-            F.concat_ws(",", F.transform("doc_ids", lambda x: x.cast("string"))).alias("doc_ids"),
-        )
-
-    q["doc_dedup_exact"] = _exact
-
-    q["doc_minhash_lsh_pairs"] = lambda s, d: minhash_lsh_pairs(
-        _aug_docs(s, d), num_hashes=16, bands=8, jaccard_threshold=0.5
-    )
-
-    q["doc_ngram_jaccard_pairs"] = lambda s, d: ngram_jaccard_pairs(
-        _aug_docs(s, d), threshold=0.5
-    )
-
-    q["doc_token_count"] = lambda s, d: token_count(_read(s, d, "documents"))
-    q["doc_quality_features"] = lambda s, d: quality_features(_read(s, d, "documents"))
-    q["doc_language_id"] = lambda s, d: language_id(_read(s, d, "documents"))
-    q["doc_fingerprint"] = lambda s, d: fingerprint(_read(s, d, "documents"))
-
-    q["doc_simhash"] = lambda s, d: simhash_fingerprints(_read(s, d, "documents"))
-
-    return q
-
-
-# ---------------------------------------------------------------------------
-# embedding similarity queries
-# ---------------------------------------------------------------------------
-
-
-def _emb_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from kgpipe_spark.operators.dedup import embedding_near_duplicates
-    from kgpipe_spark.operators.similarity import cosine_topk_bruteforce, ivf_topk
-
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    def _topk(s, d):
-        emb = _read(s, d, "embeddings")
-        queries_df = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        return cosine_topk_bruteforce(emb, queries_df, k=10)
-
-    q["emb_cosine_topk"] = _topk
-
-    def _near(s, d):
-        emb = _read(s, d, "embeddings")
-        return embedding_near_duplicates(emb, threshold=0.3, bucket_col="label")
-
-    q["emb_bucketed_near_dup"] = _near
-
-    def _ivf(s, d):
-        emb = _read(s, d, "embeddings")
-        queries_df = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        return ivf_topk(emb, queries_df, k=10, n_centroids=8, nprobe=8)
-
-    q["emb_ivf_topk_fullprobe"] = _ivf
-
-    def _ivf_recall(s, d):
-        """Recall of IVF at nprobe=2 of 8 centroids vs brute-force top-10.
-
-        lloyd_steps=0 keeps the centroid set bit-exact cross-engine, so the
-        DuckDB oracle replicates the *entire* IVF (assignment, probing,
-        ranking) rather than just the exact baseline."""
-        emb = _read(s, d, "embeddings")
-        queries_df = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        ivf = ivf_topk(emb, queries_df, k=10, n_centroids=8, nprobe=2, lloyd_steps=0)
-        bf = cosine_topk_bruteforce(emb, queries_df, k=10)
-        overlap = ivf.join(bf.select("q_id", "vec_id"), ["q_id", "vec_id"], "left_semi")
-        return (
-            overlap.groupBy("q_id")
-            .agg(F.count(F.lit(1)).alias("n_overlap"))
-            .withColumn("recall", F.col("n_overlap") / F.lit(10.0))
-        )
-
-    q["emb_ivf_recall"] = _ivf_recall
-
-    def _hyperplane(s, d):
-        from kgpipe_spark.operators.similarity import random_hyperplane_buckets
-
-        return random_hyperplane_buckets(_read(s, d, "embeddings"), n_planes=8)
-
-    q["emb_hyperplane_buckets"] = _hyperplane
-
-    def _lsh_near_dup(s, d):
-        """The 100 TB near-dup path: hyperplane LSH buckets feeding the
-        bucketed pair search (no all-pairs)."""
-        from kgpipe_spark.operators.dedup import embedding_near_duplicates
-        from kgpipe_spark.operators.similarity import random_hyperplane_buckets
-
-        emb = _read(s, d, "embeddings")
-        buckets = random_hyperplane_buckets(emb, n_planes=8)
-        return embedding_near_duplicates(
-            emb.join(buckets, "vec_id"), threshold=0.2, bucket_col="bucket"
-        )
-
-    q["emb_lsh_near_dup"] = _lsh_near_dup
-
-    return q
-
-
 # Recorded-window priority (round 6 = the optimization round): the 24
 # queries whose most recent driver verdict is still round 2 rotate in first
 # (VERDICT r5 "next round" #1 — after this window no registration's latest
 # verdict is older than round 4), then every query whose internals this
 # round's optimizations touched (minhash gram-hash verification + in-bucket
 # pair explode, hash-dedupe rewrites in extract/canonicalize/type paths,
-# single-pass fact alignment, fuse source plan cut), then the heaviest
-# still-round-4 bench names.
+# single-pass fact alignment, fuse source plan cut).
 _RECORD_FIRST = [
     # ---- last driver verdict round 2 (oldest first claim on the window) ----
     "kg_allowed_predicates",
@@ -2296,7 +2060,6 @@ _RECORD_FIRST = [
     "kg_token_blocking_matches",
     "kg_type_namespace_filter",
     # ---- internals changed by round-6 optimizations ----
-    "doc_minhash_lsh_pairs",
     "kg_link_two_pass",
     "kg_fact_alignment",
     "kg_eval_report",
@@ -2313,12 +2076,6 @@ _RECORD_FIRST = [
     "kg_pipeline_rdf_b",
     "kg_incremental_3stage",
     "kg_incremental_msp_perm2",
-    # ---- heaviest still-round-4 names (bench set + dedup family) ----
-    "doc_ngram_jaccard_pairs",
-    "doc_dedup_exact",
-    "doc_simhash",
-    "emb_cosine_topk",
-    "emb_ivf_recall",
 ]
 
 
@@ -4185,18 +3942,16 @@ def oracle_sql() -> dict[str, str]:
     """
 
     sql.update(_soft_sql())
-    sql.update(_doc_sql())
-    sql.update(_emb_sql())
-    sql.update(_linkmedia_sql())
+    sql.update(_linking_sql())
     return sql
 
 
 # ---------------------------------------------------------------------------
-# linking / preference-fusion / schema-match / multimodal oracle SQL
+# linking / preference-fusion / schema-match oracle SQL
 # ---------------------------------------------------------------------------
 
 
-def _linkmedia_sql() -> dict:
+def _linking_sql() -> dict:
     sql: dict = {}
     norm = "trim(regexp_replace(lower(replace(replace({c}, '_', ' '), '-', ' ')), '\\s+', ' ', 'g'))"
 
@@ -4255,7 +4010,7 @@ def _linkmedia_sql() -> dict:
     # so the expected link set is exactly the equijoin on the raw name
     # two-pass dynamic-index replacement: pass-1 link-or-mint vs the
     # nation-label dictionary, pass-2 banded md5 Carter-Wegman MinHash over
-    # char-3-grams of the minted norms (same family as doc_minhash_lsh_pairs),
+    # char-3-grams of the minted norms (linking.minhash_token_signatures),
     # exact-Jaccard verify ≥ 0.5, recursive-CTE connected components, rewrite
     # to the min-URI component representative
     nqp = norm.format(c="m.query_text")
@@ -4380,82 +4135,11 @@ def _linkmedia_sql() -> dict:
         ) WHERE score >= 0.5
     """
 
-    # fake decode replica: payload = utf8(sha256 hex), feature = md5(payload)
-    # bytes as 4 little-endian uint32 → float32/2^32, tiled ×4 to dim 16;
-    # probes f0/f5/f15 hit tile positions u0/u1/u3
-    def _u32le(pos: int) -> str:
-        # byte j of the md5 digest is hex chars (2j+1, 2j+2); LE uint32 from
-        # bytes 4i..4i+3 reverses them
-        b = [f"substr(h, {2 * (pos * 4 + j) + 1}, 2)" for j in (3, 2, 1, 0)]
-        return f"CAST('0x' || {' || '.join(b)} AS UBIGINT)"
-
-    sql["doc_media_features"] = f"""
-        WITH m AS (SELECT id, md5(sha256('media-42-' || id)) AS h FROM range(300) t(id))
-        SELECT id AS media_id, CAST(64 AS BIGINT) AS n_bytes,
-               CAST(CAST({_u32le(0)} AS REAL) / 4294967296.0 AS DOUBLE) AS f0,
-               CAST(CAST({_u32le(1)} AS REAL) / 4294967296.0 AS DOUBLE) AS f5,
-               CAST(CAST({_u32le(3)} AS REAL) / 4294967296.0 AS DOUBLE) AS f15
-        FROM m
-    """
-
-    sql["doc_media_frame_plan"] = """
-        SELECT id AS media_id,
-               unnest(generate_series(0, CAST(1000 + id % 9000 AS INT), 1000)) AS frame_ts_ms
-        FROM range(300) t(id) WHERE id % 3 = 2
-    """
-
-    # real decoders over the constant-valued fixture: byte sizes and stats
-    # are closed-form — PPM = 11-byte header ("P6\\n<w> <h>\\n255\\n", w,h
-    # single-digit) + 3wh; BMP = 54 + h * 4-byte-padded rows; WAV = 44-byte
-    # canonical header + 2 bytes/sample. Constant pixels → mean = channel
-    # value, std = 0; constant samples → mean = rms = value, 0 crossings.
-    sql["doc_media_real_decode"] = """
-        WITH ids AS (
-          SELECT CAST(row_number() OVER (ORDER BY c_custkey) - 1 AS BIGINT) AS mid
-          FROM customer
-        ),
-        m AS (
-          SELECT mid, mid % 3 AS fmt,
-                 4 + mid % 5 AS w, 3 + mid % 4 AS h,
-                 mid % 256 AS r, (mid * 7) % 256 AS g, (mid * 13) % 256 AS b,
-                 100 + mid % 50 AS ns, mid % 1000 AS val
-          FROM ids
-        )
-        SELECT mid AS media_id,
-               CAST(CASE fmt WHEN 0 THEN 11 + 3 * w * h
-                             WHEN 1 THEN 54 + h * (((3 * w + 3) // 4) * 4)
-                             ELSE 44 + 2 * ns END AS BIGINT) AS n_bytes,
-               CAST(CASE WHEN fmt < 2 THEN w ELSE ns END AS DOUBLE) AS f0,
-               CAST(CASE WHEN fmt < 2 THEN h ELSE 8000 END AS DOUBLE) AS f1,
-               CAST(CASE WHEN fmt < 2 THEN r ELSE val END AS DOUBLE) AS f2,
-               CAST(CASE WHEN fmt < 2 THEN g ELSE 0 END AS DOUBLE) AS f3,
-               CAST(CASE WHEN fmt < 2 THEN b ELSE val END AS DOUBLE) AS f4,
-               CAST(0 AS DOUBLE) AS f5,
-               CAST(0 AS DOUBLE) AS f6,
-               CAST(0 AS DOUBLE) AS f7
-        FROM m
-    """
-
     # greedy set cover replayed in closed form: path-sets are
     # odd = {$.name, $.seg_<s>} and even = odd ∪ {$.extra, $.extra.a};
     # greedy picks one even group (max gain 4; tie → min representative
     # path string), then the remaining segments' odd groups (gain 1,
     # smaller total set beats the same segment's even group)
-    sql["doc_media_resize"] = """
-        WITH ids AS (
-          SELECT CAST(row_number() OVER (ORDER BY c_custkey) - 1 AS BIGINT) AS mid
-          FROM customer
-        )
-        SELECT mid AS media_id,
-               CAST(11 + 3 * 8 * 6 AS BIGINT) AS n_bytes,
-               CAST(8 AS DOUBLE) AS f0,
-               CAST(6 AS DOUBLE) AS f1,
-               CAST(mid % 256 AS DOUBLE) AS f2,
-               CAST((mid * 7) % 256 AS DOUBLE) AS f3,
-               CAST((mid * 13) % 256 AS DOUBLE) AS f4
-        FROM ids WHERE mid % 3 < 2
-    """
-
     sql["kg_json_sampler"] = """
         WITH docs AS (
           SELECT c_mktsegment AS seg, 'cust/' || c_custkey || '.json' AS path,
@@ -4844,331 +4528,6 @@ def _soft_sql() -> dict[str, str]:
                CAST(coalesce(strict, 0) AS BIGINT) AS strict_overlapping,
                CAST(coalesce(matched_occ, 0) - coalesce(strict, 0) AS BIGINT) AS possible_duplicates
         FROM agg
-    """
-
-    return sql
-
-
-def _doc_sql() -> dict[str, str]:
-    sql: dict[str, str] = {}
-
-    sql["doc_dedup_exact"] = f"""
-        WITH {SQL_AUG_DOCS},
-        h AS (
-          SELECT doc_id,
-                 md5(trim(lower(regexp_replace(text, '\\s+', ' ', 'g')))) AS content_hash
-          FROM docs
-        )
-        SELECT content_hash, count(*) AS n_copies, min(doc_id) AS keep_id,
-               string_agg(doc_id, ',' ORDER BY doc_id) AS doc_ids
-        FROM h GROUP BY content_hash HAVING count(*) > 1
-    """
-
-    sql["doc_minhash_lsh_pairs"] = f"""
-        WITH {SQL_AUG_DOCS},
-        {SQL_DOC_WORDS},
-        exploded AS (SELECT doc_id, md5(unnest(shingles)) AS m FROM shf),
-        ab AS (
-          SELECT doc_id,
-                 CAST(CAST('0x' || substr(m, 1, 8) AS UBIGINT) AS BIGINT) AS a,
-                 CAST(CAST('0x' || substr(m, 9, 8) AS UBIGINT) AS BIGINT) AS b
-          FROM exploded
-        ),
-        mh AS (
-          SELECT doc_id, i, min((a + i * b) % 4294967296) AS h
-          FROM ab CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) g
-          GROUP BY doc_id, i
-        ),
-        sigs AS (SELECT doc_id, list(CAST(h AS VARCHAR) ORDER BY i) AS sig FROM mh GROUP BY doc_id),
-        bands AS (
-          SELECT doc_id, b, md5(array_to_string(sig[b*2+1 : b*2+2], '|')) AS bucket
-          FROM sigs CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b) gb
-        ),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM bands a JOIN bands b USING (b, bucket)
-          WHERE a.doc_id < b.doc_id
-        ),
-        j AS (
-          SELECT c.id_a, c.id_b,
-                 CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE)
-                 / (len(sa.shingles) + len(sb.shingles) - len(list_intersect(sa.shingles, sb.shingles))) AS jac
-          FROM cand c
-          JOIN shf sa ON sa.doc_id = c.id_a
-          JOIN shf sb ON sb.doc_id = c.id_b
-        )
-        SELECT id_a, id_b, round(jac, 6) AS jaccard FROM j WHERE jac >= 0.5
-    """
-
-    sql["doc_ngram_jaccard_pairs"] = f"""
-        WITH {SQL_AUG_DOCS},
-        {SQL_DOC_WORDS},
-        pairs_sh AS (SELECT DISTINCT doc_id, unnest(shingles) AS shingle FROM shf),
-        sizes AS (SELECT doc_id, count(*) AS n_shingles FROM pairs_sh GROUP BY doc_id),
-        block_ok AS (SELECT shingle FROM pairs_sh GROUP BY shingle HAVING count(*) <= 2000),
-        sh_f AS (SELECT p.* FROM pairs_sh p SEMI JOIN block_ok b USING (shingle)),
-        pairs AS MATERIALIZED (
-          SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS common
-          FROM sh_f x JOIN sh_f y USING (shingle)
-          WHERE x.doc_id < y.doc_id
-          GROUP BY x.doc_id, y.doc_id
-        ),
-        j AS (
-          SELECT p.id_a, p.id_b,
-                 CAST(p.common AS DOUBLE) / (sa.n_shingles + sb.n_shingles - p.common) AS jac
-          FROM pairs p
-          JOIN sizes sa ON sa.doc_id = p.id_a
-          JOIN sizes sb ON sb.doc_id = p.id_b
-        )
-        SELECT id_a, id_b, round(jac, 6) AS jaccard FROM j WHERE jac >= 0.5
-    """
-
-    sql["doc_token_count"] = """
-        WITH words AS (
-          SELECT doc_id, text,
-                 list_filter(string_split(trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
-                             w -> w <> '') AS w
-          FROM documents
-        )
-        SELECT doc_id,
-               CAST(len(w) AS BIGINT) AS n_ws_tokens,
-               CAST(coalesce(list_sum(list_transform(w, x -> CAST(ceil(length(x) / 4.0) AS BIGINT))), 0) AS BIGINT) AS n_subword_tokens,
-               CAST(length(text) AS BIGINT) AS n_chars
-        FROM words
-    """
-
-    _stops_en = "'the','and','of','to','in','is','that','it','was','for'"
-    sql["doc_quality_features"] = f"""
-        WITH base AS (
-          SELECT doc_id, text,
-                 list_filter(string_split(trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
-                             w -> w <> '') AS w,
-                 length(text) AS n_chars,
-                 length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct
-          FROM documents
-        ),
-        feats AS (
-          SELECT doc_id,
-                 len(w) AS n_words,
-                 CASE WHEN n_chars > 0 THEN CAST(n_punct AS DOUBLE) / n_chars ELSE 0.0 END AS punct_ratio,
-                 CASE WHEN len(w) > 0
-                      THEN CAST(len(list_filter(w, x -> x IN ({_stops_en}))) AS DOUBLE) / len(w)
-                      ELSE 0.0 END AS stopword_ratio,
-                 CASE WHEN len(w) > 0
-                      THEN coalesce(list_sum(list_transform(w, x -> CAST(length(x) AS DOUBLE))), 0.0) / len(w)
-                      ELSE 0.0 END AS mean_wl
-          FROM base
-        )
-        SELECT doc_id,
-               CAST(n_words AS BIGINT) AS n_words,
-               round(punct_ratio, 6) AS punct_ratio,
-               round(stopword_ratio, 6) AS stopword_ratio,
-               round(mean_wl, 6) AS mean_word_len,
-               round(least(n_words / 20.0, 1.0)
-                     * (1.0 - least(punct_ratio * 2, 1.0))
-                     * (0.5 + least(stopword_ratio * 2, 0.5)), 6) AS quality
-        FROM feats
-    """
-
-    _stop_lists = {
-        "de": "'der','die','das','und','ist','nicht','ein','mit','von','zu'",
-        "en": "'the','and','of','to','in','is','that','it','was','for'",
-        "es": "'el','la','los','y','es','que','en','por','una','del'",
-        "fr": "'le','la','les','et','est','dans','que','pour','une','des'",
-    }
-    hit_selects = " UNION ALL ".join(
-        f"SELECT doc_id, '{lang}' AS lang, len(list_filter(w, x -> x IN ({stops}))) AS hits FROM words"
-        for lang, stops in _stop_lists.items()
-    )
-    sql["doc_language_id"] = f"""
-        WITH words AS (
-          SELECT doc_id,
-                 list_filter(string_split(trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
-                             w -> w <> '') AS w
-          FROM documents
-        ),
-        hits AS ({hit_selects}),
-        best AS (
-          SELECT doc_id, lang, hits,
-                 row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, lang DESC) AS rn
-          FROM hits
-        )
-        SELECT doc_id, CASE WHEN hits > 0 THEN lang ELSE 'und' END AS pred_lang
-        FROM best WHERE rn = 1
-    """
-
-    sql["doc_fingerprint"] = """
-        WITH words AS (
-          SELECT doc_id,
-                 trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS norm,
-                 list_filter(string_split(trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
-                             w -> w <> '') AS w
-          FROM documents
-        )
-        SELECT doc_id, md5(norm) AS content_fp,
-               md5(array_to_string(list_sort(list_distinct(w)), chr(1))) AS shingle_fp
-        FROM words
-    """
-
-    sql["doc_simhash"] = """
-        WITH words AS (
-          SELECT doc_id,
-                 list_filter(string_split(trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))), ' '),
-                             w -> w <> '') AS w
-          FROM documents
-        ),
-        toks AS MATERIALIZED (
-          SELECT DISTINCT doc_id, tok FROM (SELECT doc_id, unnest(w) AS tok FROM words)
-        ),
-        th AS MATERIALIZED (
-          SELECT doc_id,
-                 CAST(CAST('0x' || substr(md5(tok), 1, 8) AS UBIGINT) AS BIGINT) AS th
-          FROM toks
-        ),
-        bits AS (
-          SELECT doc_id, b,
-                 sum(CASE WHEN (th >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS s
-          FROM th CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS b) g
-          GROUP BY doc_id, b
-        )
-        SELECT doc_id,
-               CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << CAST(b AS INTEGER)) ELSE 0 END) AS BIGINT) AS simhash
-        FROM bits GROUP BY doc_id
-    """
-
-    return sql
-
-
-def _emb_sql() -> dict[str, str]:
-    sql: dict[str, str] = {}
-
-    _cos = """
-      list_dot_product(e.v, q.v) / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.v, q.v)))
-    """
-
-    sql["emb_cosine_topk"] = f"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        q AS (SELECT vec_id AS q_id, v FROM e WHERE vec_id < 5),
-        scored AS MATERIALIZED (
-          SELECT q.q_id, e.vec_id, {_cos} AS cosine
-          FROM e CROSS JOIN q
-        ),
-        ranked AS (
-          SELECT q_id, vec_id, cosine,
-                 row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id ASC) AS rank
-          FROM scored
-        )
-        SELECT q_id, vec_id, round(cosine, 6) AS cosine, rank FROM ranked WHERE rank <= 10
-    """
-
-    # full-probe IVF == exact top-k (nprobe = n_centroids ⇒ every cell searched)
-    sql["emb_ivf_topk_fullprobe"] = sql["emb_cosine_topk"]
-
-    # hyperplane LSH buckets: the deterministic ±1 planes are computed in
-    # PYTHON here and inlined as SQL literals — same constants both engines.
-    # The dot product mirrors Spark's sequential fold (same op order).
-    from kgpipe_spark.operators.similarity import _deterministic_hyperplanes
-
-    _planes = _deterministic_hyperplanes(64, 8)
-    _plane_sql = ", ".join(
-        "[" + ", ".join(f"{x:.1f}" for x in row) + "]" for row in _planes
-    )
-    _bits_sql = " + ".join(
-        f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), planes[{p + 1}]) >= 0 "
-        f"THEN {1 << p} ELSE 0 END)"
-        for p in range(8)
-    )
-    sql["emb_hyperplane_buckets"] = f"""
-        WITH p AS (SELECT [{_plane_sql}] AS planes)
-        SELECT vec_id, CAST({_bits_sql} AS INTEGER) AS bucket
-        FROM embeddings CROSS JOIN p
-    """
-
-    sql["emb_lsh_near_dup"] = f"""
-        WITH p AS (SELECT [{_plane_sql}] AS planes),
-        e AS MATERIALIZED (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                 CAST({_bits_sql} AS INTEGER) AS bucket
-          FROM embeddings CROSS JOIN p
-        )
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               round(list_dot_product(a.v, b.v)
-                     / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
-        FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        WHERE list_dot_product(a.v, b.v)
-              / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.2
-    """
-
-    # full IVF replica: same sample centroids (lloyd_steps=0), same
-    # sequential squared-diff fold for assignment, same probe/rank order
-    sql["emb_ivf_recall"] = f"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-        cents AS MATERIALIZED (
-          SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-          FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)
-        ),
-        assign AS MATERIALIZED (
-          SELECT vec_id, v, cid FROM (
-            SELECT e.vec_id, e.v, c.cid,
-                   row_number() OVER (
-                     PARTITION BY e.vec_id
-                     ORDER BY list_sum(list_transform(generate_series(1, len(e.v)),
-                                                      i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i]))) ASC,
-                              c.cid ASC
-                   ) AS rn
-            FROM e CROSS JOIN cents c
-          ) WHERE rn = 1
-        ),
-        probe AS MATERIALIZED (
-          SELECT q_id, qv, cid FROM (
-            SELECT q.q_id, q.qv, c.cid,
-                   row_number() OVER (
-                     PARTITION BY q.q_id
-                     ORDER BY list_sum(list_transform(generate_series(1, len(q.qv)),
-                                                      i -> (q.qv[i] - c.c[i]) * (q.qv[i] - c.c[i]))) ASC,
-                              c.cid ASC
-                   ) AS rn
-            FROM q CROSS JOIN cents c
-          ) WHERE rn <= 2
-        ),
-        ivf AS MATERIALIZED (
-          SELECT q_id, vec_id FROM (
-            SELECT p.q_id, a.vec_id,
-                   row_number() OVER (
-                     PARTITION BY p.q_id
-                     ORDER BY list_dot_product(a.v, p.qv)
-                              / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(p.qv, p.qv))) DESC,
-                              a.vec_id ASC
-                   ) AS rank
-            FROM assign a JOIN probe p USING (cid)
-          ) WHERE rank <= 10
-        ),
-        bf AS MATERIALIZED (
-          SELECT q_id, vec_id FROM (
-            SELECT q.q_id, e.vec_id,
-                   row_number() OVER (
-                     PARTITION BY q.q_id
-                     ORDER BY list_dot_product(e.v, q.qv)
-                              / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))) DESC,
-                              e.vec_id ASC
-                   ) AS rank
-            FROM e CROSS JOIN q
-          ) WHERE rank <= 10
-        )
-        SELECT i.q_id, CAST(count(*) AS BIGINT) AS n_overlap, count(*) / 10.0 AS recall
-        FROM ivf i SEMI JOIN bf b ON i.q_id = b.q_id AND i.vec_id = b.vec_id
-        GROUP BY i.q_id
-    """
-
-    sql["emb_bucketed_near_dup"] = """
-        WITH e AS (SELECT vec_id, label AS bucket, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               round(list_dot_product(a.v, b.v)
-                     / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
-        FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        WHERE list_dot_product(a.v, b.v)
-              / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.3
     """
 
     return sql

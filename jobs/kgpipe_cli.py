@@ -9,10 +9,10 @@ callable(spark, sf_dir) → DataFrame) plus `oracle_sql()` (name → ANSI SQL
 DuckDB cross-check). `discover` walks the `kgpipe_spark` package instead of
 entry points. Plain argparse/stdout — no click/rich dependency.
 
-    python jobs/kgpipe_cli.py list [--category kg|doc|emb|rel] [--json]
+    python jobs/kgpipe_cli.py list [--json]
     python jobs/kgpipe_cli.py show NAME [--sql]
     python jobs/kgpipe_cli.py discover [--json]
-    python jobs/kgpipe_cli.py run NAME [--sf-dir DIR] [--master local[8]]
+    python jobs/kgpipe_cli.py run NAME [--sf-dir DIR] [--master MASTER]
 
 `list`/`show`/`discover` never start a JVM (registry construction is pure
 Python); only `run` creates a SparkSession.
@@ -38,15 +38,6 @@ def _registry():
     return entry.queries(), entry.oracle_sql()
 
 
-def _category(name: str) -> str:
-    return {
-        "kg": "kg-construction",
-        "doc": "llm-data/documents",
-        "emb": "llm-data/embeddings",
-        "rel": "relational/streaming",
-    }.get(name.split("_", 1)[0], "other")
-
-
 def _describe(fn) -> str:
     doc = inspect.getdoc(fn)
     if doc:
@@ -58,25 +49,21 @@ def _describe(fn) -> str:
 
 def cmd_list(args: argparse.Namespace) -> int:
     queries, oracles = _registry()
-    rows = []
-    for name, fn in queries.items():
-        if args.category and not name.startswith(args.category + "_"):
-            continue
-        rows.append(
-            {
-                "name": name,
-                "category": _category(name),
-                "oracle": "sql" if name in oracles else "rows-only",
-                "description": _describe(fn),
-            }
-        )
+    rows = [
+        {
+            "name": name,
+            "oracle": "sql" if name in oracles else "rows-only",
+            "description": _describe(fn),
+        }
+        for name, fn in queries.items()
+    ]
     if args.json:
         print(json.dumps(rows, indent=2))
         return 0
     w = max(len(r["name"]) for r in rows) if rows else 4
-    print(f"{'NAME':<{w}}  {'CATEGORY':<22}  {'ORACLE':<9}  DESCRIPTION")
+    print(f"{'NAME':<{w}}  {'ORACLE':<9}  DESCRIPTION")
     for r in rows:
-        print(f"{r['name']:<{w}}  {r['category']:<22}  {r['oracle']:<9}  {r['description'][:70]}")
+        print(f"{r['name']:<{w}}  {r['oracle']:<9}  {r['description'][:70]}")
     print(f"\n{len(rows)} registered queries")
     return 0
 
@@ -89,7 +76,6 @@ def cmd_show(args: argparse.Namespace) -> int:
         print(f"unknown query {args.name!r}" + (f"; close: {', '.join(near[:5])}" if near else ""))
         return 1
     print(f"name:      {args.name}")
-    print(f"category:  {_category(args.name)}")
     print(f"oracle:    {'ANSI-SQL cross-check (DuckDB)' if args.name in oracles else 'rows-only (non-SQL-expressible)'}")
     doc = inspect.getdoc(fn)
     if doc:
@@ -181,7 +167,6 @@ def main() -> int:
     sub = ap.add_subparsers(dest="cmd", required=True)
 
     p = sub.add_parser("list", help="list registered queries/operators")
-    p.add_argument("--category", choices=["kg", "doc", "emb", "rel"], default=None)
     p.add_argument("--json", action="store_true")
     p.set_defaults(fn=cmd_list)
 
@@ -197,8 +182,8 @@ def main() -> int:
     p = sub.add_parser("run", help="execute one registered query")
     p.add_argument("name")
     p.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"))
-    p.add_argument("--master", default="local[8]")
-    p.add_argument("--shuffle-partitions", type=int, default=8)
+    p.add_argument("--master", default=None, help="default: local[<host cores>]")
+    p.add_argument("--shuffle-partitions", type=int, default=None)
     p.add_argument("--limit", type=int, default=20)
     p.set_defaults(fn=cmd_run)
 

@@ -13,8 +13,7 @@ survey in SURVEY.md) as an idiomatic Spark DataFrame engine:
       → materialize (triples table / N-Triples lines)
 
 plus the reference's evaluation math (exact fact alignment P/R/F1,
-statistics, ER eval, semantic validators) and large-scale training-data
-operators (dedup, similarity search, text analysis, multimodal plumbing).
+statistics, ER eval, semantic validators).
 
 Everything is pyspark.sql DataFrame ops + pandas/Arrow UDFs — no per-row
 Python UDFs anywhere (BASELINE.json input_hint mandate).

@@ -40,10 +40,9 @@ The cosine value is numerically the same as the float32 dense cosine up to
 1e-6, far from the 0.95 acceptance threshold on any realistic margin.
 
 Scale design: candidate pairs come from a *shared-gram equi-join* with a
-frequency cap (mirroring ``dedup.py``'s blocked joins) rather than the
-reference's dense N×M matrix — any pair with cosine ≥ 0.95 shares most of
-its grams, so blocking on one shared (non-hot) gram is a superset of the
-accepted set while staying linear in corpus size.  Determinism deviations
+frequency cap rather than the reference's dense N×M matrix — any pair with
+cosine ≥ 0.95 shares most of its grams, so blocking on one shared (non-hot)
+gram is a superset of the accepted set while staying linear in corpus size.  Determinism deviations
 from the reference (which iterates unordered rdflib sets): one label per
 URI = min(cleaned label); argmax ties broken by min expected URI.
 """

@@ -14,7 +14,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = ["region", "nation", "customer", "orders", "documents", "embeddings"]
+TABLES = ["region", "nation", "customer", "orders"]
 
 
 def norm_cell(v):

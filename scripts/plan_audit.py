@@ -12,10 +12,10 @@ Checked invariants:
   3. No row-at-a-time Python in any hot path: BatchEvalPython must not
      appear anywhere; Python appears only as ArrowEvalPython / mapInPandas
      (vectorized) in the extraction/embedding operators.
-  4. The MinHash signature/banding path is 100% JVM (zero Python eval
-     nodes) in both of its consumers, document dedup and the two-pass
-     linker's minted-surface edges, and whole-stage codegen covers the
-     signature aggregation.
+  4. The MinHash signature/banding path of the two-pass linker's
+     minted-surface edges (linking.minted_near_edges) is 100% JVM (zero
+     Python eval nodes), and whole-stage codegen covers the signature
+     aggregation.
   5. canonicalize_triples broadcasts the rewrite map (BroadcastHashJoin,
      not a shuffle join) when the map is alias-sized.
 
@@ -56,7 +56,6 @@ def run_audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
 
 
 def _run_audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
-    from kgpipe_spark.operators.dedup import minhash_lsh_pairs
     from kgpipe_spark.operators.fusion import canonicalize_triples, fuse_first_value
     from kgpipe_spark.operators.linking import minted_near_edges
     from kgpipe_spark.schemas import RDFS_LABEL
@@ -133,9 +132,9 @@ def _run_audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
         "kg_extract_triples",
         "kg_fuse_first_value",
         "kg_canonicalize_triples",
-        "doc_minhash_lsh_pairs",
-        "doc_quality_features",
-        "emb_cosine_topk",
+        "kg_link_two_pass",
+        "kg_link_embed_top1",
+        "kg_te_construct_full",
     ]
     qs = E.queries()
     bad = []
@@ -150,23 +149,17 @@ def _run_audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
     )
 
     # 4. minhash path pure JVM + codegen -------------------------------------
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    mp = plan_of(minhash_lsh_pairs(docs), "extended")
-    check(
-        "minhash_pure_jvm",
-        "EvalPython" not in mp and "PythonUDF" not in mp,
-        "signature/banding/verify must stay JVM-side",
-    )
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     minted = docs.select(
         F.col("doc_id").cast("string").alias("uri"), F.substring("text", 1, 40).alias("norm")
     )
-    ep = plan_of(minted_near_edges(minted), "extended")
+    mp = plan_of(minted_near_edges(minted), "extended")
     check(
-        "minted_edges_pure_jvm",
-        "EvalPython" not in ep and "PythonUDF" not in ep,
+        "minhash_pure_jvm",
+        "EvalPython" not in mp and "PythonUDF" not in mp,
         "the linker's pass-2 signature/banding/verify must stay JVM-side",
     )
-    cg = plan_of(minhash_lsh_pairs(docs), "codegen")
+    cg = plan_of(minted_near_edges(minted), "codegen")
     n_subtrees = int(cg.split("WholeStageCodegen subtrees")[0].rsplit("Found", 1)[-1])
     check(
         "minhash_codegen",

@@ -22,12 +22,8 @@ def test_cli_list_json_covers_registry():
     assert out.returncode == 0, out.stderr[-500:]
     rows = json.loads(out.stdout)
     names = {r["name"] for r in rows}
-    assert {"kg_flagship_pipeline", "doc_minhash_lsh_pairs", "emb_cosine_topk"} <= names
+    assert {"kg_flagship_pipeline", "kg_link_two_pass", "kg_streaming_ingest"} <= names
     assert all(r["oracle"] in ("sql", "rows-only") for r in rows)
-    # category filter narrows
-    out_kg = _run("list", "--json", "--category", "doc")
-    kg_rows = json.loads(out_kg.stdout)
-    assert kg_rows and all(r["name"].startswith("doc_") for r in kg_rows)
 
 
 def test_cli_show_and_unknown():
@@ -43,9 +39,12 @@ def test_cli_discover_walks_package():
     assert out.returncode == 0
     found = json.loads(out.stdout)
     mods = {r["module"] for r in found}
-    assert "kgpipe_spark.operators.dedup" in mods
+    assert "kgpipe_spark.operators.linking" in mods
     assert "kgpipe_spark.plans.pipeline" in mods
+    gone = ("dedup", "similarity", "text", "multimodal")
+    assert not mods & {f"kgpipe_spark.operators.{m}" for m in gone}
     fns = {(r["module"], r["function"]) for r in found}
-    assert ("kgpipe_spark.operators.similarity", "cosine_topk") in fns or any(
-        m == "kgpipe_spark.operators.similarity" for m, _ in fns
-    )
+    assert {
+        ("kgpipe_spark.operators.linking", "minhash_token_signatures"),
+        ("kgpipe_spark.operators.linking", "minhash_verified_pairs"),
+    } <= fns

@@ -1,15 +1,18 @@
-"""The shared MinHash-LSH kernel (dedup.minhash_token_signatures →
-dedup.minhash_verified_pairs) against a pure-Python replay of its hash
-family, through both consumers: word-shingle document dedup
-(``minhash_lsh_pairs``) and the two-pass linker's char-3-gram edges
+"""The linker's MinHash-LSH kernel (linking.minhash_token_signatures →
+linking.minhash_verified_pairs) against a pure-Python replay of its hash
+family, over word-3-shingle sets fed to the kernel directly and through its
+one consumer, the two-pass linker's char-3-gram edges
 (``minted_near_edges``)."""
 
 import hashlib
 import itertools
 from collections import defaultdict
 
-from kgpipe_spark.operators.dedup import minhash_lsh_pairs
-from kgpipe_spark.operators.linking import minted_near_edges
+from kgpipe_spark.operators.linking import (
+    minhash_token_signatures,
+    minhash_verified_pairs,
+    minted_near_edges,
+)
 
 
 def _md5(s):
@@ -72,9 +75,14 @@ def test_minhash_lsh_pairs_match_replay(spark):
         sets[i] = {" ".join(w[k : k + 3]) for k in range(len(w) - 2)}
     verified = _replay_checked(sets)
 
-    df = spark.createDataFrame(list(docs.items()), "doc_id bigint, text string")
-    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in minhash_lsh_pairs(df).collect()}
-    assert got == {p: round(j, 6) for p, j in verified.items()}
+    tokens = spark.createDataFrame(
+        [(i, t) for i, toks in sets.items() for t in sorted(toks)], "id bigint, token string"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in minhash_verified_pairs(minhash_token_signatures(tokens)).collect()
+    }
+    assert {p: round(j, 6) for p, j in got.items()} == {p: round(j, 6) for p, j in verified.items()}
 
 
 def test_minted_near_edges_match_replay(spark):
